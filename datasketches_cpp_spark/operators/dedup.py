@@ -264,6 +264,7 @@ def _make_pair_decider(sig_df: DataFrame, cfg: SigConfig, use_simhash: bool):
             keep[todo] |= kj >= thr
         return keep
 
+    decide.broadcast = bc  # lets a caller that drops the decider free it
     return decide
 
 
@@ -313,8 +314,7 @@ def candidate_pairs_adaptive(
 
     Output pair set is identical either way (pruning only removes pairs
     verification would reject)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    from ..session import run_driver_actions
     from .lsh import explode_bands, pairs_from_groups
 
     grouped = (
@@ -341,16 +341,18 @@ def candidate_pairs_adaptive(
     # If the estimate lands under the threshold the decider goes unused —
     # its cost is bounded by PREFILTER_MAX_SIG_ROWS and was previously paid
     # serially anyway whenever pruning ran.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        est_f = pool.submit(_estimate)
-        decide_f = pool.submit(_make_pair_decider, sig_df, cfg, use_simhash)
-        est_pairs = est_f.result()
-        decide = decide_f.result()
-    if est_pairs >= PYGEN_MIN_PAIRS:
-        if decide is not None:
+    est_pairs, decide = run_driver_actions(
+        sig_df.sparkSession,
+        _estimate,
+        lambda: _make_pair_decider(sig_df, cfg, use_simhash),
+    )
+    if decide is not None:
+        if est_pairs >= PYGEN_MIN_PAIRS:
             return python_pair_pruned(
                 grouped, sig_df, decide, max_pairs_group=max_pairs_group
             )
+        # unused: free the sig-table broadcast (tens of MB) now
+        decide.broadcast.destroy(blocking=False)
     return pairs_from_groups(grouped, max_pairs_group, "chain_hub")
 
 

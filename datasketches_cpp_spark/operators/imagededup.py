@@ -449,20 +449,22 @@ def dedup_images(
         )
 
     if profile is None and len(lane_builders) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+        from ..session import run_driver_actions
 
         sc = images.sparkSession.sparkContext
 
-        def _run(item):
-            name, key, build = item
-            sc.setJobDescription(f"dedup_images lane: {name}")
-            try:
+        def _lane(name, key, build):
+            def run():
+                # the thread's own copy of the caller's local properties:
+                # the job group stays, the description names the lane
+                sc.setJobDescription(f"dedup_images lane: {name}")
                 return name, key, build().localCheckpoint(eager=True)
-            finally:
-                sc.setJobDescription(None)
 
-        with ThreadPoolExecutor(max_workers=len(lane_builders)) as pool:
-            built = list(pool.map(_run, lane_builders))
+            return run
+
+        built = run_driver_actions(
+            images.sparkSession, *(_lane(*item) for item in lane_builders)
+        )
     else:
         built = [
             (name, key, _bar(key, build()))

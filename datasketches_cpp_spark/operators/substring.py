@@ -168,13 +168,10 @@ def substring_pairs(
     # the corpus-size gate and the posting-table materialization are
     # disjoint subtrees — overlap the two driver actions (guide §2.6;
     # each is a serial round trip that otherwise adds to every call)
-    from concurrent.futures import ThreadPoolExecutor
+    from ..session import run_driver_actions
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        n_docs_f = _pool.submit(df.count)
-        n_postings_f = _pool.submit(postings.count)
-        small_corpus = n_docs_f.result() <= broadcast_max_probes
-        n_postings = n_postings_f.result()
+    n_docs, n_postings = run_driver_actions(df.sparkSession, df.count, postings.count)
+    small_corpus = n_docs <= broadcast_max_probes
     if small_corpus:
         cand = _dense_domain_candidates(postings, id_type, n_postings)
         if cand is not None:
