@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
+from ._twostage import merge_groups
 
 
 def suggest_num_bits(n: int, fpp: float) -> int:
@@ -119,7 +120,7 @@ def bloom_filter_agg(
             }
         )
 
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, [], final, schema)
 
 
 def might_contain(
@@ -197,9 +198,7 @@ def _combine_filters(filters_df: DataFrame, op: str) -> DataFrame:
             }
         )
 
-    return filters_df.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: merge(pdf), _FILTER_SCHEMA
-    )
+    return merge_groups(filters_df, [], merge, _FILTER_SCHEMA)
 
 
 def bloom_union(filters_df: DataFrame) -> DataFrame:
@@ -234,9 +233,7 @@ def bloom_invert(filter_df: DataFrame) -> DataFrame:
         out["n_items"] = np.int64(-1)
         return out
 
-    return filter_df.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: flip(pdf), _FILTER_SCHEMA
-    )
+    return merge_groups(filter_df, [], flip, _FILTER_SCHEMA)
 
 
 def bloom_prefilter_join(

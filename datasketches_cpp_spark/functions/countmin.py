@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
+from ._twostage import merge_groups
 
 
 def suggest_num_buckets(relative_error: float) -> int:
@@ -154,9 +155,7 @@ def count_min_agg(
             + ["cm_matrix", "cm_total", "num_hashes", "num_buckets", "seed"],
         )
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def estimate_frequencies(

@@ -28,9 +28,9 @@ as theta's min-merge, so Spark can combine partials in any order.
 
 Two-stage plan (same shape as functions/theta.py): mapInPandas partial
 per input partition (vectorized np.bitwise_or scatter; state is O(K) per
-group), then groupBy().applyInPandas final OR-merge. Estimates/bounds are
-computed from the merged matrix with the reference's ICON kappa
-confidence law (cpc_confidence.hpp empirical side constants at
+group), then the shared final stage (_twostage.merge_groups) OR-merges.
+Estimates/bounds are computed from the merged matrix with the reference's
+ICON kappa confidence law (cpc_confidence.hpp empirical side constants at
 lg_k <= 14, ln 2 above); RSE envelope asserted empirically in
 tests/test_cpc.py.
 """
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 
 from ..hashing import DEFAULT_SEED
 from .tuplesketch import _hash_items
+from ._twostage import merge_groups
 
 
 def _coupons(hashes: np.ndarray, lg_k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -387,9 +388,7 @@ def _merge_sketches(partials: DataFrame, group_cols: list[str], schema: str) -> 
         row["coupons"] = [mat.view(np.int64)]
         return pd.DataFrame(row, columns=group_cols + ["lg_k", "coupons"])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.repartition(1).groupBy().applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def cpc_union_agg(sketch_df: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -495,6 +494,4 @@ def cpc_stream_agg(
         )
 
     sel = df.select(group_cols + [item_col])
-    if group_cols:
-        return sel.groupBy(*group_cols).applyInPandas(final, out_schema)
-    return sel.groupBy().applyInPandas(final, out_schema)
+    return merge_groups(sel, group_cols, final, out_schema)

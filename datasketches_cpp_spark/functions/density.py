@@ -31,7 +31,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -40,6 +39,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ._twostage import merge_groups
 
 DEFAULT_K = 256
 
@@ -226,9 +227,7 @@ def density_sketch_agg(
         r.update({kk: [vv] for kk, vv in ds.to_row().items()})
         return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_density_estimates(

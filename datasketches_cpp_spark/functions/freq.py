@@ -19,8 +19,8 @@ the oracle-checkable corner used by the driver contract (the analog of the
 reference's theta exact-mode tests).
 
 Spark mapping: per-partition MG maps via ``mapInPandas`` (map-side combine:
-the shuffle carries ≤ groups × partitions × m rows), final merge via
-``applyInPandas``. The vectorized per-batch fold is `value_counts` + one
+the shuffle carries ≤ groups × partitions × m rows), final merge in the
+shared final stage (``_twostage.merge_groups``). The vectorized per-batch fold is `value_counts` + one
 sorted cut — no per-item Python loop.
 """
 
@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ._twostage import merge_groups
 
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
@@ -190,9 +192,7 @@ def frequent_items_agg(
             + ["item", "estimate", "lower_bound", "upper_bound", "offset", "total_weight"],
         )
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, out_schema)
+    return merge_groups(partials, group_cols, final, out_schema)
 
 
 def get_frequent_items(

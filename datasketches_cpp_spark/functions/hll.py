@@ -19,10 +19,11 @@ bookkeeping:
    re-derived from the published HLL algorithm, not copied) as an explicit
    two-stage numpy aggregate like theta: per-partition `mapInPandas`
    builds K uint8 registers per group (`np.maximum.at`), the shuffle
-   carries one K-byte binary per (partition, group), and `applyInPandas`
-   max-merges registers — the sketch's true associative merge law, which
-   also makes cross-table HLL UNION (`hll_merge_sketches`) a plain
-   elementwise max, something the builtin wrapper cannot express.
+   carries one K-byte binary per (partition, group), and the shared final
+   stage (`_twostage.merge_groups`) max-merges registers — the sketch's
+   true associative merge law, which also makes cross-table HLL UNION
+   (`hll_merge_sketches`) a plain elementwise max, something the builtin
+   wrapper cannot express.
 
 Registers use the murmur3-based 63-bit hash discipline shared by every
 sketch in this engine (hashing.py): slot = low lg_k bits, rho = leading
@@ -46,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
+from ._twostage import merge_groups
 
 HLL_NON_HIP_RSE_FACTOR = 1.03896  # sqrt(3·ln2 − 1), HllUtil.hpp:86
 HLL_HIP_RSE_FACTOR = 0.8325546  # sqrt(ln 2), HllUtil.hpp:85
@@ -517,9 +519,7 @@ def hll_stream_agg(
         )
 
     sel = df.select(group_cols + [item_col])
-    if group_cols:
-        return sel.groupBy(*group_cols).applyInPandas(final, out_schema)
-    return sel.groupBy().applyInPandas(final, out_schema)
+    return merge_groups(sel, group_cols, final, out_schema)
 
 
 def _hll_schema(group_fields) -> StructType:
@@ -540,9 +540,10 @@ def hll_sketch_agg(
     Partial stage (`mapInPandas`, one pass per input partition): vectorized
     slot/rho extraction + `np.maximum.at` into K uint8 registers per group;
     emits ONE K-byte row per (partition, group) — the shuffle carries
-    sketches, never raw rows. Final stage (`applyInPandas` after the
-    groupBy shuffle): elementwise register max (the HLL merge law,
-    reference HllArray), then composite estimate + est/(1±n·rse) bounds.
+    sketches, never raw rows. Final stage (`_twostage.merge_groups` after
+    the shuffle on the group columns): elementwise register max (the HLL
+    merge law, reference HllArray), then composite estimate +
+    est/(1±n·rse) bounds.
     Empty input partitions yield nothing (round-1 Arrow-crash discipline,
     tests/test_empty_partitions.py)."""
     from .theta import _hash_series  # shared item-hash discipline
@@ -643,9 +644,7 @@ def finalize_hll_sketches(
             row["regs"] = [regs.tobytes()]
         return pd.DataFrame(row, columns=group_cols + out_cols)
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, out_schema)
-    return partials.groupBy().applyInPandas(final, out_schema)
+    return merge_groups(partials, group_cols, final, out_schema)
 
 
 def hll_merge_sketches(

@@ -23,10 +23,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .quantiles import _level_cap
+from ._twostage import merge_groups
 
 DEFAULT_K = 200
 
@@ -326,11 +326,7 @@ def kll_string_agg(
             out[kk] = [v]
         return pd.DataFrame(out)
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        final, schema
-    )
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_string_quantiles(

@@ -27,7 +27,7 @@ exact mode: until the first compaction the sketch IS the data.
 
 Spark mapping: partial sketches per input partition via ``mapInPandas``
 (map-side combine — the shuffle carries O(groups × partitions × k) floats,
-never raw rows), final merge via ``groupBy().applyInPandas``. Same explicit
+never raw rows), final merge via ``_twostage.merge_groups``. Same explicit
 two-stage shape as functions/theta.py.
 """
 
@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ._twostage import merge_groups
 
 DEFAULT_K = 200
 _C = 2.0 / 3.0
@@ -341,9 +343,7 @@ def kll_sketch_agg(
         r.update({kk: [vv] for kk, vv in sk.to_row().items()})
         return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_quantiles(

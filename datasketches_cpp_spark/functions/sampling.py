@@ -39,6 +39,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ._twostage import merge_groups
+
 
 def _tau_for(weights: np.ndarray, k: int) -> float:
     """Smallest tau with Σ min(w/tau, 1) ≤ k: classic var-opt threshold.
@@ -242,9 +244,7 @@ def var_opt_agg(
             + ["item", "adjusted_weight", "total_weight", "n", "weight_exact"],
         )
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def estimate_subset_sum(

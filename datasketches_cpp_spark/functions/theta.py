@@ -4,8 +4,9 @@ mapped onto Spark's partial/final aggregation contract.
 The reference's update loop (theta_update_sketch_base_impl.hpp:137-251) runs
 *inside each input partition* as a `mapInPandas` fold that emits one partial
 sketch row per (group, partition) — the map-side combine. The union
-(theta_union_base_impl.hpp:38-81) runs after the shuffle as
-`groupBy().applyInPandas`. This is explicit because Python UDAFs get no
+(theta_union_base_impl.hpp:38-81) runs after the shuffle in the shared
+final stage (`_twostage.merge_groups`: one `mapInArrow` over each
+partition's sorted groups). This is explicit because Python UDAFs get no
 partial push-down from Catalyst (SURVEY.md §4): without the map-side stage a
 100 TB scan would shuffle raw rows; with it, the shuffle carries at most
 (#groups × #partitions × k × 8) bytes.
@@ -33,6 +34,7 @@ from ..hashing import DEFAULT_SEED, hash63_bytes_many, hash63_int64, hash63_str_
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
+from ._twostage import merge_groups
 
 
 def _hash_series(s: pd.Series, dtype: str, seed: int) -> np.ndarray:
@@ -189,13 +191,7 @@ def _merge_pdf(pdf: pd.DataFrame, group_cols: list[str], k: int) -> pd.DataFrame
 
 
 def _final_merge(partials: DataFrame, group_cols: list[str], k: int, schema: StructType) -> DataFrame:
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(
-            lambda pdf: _merge_pdf(pdf, group_cols, k), schema
-        )
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: _merge_pdf(pdf, [], k), schema
-    )
+    return merge_groups(partials, group_cols, lambda pdf: _merge_pdf(pdf, group_cols, k), schema)
 
 
 def with_estimate(sketch_df: DataFrame, out_col: str = "estimate") -> DataFrame:

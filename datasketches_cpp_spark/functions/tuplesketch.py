@@ -30,6 +30,8 @@ from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
+from ._twostage import merge_groups
+
 _POLICIES = {"sum": "sum", "max": "max", "min": "min", "one": "first"}
 
 
@@ -153,9 +155,7 @@ def tuple_sketch_agg(
         r["summaries"] = [s]
         return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_key_estimate(sketch_df: DataFrame, out_col: str = "estimate") -> DataFrame:
@@ -465,9 +465,7 @@ def array_tuple_sketch_agg(
         r["summaries"] = [s.reshape(-1)]
         return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_value_sums_estimate(
@@ -769,9 +767,7 @@ def aos_sketch_agg(
         r["summaries"] = [v]
         return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
 
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def tuple_jaccard(

@@ -21,6 +21,8 @@ groupBy; the only passes over raw image bytes are the two signature stages
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -28,7 +30,7 @@ from .cc import assign_clusters
 from .lsh import candidate_pairs, pairs_from_bands
 from .minhash import compute_signatures
 from .sigkernel import SigConfig
-from .substring import substring_pairs
+from .substring import substring_pairs_with_release
 from .verify import verify_pairs
 
 
@@ -276,6 +278,15 @@ def phash_pairs(
     )
 
 
+def _materialize(lane: DataFrame, release: Callable[[], None] | None) -> DataFrame:
+    """Eager local checkpoint of ``lane``, then ``release()`` what only its
+    computation needed (the substring lane's bitmap index broadcast)."""
+    done = lane.localCheckpoint(eager=True)
+    if release is not None:
+        release()
+    return done
+
+
 def dedup_images(
     images: DataFrame,
     cfg: SigConfig | None = None,
@@ -321,12 +332,12 @@ def dedup_images(
 
     import time as _time
 
-    def _bar(name: str, df: DataFrame) -> DataFrame:
+    def _bar(name: str, df: DataFrame, release: Callable[[], None] | None = None) -> DataFrame:
         """Profile barrier: eager checkpoint + wall time (no-op otherwise)."""
         if profile is None:
             return df
         t0 = _time.time()
-        df = df.localCheckpoint(eager=True)
+        df = _materialize(df, release)
         profile[name] = round(_time.time() - t0, 2)
         return df
 
@@ -337,7 +348,9 @@ def dedup_images(
     # on driver threads (guide §2.6) so every lane's planning actions AND
     # its materialization overlap. Per-lane results are unchanged
     # (localCheckpoint only truncates lineage) and CC's canonical
-    # distinct is order-insensitive, so assignments are identical.
+    # distinct is order-insensitive, so assignments are identical. A
+    # thunk returns (pairs, release or None); release() runs once the
+    # pairs are checkpointed, and not at all on the lazy path.
     lane_builders: list = []
 
     if "caption" in enable_lanes:
@@ -368,7 +381,7 @@ def dedup_images(
                 )
             return verify_pairs(
                 cap_pairs, cap_sig, cfg, use_simhash=True, include_mh=False
-            ).where("passed")
+            ).where("passed"), None
 
         lane_builders.append(("caption", "caption_pairs", _build_caption))
 
@@ -400,7 +413,7 @@ def dedup_images(
                 )
             return verify_pairs(
                 byt_pairs, byt_sig, bytes_cfg, use_simhash=False, include_mh=False
-            ).where("passed")
+            ).where("passed"), None
 
         lane_builders.append(("bytes", "bytes_pairs", _build_bytes))
 
@@ -418,8 +431,11 @@ def dedup_images(
             (
                 "phash",
                 "phash_pairs",
-                lambda: phash_pairs(
-                    ph_src, cfg, max_pairs_group=max_pairs_group, hot_policy=hot_policy
+                lambda: (
+                    phash_pairs(
+                        ph_src, cfg, max_pairs_group=max_pairs_group, hot_policy=hot_policy
+                    ),
+                    None,
                 ),
             )
         )
@@ -432,9 +448,12 @@ def dedup_images(
             (
                 "dhash",
                 "dhash_pairs",
-                lambda: phash_pairs(
-                    with_dhash(images), cfg, phash_col="dhash",
-                    max_pairs_group=max_pairs_group, hot_policy=hot_policy,
+                lambda: (
+                    phash_pairs(
+                        with_dhash(images), cfg, phash_col="dhash",
+                        max_pairs_group=max_pairs_group, hot_policy=hot_policy,
+                    ),
+                    None,
                 ),
             )
         )
@@ -444,7 +463,7 @@ def dedup_images(
             (
                 "substring",
                 "substring_pairs",
-                lambda: substring_pairs(images, "image_id", "caption", cfg),
+                lambda: substring_pairs_with_release(images, "image_id", "caption", cfg),
             )
         )
 
@@ -458,7 +477,7 @@ def dedup_images(
                 # the thread's own copy of the caller's local properties:
                 # the job group stays, the description names the lane
                 sc.setJobDescription(f"dedup_images lane: {name}")
-                return name, key, build().localCheckpoint(eager=True)
+                return name, key, _materialize(*build())
 
             return run
 
@@ -467,7 +486,7 @@ def dedup_images(
         )
     else:
         built = [
-            (name, key, _bar(key, build()))
+            (name, key, _bar(key, *build()))
             for name, key, build in lane_builders
         ]
     for name, key, ver in built:

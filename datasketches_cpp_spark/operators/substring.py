@@ -23,11 +23,12 @@ Two phases, both linear in corpus size:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
 from ..hashing import DEFAULT_SEED
@@ -92,8 +93,29 @@ def substring_pairs(
     broadcast_max_probes: int = 1_000_000,
 ) -> DataFrame:
     """→ (a, b) pairs where one caption is an exact token-level substring of
-    the other (a < b by id). Equal captions are excluded here (the MinHash
-    lane owns exact equality at J=1).
+    the other (a < b by id); see ``substring_pairs_with_release``. The
+    small-corpus bitmap index broadcast stays live for the session: a
+    caller that materializes the pairs should use that function and
+    release it."""
+    return substring_pairs_with_release(
+        df, id_col, text_col, cfg, max_posting_list, min_tokens, broadcast_max_probes
+    )[0]
+
+
+def substring_pairs_with_release(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    cfg: SigConfig | None = None,
+    max_posting_list: int = 64,
+    min_tokens: int = 3,
+    broadcast_max_probes: int = 1_000_000,
+) -> tuple[DataFrame, Callable[[], None] | None]:
+    """→ ((a, b) pairs where one caption is an exact token-level substring
+    of the other (a < b by id), release). Equal captions are excluded here
+    (the MinHash lane owns exact equality at J=1). ``release()`` destroys
+    the broadcasts the pairs are computed from; call it once they are
+    materialized. It is None when there are none.
 
     ``min_tokens`` is clamped to ``cfg.shingle_w``: a needle shorter than
     the shingle window gets only a zero-padded shingle no host contains,
@@ -173,11 +195,13 @@ def substring_pairs(
     n_docs, n_postings = run_driver_actions(df.sparkSession, df.count, postings.count)
     small_corpus = n_docs <= broadcast_max_probes
     if small_corpus:
-        cand = _dense_domain_candidates(postings, id_type, n_postings)
-        if cand is not None:
-            return _verify_candidates(
+        dense = _dense_domain_candidates(postings, id_type, n_postings)
+        if dense is not None:
+            cand, bc = dense
+            pairs = _verify_candidates(
                 cand, df, id_col, text_col, id_type, small_corpus=True
             )
+            return pairs, lambda: bc.destroy(blocking=False)
 
     probes_min = postings.where("is_min")
 
@@ -247,7 +271,7 @@ def substring_pairs(
         .select("needle_id", "host_id")
     )
 
-    return _verify_candidates(cand, df, id_col, text_col, id_type, small_corpus)
+    return _verify_candidates(cand, df, id_col, text_col, id_type, small_corpus), None
 
 
 #: dense-domain gate: the bitmap index costs distinct_shingles × n_docs/8
@@ -260,7 +284,7 @@ _BITMAP_MAX_POSTINGS = 30_000_000
 
 def _dense_domain_candidates(
     postings: DataFrame, id_type: str, n_postings: int
-) -> DataFrame | None:
+) -> tuple[DataFrame, Broadcast] | None:
     """Exact containment-candidate generation for SMALL SHINGLE DOMAINS.
 
     When the corpus' distinct-shingle count is tiny relative to the corpus
@@ -278,6 +302,7 @@ def _dense_domain_candidates(
     (A ⊆ B ⇒ every shingle of A is in B). Returns None when the domain or
     corpus outgrows the budget — callers fall back to the general
     min-shingle/posting-list plan, which scales to arbitrary domains.
+    Otherwise returns the candidates with the index broadcast they read.
     """
     import pandas as pd
 
@@ -383,7 +408,7 @@ def _dense_domain_candidates(
 
     # no shuffle: the checkpointed postings stream straight into the
     # candidate kernel (per-doc contiguity is preserved by the builder)
-    return postings.mapInPandas(cands, f"needle_id {id_type}, host_id {id_type}")
+    return postings.mapInPandas(cands, f"needle_id {id_type}, host_id {id_type}"), bc
 
 
 def _verify_candidates(

@@ -75,3 +75,23 @@ def test_dedup_images_jobs_carry_the_callers_group(spark, images_df):
         sc.setLocalProperty("spark.job.description", None)
     assert tracker.getJobIdsForGroup("driver-actions-test")
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_repeated_dedup_images_leaves_no_broadcast_valid(spark, images_df, monkeypatch):
+    """Each call's substring lane broadcasts its bitmap index; once the
+    lane is checkpointed the index is destroyed, so repeated calls in one
+    session accumulate no live broadcasts."""
+    sc = spark.sparkContext
+    created = []
+    original = sc.broadcast
+
+    def spy(value):
+        bc = original(value)
+        created.append(bc)
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    results = [_assignments(images_df) for _ in range(3)]
+    assert results[0] == results[1] == results[2]
+    assert len(created) >= 3, "each call's substring lane should broadcast its index"
+    assert [bc for bc in created if bc._jbroadcast is not None and bc._jbroadcast.isValid()] == []

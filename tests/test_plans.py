@@ -6,6 +6,8 @@ filter pushdown, broadcast for small sides, no Python in JVM-only lanes),
 so a refactor that silently regresses one fails CI instead of a cluster.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -95,6 +97,22 @@ def test_knn_probes_broadcast(spark, sf_dir):
     assert "BroadcastExchange" in plan_big or "BroadcastNestedLoopJoin" in plan_big
 
 
+def _assert_partial_exchange_final(plan: str, group_col: str) -> None:
+    """Two-stage sketch aggregate shape: exactly two Python map stages,
+    the partial (MapInPandas) below exactly one Exchange (hash-partitioned
+    on the group column) below the final merge (MapInArrow)."""
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    # plan strings print top-down: final ≺ exchange ≺ partial
+    i_final = plan.find("MapInArrow")
+    i_exchange = plan.find("Exchange")
+    i_partial = plan.find("MapInPandas")
+    assert i_final < i_exchange < i_partial, plan
+    assert re.search(rf"Exchange hashpartitioning\({group_col}#\d+, \d+\)", plan), plan
+
+
 def test_theta_partial_agg_shuffles_sketches_not_rows(spark, sf_dir):
     """The two-stage theta agg must place the Python partial BEFORE the
     exchange: the shuffle carries one sketch row per (group, partition),
@@ -103,15 +121,7 @@ def test_theta_partial_agg_shuffles_sketches_not_rows(spark, sf_dir):
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     sk = theta_sketch_agg(orders, ["o_orderstatus"], "o_custkey", lg_k=12)
-    plan = _plan(sk)
-    # exactly one python map stage (partial) below one exchange below the
-    # grouped-map final stage
-    i_partial = plan.find("MapInPandas") if "MapInPandas" in plan else plan.find("PythonMapInArrow")
-    i_exchange = plan.find("Exchange")
-    i_final = plan.find("FlatMapGroupsInPandas")
-    assert -1 not in (i_partial, i_exchange, i_final)
-    # plan strings print top-down: final ≺ exchange ≺ partial
-    assert i_final < i_exchange < i_partial, plan
+    _assert_partial_exchange_final(_plan(sk), "o_orderstatus")
 
 
 def test_events_agg_has_partial_aggregation(spark, sf_dir):
@@ -144,7 +154,6 @@ def test_ngram_jaccard_projects_only_needed_columns(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     q = exact_ngram_jaccard_pairs(docs, "doc_id", "text", 0.5, w=2)
     plan = _plan(q)
-    import re
 
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
@@ -159,12 +168,7 @@ def test_hll_register_agg_shuffles_sketches_not_rows(spark, sf_dir):
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     sk = hll_sketch_agg(orders, ["o_orderstatus"], "o_custkey", lg_k=11)
-    plan = _plan(sk)
-    i_partial = plan.find("MapInPandas") if "MapInPandas" in plan else plan.find("PythonMapInArrow")
-    i_exchange = plan.find("Exchange")
-    i_final = plan.find("FlatMapGroupsInPandas")
-    assert -1 not in (i_partial, i_exchange, i_final)
-    assert i_final < i_exchange < i_partial, plan
+    _assert_partial_exchange_final(_plan(sk), "o_orderstatus")
 
 
 def test_classic_quantiles_agg_shuffles_sketches_not_rows(spark, sf_dir):
@@ -174,12 +178,7 @@ def test_classic_quantiles_agg_shuffles_sketches_not_rows(spark, sf_dir):
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     sk = classic_quantiles_agg(li, ["l_returnflag"], "l_quantity", k=128)
-    plan = _plan(sk)
-    i_partial = plan.find("MapInPandas") if "MapInPandas" in plan else plan.find("PythonMapInArrow")
-    i_exchange = plan.find("Exchange")
-    i_final = plan.find("FlatMapGroupsInPandas")
-    assert -1 not in (i_partial, i_exchange, i_final)
-    assert i_final < i_exchange < i_partial, plan
+    _assert_partial_exchange_final(_plan(sk), "l_returnflag")
 
 
 def test_video_containment_plan_shape(spark):

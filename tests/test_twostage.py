@@ -1,0 +1,213 @@
+"""``merge_groups`` (the shared final stage of the two-stage sketch
+aggregates) against the grouped-map final it replaced,
+``groupBy(...).applyInPandas(final)``: on the same partials every family
+must give identical ``toPandas()`` output — including the order-sensitive
+merges (KLL, classic, t-digest, REQ), whose bytes depend on the order in
+which a group's partial rows reach ``final``."""
+
+import math
+
+import numpy as np
+import pandas as pd
+import pyspark.sql.functions as F
+import pytest
+
+from datasketches_cpp_spark.functions import (
+    _twostage,
+    classic_quantiles,
+    cpc,
+    freq,
+    hll,
+    quantiles,
+    req,
+    tdigest,
+    theta,
+)
+
+
+def _reference(partials, group_cols, final, schema):
+    """The per-group final every family used before ``merge_groups``."""
+    if group_cols:
+        return partials.groupBy(*group_cols).applyInPandas(final, schema)
+    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+
+
+FAMILIES = {
+    "kll": (quantiles, lambda df, g: quantiles.kll_sketch_agg(df, g, "v", k=16)),
+    "classic": (
+        classic_quantiles,
+        lambda df, g: classic_quantiles.classic_quantiles_agg(df, g, "v", k=8),
+    ),
+    "tdigest": (tdigest, lambda df, g: tdigest.tdigest_agg(df, g, "v", delta=20)),
+    "req": (req, lambda df, g: req.req_sketch_agg(df, g, "v", k=4)),
+    "theta": (theta, lambda df, g: theta.theta_sketch_agg(df, g, "item", lg_k=5)),
+    "freq": (freq, lambda df, g: freq.frequent_items_agg(df, g, "item", max_map_size=8)),
+}
+
+
+def _canon(v):
+    """A value as a hashable, exactly comparable form: arrays as tuples,
+    floats by bit pattern (so -0.0 and 0.0, and NaN, stay distinct)."""
+    if isinstance(v, (np.ndarray, list, tuple)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, (float, np.floating)):
+        return float(v).hex() if not math.isnan(v) else "nan"
+    if v is None or v is pd.NA:
+        return None
+    if isinstance(v, np.generic):
+        return v.item()
+    return v
+
+
+def _rows(df, group_cols):
+    pdf = df.toPandas()
+    rows = [tuple(_canon(v) for v in r) for r in pdf.itertuples(index=False)]
+    # output order across groups is not part of the contract; within a
+    # group (freq emits several rows) it is
+    k = len(group_cols)
+    return list(pdf.dtypes.astype(str)), sorted(
+        rows, key=lambda r: tuple((x is None, str(x)) for x in r[:k])
+    )
+
+
+def _collected(df):
+    """Rows as Spark returns them (``toPandas`` would turn a long column
+    with a null into float64), sorted by their first column."""
+    rows = [tuple(_canon(v) for v in r) for r in df.collect()]
+    return sorted(rows, key=lambda r: (r[0] is not None, r[0] if r[0] is not None else 0))
+
+
+def _frame(spark, n=3000, parts=6):
+    """Six input partitions, so each group gets several partials; string
+    keys with a null; double keys 0.0, -0.0, NaN, null and 1.5."""
+    return spark.range(0, n, numPartitions=parts).select(
+        F.when(F.col("id") % 7 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("g"), (F.col("id") % 5).cast("string")))
+        .alias("g"),
+        F.element_at(
+            F.array(
+                F.lit(0.0), F.lit(-0.0), F.lit(float("nan")), F.lit(None).cast("double"),
+                F.lit(1.5),
+            ),
+            (F.col("id") % 5 + 1).cast("int"),
+        ).alias("d"),
+        ((F.col("id") * 7919) % 1009 / 10.0).alias("v"),
+        # half the rows on three heavy items, so freq keeps some
+        F.when(F.col("id") % 2 == 0, F.col("id") % 3)
+        .otherwise(F.col("id") * 31 % 97)
+        .cast("string")
+        .alias("item"),
+    )
+
+
+def _same_as_reference(monkeypatch, family, df, group_cols):
+    module, agg = FAMILIES[family]
+    got = _rows(agg(df, group_cols), group_cols)
+    with monkeypatch.context() as m:
+        m.setattr(module, "merge_groups", _reference)
+        want = _rows(agg(df, group_cols), group_cols)
+    assert got == want
+    return got
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+@pytest.mark.parametrize("group_cols", [["d"], ["g", "d"], []])
+def test_family_matches_grouped_map(spark, monkeypatch, family, group_cols):
+    _, rows = _same_as_reference(monkeypatch, family, _frame(spark), group_cols)
+    assert rows
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_null_free_batches_match_grouped_map(spark, monkeypatch, family):
+    """Without a null in a batch its groups are sliced from one pandas
+    conversion; they must still match the per-group conversion. (The
+    partials turn a NaN key into null, so NaN keys go too.)"""
+    df = _frame(spark).where("g IS NOT NULL AND d IS NOT NULL AND NOT isnan(d)")
+    _same_as_reference(monkeypatch, family, df, ["g", "d"])
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_groups_straddling_arrow_batches(spark, monkeypatch, family):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        _same_as_reference(monkeypatch, family, _frame(spark, n=600), ["g", "d"])
+        _same_as_reference(monkeypatch, family, _frame(spark, n=600), [])
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+@pytest.mark.parametrize("group_cols", [["g"], []])
+def test_empty_input(spark, monkeypatch, family, group_cols):
+    empty = _frame(spark).where(F.lit(False))
+    _, rows = _same_as_reference(monkeypatch, family, empty, group_cols)
+    assert rows == []
+
+
+@pytest.fixture
+def one_shuffle_partition(spark):
+    """Every group in one shuffle partition, so groups share Arrow batches."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    yield
+    spark.conf.set(key, old)
+
+
+def _keys_and_rows(pdf):
+    return pd.DataFrame({"k": [pdf["k"].iloc[0]], "xs": [list(pdf["x"])]})
+
+
+def test_null_and_nan_keys_stay_apart(spark, one_shuffle_partition):
+    """A null double key and a NaN key are different groups even when
+    they sort next to each other in one partition (pandas sees both as
+    NaN)."""
+    df = spark.createDataFrame(
+        [(None, 1), (float("nan"), 2), (None, 3), (float("nan"), 4)],
+        "k double, x long",
+    ).repartition(1)
+    schema = "k double, xs array<long>"
+    got = _rows(_twostage.merge_groups(df, ["k"], _keys_and_rows, schema), ["k"])
+    want = _rows(_reference(df, ["k"], _keys_and_rows, schema), ["k"])
+    assert got == want
+    assert sorted(len(r[1]) for r in got[1]) == [2, 2]
+
+
+BIG = 2**53
+
+
+def test_long_keys_above_2_53_beside_a_null_key(spark, one_shuffle_partition):
+    """Long keys that float64 cannot tell apart stay separate groups and
+    come back exact, although a null key shares their batch (which makes
+    pandas hold the whole batch's column as float64)."""
+    keys = [BIG + 1, BIG + 2, None, BIG + 1, BIG + 3, BIG + 4, BIG]
+    df = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "k long, x long"
+    ).repartition(1)
+    schema = "k long, xs array<long>"
+    got = _collected(_twostage.merge_groups(df, ["k"], _keys_and_rows, schema))
+    assert got == _collected(_reference(df, ["k"], _keys_and_rows, schema))
+    assert got == [
+        (None, (2,)),
+        (BIG, (6,)), (BIG + 1, (0, 3)), (BIG + 2, (1,)), (BIG + 3, (4,)), (BIG + 4, (5,)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "module,agg", [(hll, hll.hll_stream_agg), (cpc, cpc.cpc_stream_agg)]
+)
+def test_stream_agg_items_above_2_53_beside_a_null_item(
+    spark, monkeypatch, one_shuffle_partition, module, agg
+):
+    """The one-stage stream aggregates hand raw items to ``final``: a null
+    item in one group must not change the long items of another group in
+    the same batch (as float64 they would hash as different values)."""
+    rows = [("a", None), ("a", 7)] + [("b", BIG + i) for i in range(1, 40)]
+    df = spark.createDataFrame(rows, "g string, item long").repartition(1)
+    got = _collected(agg(df, ["g"], "item"))
+    with monkeypatch.context() as m:
+        m.setattr(module, "merge_groups", _reference)
+        want = _collected(agg(df, ["g"], "item"))
+    assert got == want
