@@ -1,35 +1,183 @@
-"""The final-merge stage shared by every two-stage sketch aggregate.
+"""The two stages shared by every two-stage sketch aggregate.
 
-Each family folds its input per partition into partial sketch rows (a
-``mapInPandas`` map-side combine) and then merges the partials of each
-group into one sketch. ``merge_groups`` is that merge. It shuffles the
-partials on the group columns and sorts each partition on them, the same
-``hashpartitioning`` and ``SortExec`` that ``groupBy().applyInPandas``
-plans, then walks each sorted partition's contiguous groups inside one
-``mapInArrow`` call. The Python round trip is paid per Arrow batch, not
-per group. A group that spans a batch boundary is carried over to the
-next batch, so every group reaches ``final`` with the same rows in the
-same order as under ``applyInPandas``; order-sensitive merges (KLL,
-classic, REQ, t-digest) give the same bytes.
+``fold_partials`` is the partial stage, the map-side combine: one
+``mapInArrow`` call per input partition folds each group's rows into a
+state and emits one partial row per (partition, group). Groups are found
+on the exact Arrow key values, compared as Spark groups them (0.0 equal to
+-0.0, NaN equal to NaN, null equal to null only), and kept in first-seen
+order. The key columns of the partial rows are built from those exact
+values, so long keys above 2^53 and NaN keys come back as they went in.
 
-Group boundaries are found on the Arrow values, and each group reaches
-``final`` as the pandas frame PySpark's grouped-map worker would build
-for it alone. A batch with no null at any depth converts row by row, so
-it is converted once and sliced; a batch with a null is converted group
-by group, since one null turns a long column into float64 for every row
-converted with it, which rounds keys and items above 2^53.
+``merge_groups`` is the final stage. It shuffles the partials on the group
+columns and sorts each partition on them, the same ``hashpartitioning``
+and ``SortExec`` that ``groupBy().applyInPandas`` plans, then walks each
+sorted partition's contiguous groups inside one ``mapInArrow`` call. The
+Python round trip is paid per Arrow batch, not per group. A group that
+spans a batch boundary is carried over to the next batch, so every group
+reaches ``final`` with the same rows in the same order as under
+``applyInPandas``; order-sensitive merges (KLL, classic, REQ, t-digest)
+give the same bytes. The group columns of its output are also set from the
+exact Arrow key, since pandas would turn a NaN key into null on the way
+back.
+
+The final stage hands ``final`` each group as the pandas frame PySpark's
+grouped-map worker would build for it alone. A batch with no null
+converts value by value, so it is converted once and sliced; a batch with
+a null is converted group by group, since one null turns a long column
+into float64 for every row converted with it, which rounds keys and items
+above 2^53. The partial stage converts each item column once per batch,
+an integer column with a null to exact Python ints, and the family turns
+it into per-row numpy arrays (hashes, say) that each group's update takes
+a slice of.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import DoubleType, FloatType, StructType
+
+_NAN = object()  # NaN as a dict key: equal to itself, unlike float("nan")
+
+
+def _worker_conf(df: DataFrame, schema: StructType | str) -> tuple[str, bool, pa.StructType]:
+    """The session time zone, whether pandas → Arrow casts are checked,
+    and ``schema`` in Arrow: read on the driver for the Python workers."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    conf = df.sparkSession.conf
+    out_type = to_arrow_type(
+        StructType.fromDDL(schema) if isinstance(schema, str) else schema,
+        prefers_large_types=conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true",
+    )
+    safecheck = conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true"
+    return conf.get("spark.sql.session.timeZone"), safecheck, out_type
+
+
+def _serializer(timezone: str, safecheck: bool):
+    """The serializer applyInPandas' workers use, for the same pandas
+    dtypes in and the same Arrow casts out."""
+    from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+
+    return GroupPandasUDFSerializer(timezone, safecheck, True, False)
+
+
+def notna(df: DataFrame, col: str) -> Column:
+    """The rows pandas' ``notna`` keeps, as a Spark filter: ``col`` is not
+    null and, in a float column, not NaN."""
+    c = F.col(col)
+    if isinstance(df.schema[col].dataType, (DoubleType, FloatType)):
+        return c.isNotNull() & ~F.isnan(c)
+    return c.isNotNull()
+
+
+def _spark_key(a: pa.Array) -> pa.Array:
+    """A key column as Spark groups and returns it: -0.0 as 0.0."""
+    return pc.add(a, pa.scalar(0.0, a.type)) if pa.types.is_floating(a.type) else a
+
+
+def _group_codes(keys: list[pa.Array], n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's group as a dense code in first-seen order, and the first
+    row of each group (``keys`` as ``_spark_key`` gives them)."""
+    code = np.zeros(n, np.int64)
+    for i, a in enumerate(keys):
+        enc = pc.dictionary_encode(a, null_encoding="encode")
+        code = code * len(enc.dictionary) + enc.indices.to_numpy()
+        if i:  # back to dense codes, so the next product cannot overflow
+            code = pc.dictionary_encode(pa.array(code)).indices.to_numpy().astype(np.int64)
+    return code, np.unique(code, return_index=True)[1]
+
+
+def _items(col: pa.Array, ser) -> pd.Series:
+    """A batch's item column as PySpark's pandas conversion gives it, except
+    that an integer column with a null holds exact Python ints: pandas
+    would make it float64, which rounds values above 2^53."""
+    if col.null_count and pa.types.is_integer(col.type):
+        return pd.Series(col.to_pylist(), dtype=object)
+    return ser.arrow_to_pandas(col, 0)
+
+
+def fold_partials(
+    df: DataFrame,
+    group_cols: list[str],
+    item_cols: list[str],
+    prepare: Callable[..., tuple[np.ndarray, ...]],
+    init: Callable[[], Any],
+    update: Callable[..., None],
+    emit: Callable[[Any], list[dict]],
+    schema: StructType | str,
+) -> DataFrame:
+    """Fold each input partition's rows of ``df`` into one state per group
+    and emit the partial rows.
+
+    ``prepare(*items)`` turns an Arrow batch's item columns (pandas Series,
+    see ``_items``) into numpy arrays with one entry per row, once per
+    batch, so per-row work such as hashing is paid per batch, not per
+    group. ``init()`` makes a group's state and ``update(state, *arrays)``
+    folds the group's entries of those arrays into it, in row order.
+    ``emit(state)`` gives the group's partial rows as dicts of the columns
+    of ``schema`` that are not group columns. With no group columns, all
+    rows form one group; a partition without rows emits nothing."""
+    timezone, safecheck, out_type = _worker_conf(df, schema)
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ser = _serializer(timezone, safecheck)
+        ids: dict[tuple, int] = {}
+        states: list = []
+        new_keys: list[list[pa.Array]] = []  # per batch, the keys of its new groups
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            keys = [_spark_key(batch.column(c)) for c in group_cols]
+            code, first = _group_codes(keys, n)
+            firsts = [k.take(first) for k in keys]
+            gids, new = [], []
+            tuples = zip(*(f.to_pylist() for f in firsts)) if firsts else [()]
+            for j, key in enumerate(tuples):
+                key = tuple(_NAN if v != v else v for v in key)
+                if key not in ids:
+                    ids[key] = len(states)
+                    states.append(init())
+                    new.append(j)
+                gids.append(ids[key])
+            if new:
+                new_keys.append([f.take(new) for f in firsts])
+            arrays = prepare(*(_items(batch.column(c), ser) for c in item_cols))
+            if any(len(a) != n for a in arrays):
+                raise ValueError("prepare must return one entry per row of the batch")
+            # small codes sort by radix: 8x faster than int64 here
+            order = np.argsort(code.astype(np.min_scalar_type(len(first))), kind="stable")
+            arrays = [a[order] for a in arrays]
+            counts = np.bincount(code)
+            ends = np.cumsum(counts)
+            for g, a, b in zip(gids, ends - counts, ends):
+                update(states[g], *(x[a:b] for x in arrays))
+        rows, owner = [], []
+        for g, st in enumerate(states):
+            out = emit(st)
+            rows += out
+            owner += [g] * len(out)
+        if not rows:
+            return
+        cols = []
+        for f in out_type:
+            if f.name in group_cols:
+                i = group_cols.index(f.name)
+                col = pa.concat_arrays([k[i] for k in new_keys]).take(owner)
+                cols.append(col.cast(f.type))
+            else:
+                vals = [r[f.name] for r in rows]
+                cols.append(pa.array(vals, f.type, from_pandas=True, safe=safecheck))
+        yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
+
+    return df.select(*group_cols, *item_cols).mapInArrow(fold, schema)
 
 
 def _key_changes(keys: list[pa.Array], n: int) -> np.ndarray:
@@ -69,21 +217,10 @@ def merge_groups(
 ) -> DataFrame:
     """Apply ``final`` to the rows of each group of ``partials``; with no
     group columns, to all rows at once (and not at all on empty input)."""
-    from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    conf = partials.sparkSession.conf
-    timezone = conf.get("spark.sql.session.timeZone")
-    safecheck = conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true"
-    out_type = to_arrow_type(
-        StructType.fromDDL(schema) if isinstance(schema, str) else schema,
-        prefers_large_types=conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true",
-    )
+    timezone, safecheck, out_type = _worker_conf(partials, schema)
 
     def merge_sorted_groups(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # the serializer applyInPandas' workers use, for the same pandas
-        # dtypes in and the same Arrow casts out
-        ser = GroupPandasUDFSerializer(timezone, safecheck, True, False)
+        ser = _serializer(timezone, safecheck)
 
         def to_pandas(pieces: list[pa.RecordBatch]) -> pd.DataFrame:
             table = pa.Table.from_batches(pieces)
@@ -98,16 +235,30 @@ def merge_groups(
             whole = to_pandas([batch])
             return [whole.iloc[a:b].reset_index(drop=True) for a, b in bounds]
 
-        def to_arrow(outs: list[pd.DataFrame]) -> list[pa.RecordBatch]:
-            """``final``'s outputs in Arrow: converted together when their
-            columns and dtypes agree (concatenating them changes nothing)."""
-            outs = [o for o in outs if len(o)]
-            if len(outs) > 1 and all(o.dtypes.equals(outs[0].dtypes) for o in outs):
-                outs = [pd.concat(outs, ignore_index=True)]
-            return [
-                pa.RecordBatch.from_struct_array(ser._create_struct_array(o, out_type))
-                for o in outs
+        def to_arrow(outs: list[tuple[pd.DataFrame, pa.RecordBatch]]) -> list[pa.RecordBatch]:
+            """``final``'s outputs, each with its group's first row, in
+            Arrow: converted together when their columns and dtypes agree
+            (concatenating them changes nothing), with the group columns
+            set to the exact key (pandas would turn a NaN key into null)."""
+            outs = [
+                (o, [_spark_key(k.column(c)).take(np.zeros(len(o), np.int64)) for c in group_cols])
+                for o, k in outs
+                if len(o)
             ]
+            if len(outs) > 1 and all(o.dtypes.equals(outs[0][0].dtypes) for o, _ in outs):
+                outs = [(
+                    pd.concat([o for o, _ in outs], ignore_index=True),
+                    [pa.concat_arrays(c) for c in zip(*(ks for _, ks in outs))],
+                )]
+            batches = []
+            for o, ks in outs:
+                b = pa.RecordBatch.from_struct_array(ser._create_struct_array(o, out_type))
+                cols = [
+                    ks[group_cols.index(f.name)].cast(f.type) if f.name in group_cols else col
+                    for f, col in zip(b.schema, b.columns)
+                ]
+                batches.append(pa.RecordBatch.from_arrays(cols, schema=b.schema))
+            return batches
 
         open_: list[pa.RecordBatch] = []  # rows of the open group so far
         for batch in batches:
@@ -126,12 +277,15 @@ def merge_groups(
                 continue
             if starts[0]:
                 open_.append(batch.slice(0, starts[0]))
-            outs = [final(to_pandas(open_))] if open_ else []
-            outs += [final(g) for g in groups(batch, list(zip(starts[:-1], starts[1:])))]
+            outs = [(final(to_pandas(open_)), open_[0])] if open_ else []
+            bounds = list(zip(starts[:-1], starts[1:]))
+            outs += [
+                (final(g), batch.slice(a, 1)) for g, (a, _) in zip(groups(batch, bounds), bounds)
+            ]
             open_ = [batch.slice(starts[-1])]
             yield from to_arrow(outs)
         if open_:
-            yield from to_arrow([final(to_pandas(open_))])
+            yield from to_arrow([(final(to_pandas(open_)), open_[0])])
 
     if group_cols:
         partials = partials.repartition(*group_cols).sortWithinPartitions(*group_cols)

@@ -12,8 +12,8 @@ Reference semantics (filters/include/bloom_filter.hpp, bloom_filter_impl.hpp):
   - union = OR, intersect = AND (bloom_filter.hpp:505-517) — requires
     identical (m, k, seed), enforced via config columns.
 
-Spark mapping: per-partition packed uint8 bit arrays via ``mapInPandas``
-(np.bitwise_or reduce), final OR merge; the filter row is broadcast for
+Spark mapping: per-partition packed uint8 bit arrays via
+``_twostage.fold_partials`` (np.bitwise_or reduce), final OR merge; the filter row is broadcast for
 probing, which is the scale pattern: build once over the small/dim side,
 prefilter the huge fact side *before* the exact join — the exact join then
 only sees survivors, and the result is identical to the unfiltered join
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 
 def suggest_num_bits(n: int, fpp: float) -> int:
@@ -76,32 +76,27 @@ def bloom_filter_agg(
 ) -> DataFrame:
     """Build ONE bloom filter over a column (ungrouped — filters are
     broadcast objects, not per-group rows): returns a single-row DataFrame
-    (bits binary, num_bits int, num_hashes int, seed long, n_items long)."""
+    (bits binary, num_bits int, num_hashes int, seed long, n_items long);
+    no row when the column holds no non-null item."""
     item_dtype = dict(df.dtypes)[item_col]
     nbytes = (num_bits + 7) // 8
     schema = "bits binary, num_bits int, num_hashes int, seed long, n_items long"
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        arr = np.zeros(nbytes, dtype=np.uint8)
-        n = 0
-        for pdf in batches:
-            s = pdf[item_col].dropna()
-            if len(s) == 0:
-                continue
-            pos = _bit_positions(s, item_dtype, num_bits, num_hashes, seed).ravel()
-            np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            n += len(s)
-        yield pd.DataFrame(
-            {
-                "bits": [arr.tobytes()],
-                "num_bits": [num_bits],
-                "num_hashes": [num_hashes],
-                "seed": [seed],
-                "n_items": [n],
-            }
-        )
+    def update(st: list, pos: np.ndarray) -> None:
+        st[1] += len(pos)
+        pos = pos.ravel()
+        np.bitwise_or.at(st[0], pos >> 3, (1 << (pos & 7)).astype(np.uint8))
 
-    partials = df.select(item_col).mapInPandas(partial, schema)
+    def emit(st: list) -> list[dict]:
+        return [{"bits": st[0].tobytes(), "num_bits": num_bits, "num_hashes": num_hashes,
+                 "seed": seed, "n_items": st[1]}]
+
+    # state: [packed bit array, item count]
+    partials = fold_partials(
+        df.where(notna(df, item_col)), [], [item_col],
+        lambda s: (_bit_positions(s, item_dtype, num_bits, num_hashes, seed),),
+        lambda: [np.zeros(nbytes, dtype=np.uint8), 0], update, emit, schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         assert (pdf["num_bits"] == num_bits).all() and (

@@ -24,7 +24,6 @@ deployments that standardized on classic k=128 sketches.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 DEFAULT_K = 128
 
@@ -279,29 +278,12 @@ def classic_quantiles_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, ClassicQuantilesSketch] = {}
-        for pdf in batches:
-            vals = pdf[item_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                sk = state.setdefault(key, ClassicQuantilesSketch(k, seed))
-                sk.update_batch(vals[idx])
-        rows = []
-        for key, sk in state.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(sk.to_row())
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df, group_cols, [item_col],
+        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
+        lambda: ClassicQuantilesSketch(k, seed), ClassicQuantilesSketch.update_batch,
+        lambda sk: [sk.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = ClassicQuantilesSketch(k, seed)

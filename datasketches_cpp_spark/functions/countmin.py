@@ -15,7 +15,7 @@ Reference semantics (count/include/count_min.hpp, count_min_impl.hpp):
     (count_min_impl.hpp:242-247) — enforced here via the config columns.
 
 Spark mapping: the matrix is one flattened array<long> per group; partial
-matrices per input partition via ``mapInPandas`` (vectorized np.add.at),
+matrices per input partition via ``_twostage.fold_partials`` (vectorized np.add.at),
 final merge is an element-wise sum. The estimate path is a join of a probe
 table against the (small, usually broadcast) sketch row.
 """
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 
 def suggest_num_buckets(relative_error: float) -> int:
@@ -89,54 +89,32 @@ def count_min_agg(
         f"{prefix}cm_matrix array<long>, cm_total long, "
         "num_hashes int, num_buckets int, seed long"
     )
-    cols = group_cols + [item_col] + ([weight_col] if weight_col else [])
+    cols = [item_col] + ([weight_col] if weight_col else [])
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mats: dict[tuple, np.ndarray] = {}
-        totals: dict[tuple, int] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[item_col].notna()]
-            if len(pdf) == 0:
-                continue
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                mat = mats.setdefault(
-                    key, np.zeros(num_hashes * num_buckets, dtype=np.int64)
-                )
-                sub = pdf.iloc[idx]
-                bucket = _row_hashes(
-                    sub[item_col], item_dtype, num_hashes, num_buckets, seed
-                )  # (n, d)
-                w = (
-                    sub[weight_col].to_numpy().astype(np.int64)
-                    if weight_col
-                    else np.ones(len(sub), dtype=np.int64)
-                )
-                flat = bucket + np.arange(num_hashes) * num_buckets  # (n, d)
-                np.add.at(mat, flat.ravel(), np.repeat(w, num_hashes))
-                totals[key] = totals.get(key, 0) + int(w.sum())
-        rows = []
-        for key, mat in mats.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(
-                cm_matrix=mat, cm_total=totals[key],
-                num_hashes=num_hashes, num_buckets=num_buckets, seed=seed,
-            )
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(
-            rows,
-            columns=group_cols
-            + ["cm_matrix", "cm_total", "num_hashes", "num_buckets", "seed"],
+    def cells_and_weights(items: pd.Series, *weights: pd.Series) -> tuple[np.ndarray, ...]:
+        bucket = _row_hashes(items, item_dtype, num_hashes, num_buckets, seed)  # (n, d)
+        w = (
+            weights[0].to_numpy().astype(np.int64)
+            if weights
+            else np.ones(len(items), dtype=np.int64)
         )
+        return bucket + np.arange(num_hashes) * num_buckets, w  # flat (n, d), (n,)
 
-    partials = df.select(cols).mapInPandas(partial, schema)
+    def update(st: list, flat: np.ndarray, w: np.ndarray) -> None:
+        np.add.at(st[0], flat.ravel(), np.repeat(w, num_hashes))
+        st[1] += int(w.sum())
+
+    def emit(st: list) -> list[dict]:
+        return [dict(
+            cm_matrix=st[0], cm_total=st[1],
+            num_hashes=num_hashes, num_buckets=num_buckets, seed=seed,
+        )]
+
+    # state: [flattened d·w matrix, total weight]
+    partials = fold_partials(
+        df.where(notna(df, item_col)), group_cols, cols, cells_and_weights,
+        lambda: [np.zeros(num_hashes * num_buckets, dtype=np.int64), 0], update, emit, schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         # shape/seed must match to merge (count_min_impl.hpp:242-247)

@@ -26,9 +26,10 @@ the raw K-word coupon bitmatrix, whose merge is a plain bitwise OR —
 associative, commutative, idempotent, the same merge-anywhere discipline
 as theta's min-merge, so Spark can combine partials in any order.
 
-Two-stage plan (same shape as functions/theta.py): mapInPandas partial
-per input partition (vectorized np.bitwise_or scatter; state is O(K) per
-group), then the shared final stage (_twostage.merge_groups) OR-merges.
+Two-stage plan (same shape as functions/theta.py): the shared partial
+stage (_twostage.fold_partials) folds each input partition (vectorized
+np.bitwise_or scatter; state is O(K) per group), then the shared final
+stage (_twostage.merge_groups) OR-merges.
 Estimates/bounds are computed from the merged matrix with the reference's
 ICON kappa confidence law (cpc_confidence.hpp empirical side constants at
 lg_k <= 14, ln 2 above); RSE envelope asserted empirically in
@@ -38,7 +39,6 @@ tests/test_cpc.py.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 
 from ..hashing import DEFAULT_SEED
 from .tuplesketch import _hash_items
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 
 def _coupons(hashes: np.ndarray, lg_k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -314,13 +314,6 @@ class CpcState:
         return max(lo, float(self.num_coupons)), float(np.ceil(hi))
 
 
-def _sketch_row(key, group_cols, lg_k: int, mat: np.ndarray) -> dict:
-    r = {c: key[i] for i, c in enumerate(group_cols)}
-    r["lg_k"] = lg_k
-    r["coupons"] = mat.view(np.int64)
-    return r
-
-
 def cpc_sketch_agg(
     df: DataFrame,
     group_cols: list[str],
@@ -342,33 +335,12 @@ def cpc_sketch_agg(
     prefix = f"{group_fields}, " if group_fields else ""
     schema = f"{prefix}lg_k int, coupons array<long>"
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[item_col].notna()]
-            if len(pdf) == 0:
-                continue
-            hashes_all = _hash_items(pdf[item_col], item_dtype, seed)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                mat = acc.get(key)
-                if mat is None:
-                    mat = np.zeros(k, dtype=np.uint64)
-                    acc[key] = mat
-                _fold_matrix(mat, hashes_all[idx], lg_k)
-        if not acc:
-            return  # empty partition: never yield an inferred-dtype frame
-        yield pd.DataFrame(
-            [_sketch_row(key, group_cols, lg_k, m) for key, m in acc.items()],
-            columns=group_cols + ["lg_k", "coupons"],
-        )
-
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df.where(notna(df, item_col)), group_cols, [item_col],
+        lambda s: (_hash_items(s, item_dtype, seed),), lambda: np.zeros(k, np.uint64),
+        lambda mat, h: _fold_matrix(mat, h, lg_k),
+        lambda mat: [{"lg_k": lg_k, "coupons": mat.view(np.int64)}], schema,
+    )
     return _merge_sketches(partials, group_cols, schema)
 
 

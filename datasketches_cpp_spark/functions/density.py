@@ -19,7 +19,7 @@ computes each step's kernel row vectorized against the whole level, and
 estimates evaluate as one (queries × points) matrix per level.
 
 Spark mapping (same contract as quantiles/tdigest aggs): partial sketches
-per input partition via mapInPandas (fold Arrow batches, compact at the
+per input partition via _twostage.fold_partials (fold Arrow batches, compact at the
 k·levels bound), shuffle carries only O(k·log(n/k)·dim) floats per group,
 final merge = level-wise concat + recompact (density_sketch_impl.hpp:105-111
 merge discipline).
@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 DEFAULT_K = 256
 
@@ -187,36 +187,18 @@ def density_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, DensitySketch] = {}
-        for pdf in batches:
-            # null vectors are no-ops (the sketch-family convention —
-            # freq/theta/countmin drop notna rows); without the filter a
-            # single NULL crashes the whole batch with an inhomogeneous-
-            # shape ValueError
-            pdf = pdf[pdf[vec_col].notna()]
-            vecs = np.array(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
-            ).reshape(len(pdf), dim) if len(pdf) else np.empty((0, dim))
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                ds = state.setdefault(key, DensitySketch(k, dim, sigma, seed))
-                ds.update_batch(vecs[idx])
-        rows = []
-        for key, ds in state.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(ds.to_row())
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + [f.name for f in _sketch_fields()])
+    def rows(vecs: pd.Series) -> tuple[np.ndarray]:
+        flat = np.array([np.asarray(v, np.float64) for v in vecs], np.float64)
+        return (flat.reshape(len(vecs), dim),)
 
-    partials = df.select(group_cols + [vec_col]).mapInPandas(partial, schema)
+    # null vectors are no-ops (the sketch-family convention — freq/theta/
+    # countmin drop null items); without the filter a single NULL crashes
+    # the whole batch with an inhomogeneous-shape ValueError
+    partials = fold_partials(
+        df.where(notna(df, vec_col)), group_cols, [vec_col], rows,
+        lambda: DensitySketch(k, dim, sigma, seed), DensitySketch.update_batch,
+        lambda ds: [ds.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         ds = DensitySketch(k, dim, sigma, seed)

@@ -18,7 +18,7 @@ Exact mode: a sketch that never purged (offset == 0) carries exact counts —
 the oracle-checkable corner used by the driver contract (the analog of the
 reference's theta exact-mode tests).
 
-Spark mapping: per-partition MG maps via ``mapInPandas`` (map-side combine:
+Spark mapping: per-partition MG maps via ``_twostage.fold_partials`` (map-side combine:
 the shuffle carries ≤ groups × partitions × m rows), final merge in the
 shared final stage (``_twostage.merge_groups``). The vectorized per-batch fold is `value_counts` + one
 sorted cut — no per-item Python loop.
@@ -26,14 +26,12 @@ sorted cut — no per-item Python loop.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
@@ -138,41 +136,20 @@ def frequent_items_agg(
         f"{prefix}item {item_type}, estimate long, lower_bound long, "
         "upper_bound long, offset long, total_weight long"
     )
-    cols = group_cols + [item_col] + ([weight_col] if weight_col else [])
+    cols = [item_col] + ([weight_col] if weight_col else [])
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, MGState] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[item_col].notna()]
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                st = state.setdefault(key, MGState(max_map_size))
-                w = (
-                    pdf[weight_col].to_numpy()[idx].astype(np.int64)
-                    if weight_col
-                    else None
-                )
-                st.update_batch(pdf[item_col].iloc[idx], w)
-        rows = []
-        for key, st in state.items():
-            items, weights = st.rows()
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(
-                items=items, weights=weights, offset=st.offset, total=st.total
-            )
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(
-            rows, columns=group_cols + ["items", "weights", "offset", "total"]
-        )
+    def update(st: MGState, items: np.ndarray, *weights: np.ndarray) -> None:
+        st.update_batch(pd.Series(items), weights[0] if weights else None)
 
-    partials = df.select(cols).mapInPandas(partial, partial_schema)
+    def emit(st: MGState) -> list[dict]:
+        items, weights = st.rows()
+        return [dict(items=items, weights=weights, offset=st.offset, total=st.total)]
+
+    partials = fold_partials(
+        df.where(notna(df, item_col)), group_cols, cols,
+        lambda s, *w: (s.to_numpy(), *(x.to_numpy().astype(np.int64) for x in w)),
+        lambda: MGState(max_map_size), update, emit, partial_schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         st = MGState(max_map_size)

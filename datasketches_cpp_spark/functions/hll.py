@@ -17,10 +17,11 @@ bookkeeping:
    semantics: hll/include/hll.hpp:237-304 update, HllArray max-register
    merge, composite estimator with linear-counting low-range correction;
    re-derived from the published HLL algorithm, not copied) as an explicit
-   two-stage numpy aggregate like theta: per-partition `mapInPandas`
-   builds K uint8 registers per group (`np.maximum.at`), the shuffle
-   carries one K-byte binary per (partition, group), and the shared final
-   stage (`_twostage.merge_groups`) max-merges registers — the sketch's
+   two-stage numpy aggregate like theta: the shared per-partition fold
+   (`_twostage.fold_partials`) builds K uint8 registers per group
+   (`np.maximum.at`), the shuffle carries one K-byte binary per
+   (partition, group), and the shared final stage
+   (`_twostage.merge_groups`) max-merges registers — the sketch's
    true associative merge law, which also makes cross-table HLL UNION
    (`hll_merge_sketches`) a plain elementwise max, something the builtin
    wrapper cannot express.
@@ -33,7 +34,6 @@ zeros of the remaining 63−lg_k bits + 1.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 HLL_NON_HIP_RSE_FACTOR = 1.03896  # sqrt(3·ln2 − 1), HllUtil.hpp:86
 HLL_HIP_RSE_FACTOR = 0.8325546  # sqrt(ln 2), HllUtil.hpp:85
@@ -537,8 +537,9 @@ def hll_sketch_agg(
 ) -> DataFrame:
     """groupBy(group_cols).hll_sketch(item_col): explicit two-stage HLL-8.
 
-    Partial stage (`mapInPandas`, one pass per input partition): vectorized
-    slot/rho extraction + `np.maximum.at` into K uint8 registers per group;
+    Partial stage (`_twostage.fold_partials`, one pass per input
+    partition): vectorized slot/rho extraction + `np.maximum.at` into K
+    uint8 registers per group;
     emits ONE K-byte row per (partition, group) — the shuffle carries
     sketches, never raw rows. Final stage (`_twostage.merge_groups` after
     the shuffle on the group columns): elementwise register max (the HLL
@@ -546,7 +547,7 @@ def hll_sketch_agg(
     est/(1±n·rse) bounds.
     Empty input partitions yield nothing (round-1 Arrow-crash discipline,
     tests/test_empty_partitions.py)."""
-    from .theta import _hash_series  # shared item-hash discipline
+    from .theta import _hash_series, _hashable_rows  # shared item-hash discipline
 
     k = 1 << lg_k
     mask_k = np.uint64(k - 1)
@@ -554,32 +555,15 @@ def hll_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     part_schema = _hll_schema(group_fields)
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            hashes, mask = _hash_series(pdf[item_col], item_dtype, seed)
-            slots = (hashes.astype(np.uint64) & mask_k).astype(np.int64)
-            rhos = _rho(hashes, lg_k)
-            if len(group_cols) == 0:
-                grouped = {(): np.arange(len(hashes))}
-            else:
-                kept = pdf.loc[mask, group_cols].reset_index(drop=True)
-                grouped = kept.groupby(group_cols, sort=False, dropna=False).indices
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                regs = state.get(key)
-                if regs is None:
-                    regs = state[key] = np.zeros(k, np.uint8)
-                np.maximum.at(regs, slots[idx], rhos[idx])
-        if not state:
-            return
-        rows = {c: [key[i] for key in state] for i, c in enumerate(group_cols)}
-        rows["regs"] = [st.tobytes() for st in state.values()]
-        yield pd.DataFrame(rows, columns=group_cols + ["regs"])
+    def slots_and_rhos(items: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+        hashes, _ = _hash_series(items, item_dtype, seed)
+        return (hashes.astype(np.uint64) & mask_k).astype(np.int64), _rho(hashes, lg_k)
 
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, part_schema)
+    partials = fold_partials(
+        _hashable_rows(df, item_col), group_cols, [item_col], slots_and_rhos,
+        lambda: np.zeros(k, np.uint8), np.maximum.at, lambda regs: [{"regs": regs.tobytes()}],
+        part_schema,
+    )
     return finalize_hll_sketches(
         partials, group_cols, group_fields, num_std_devs, keep_registers
     )

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .quantiles import _level_cap
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 DEFAULT_K = 200
 
@@ -296,26 +296,10 @@ def kll_string_agg(
         "kll_levels array<array<string>>"
     )
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, KllItemSketch] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False) if group_cols else [((), pdf)]:
-                key = key if isinstance(key, tuple) else (key,)
-                sk = state.get(key)
-                if sk is None:
-                    sk = state[key] = KllItemSketch(k, seed)
-                sk.update_batch(grp[item_col].tolist())
-        rows = []
-        for key, sk in state.items():
-            row = dict(zip(group_cols, key))
-            row.update(sk.to_row())
-            rows.append(row)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    partials = df.select(*(group_cols + [item_col])).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df, group_cols, [item_col], lambda s: (s.to_numpy(),), lambda: KllItemSketch(k, seed),
+        lambda sk, items: sk.update_batch(items.tolist()), lambda sk: [sk.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = KllItemSketch(k, seed)

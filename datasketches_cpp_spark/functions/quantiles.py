@@ -25,16 +25,16 @@ same (level, fill) independent, which is what the unbiasedness argument
 in the error analysis needs (the reference draws a fresh bit each time). Exactness below capacity mirrors the reference's
 exact mode: until the first compaction the sketch IS the data.
 
-Spark mapping: partial sketches per input partition via ``mapInPandas``
-(map-side combine — the shuffle carries O(groups × partitions × k) floats,
-never raw rows), final merge via ``_twostage.merge_groups``. Same explicit
-two-stage shape as functions/theta.py.
+Spark mapping: partial sketches per input partition via
+``_twostage.fold_partials`` (map-side combine — the shuffle carries
+O(groups × partitions × k) floats, never raw rows), final merge via
+``_twostage.merge_groups``. Same explicit two-stage shape as
+functions/theta.py.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 DEFAULT_K = 200
 _C = 2.0 / 3.0
@@ -312,28 +312,11 @@ def kll_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, KllSketch] = {}
-        for pdf in batches:
-            vals = pdf[item_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if group_cols:
-                grouped = pdf.groupby(group_cols, sort=False, dropna=False).indices
-            else:
-                grouped = {(): np.arange(len(pdf))}
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                sk = state.setdefault(key, KllSketch(k, seed))
-                sk.update_batch(vals[idx])
-        rows = []
-        for key, sk in state.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(sk.to_row())
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df, group_cols, [item_col],
+        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
+        lambda: KllSketch(k, seed), KllSketch.update_batch, lambda sk: [sk.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = KllSketch(k, seed)

@@ -25,7 +25,7 @@ Why next to KLL/t-digest: REQ gives a GUARANTEED multiplicative (1±ε)
 rank error at the accurate tail — the strongest contract for p99.9+ cuts.
 
 Spark mapping (same contract as the other quantile aggs): partial REQ
-sketches per input partition via mapInPandas, shuffle carries level
+sketches per input partition via _twostage.fold_partials, shuffle carries level
 buffers only, final merge = level-wise concat + compress (the reference's
 merge discipline, req_sketch_impl.hpp compress loop :624-636).
 """
@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 MIN_K = 4
 INIT_NUM_SECTIONS = 3
@@ -370,29 +370,11 @@ def req_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, ReqSketch] = {}
-        for pdf in batches:
-            vals = pdf[item_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                sk = state.setdefault(key, ReqSketch(k, hra, seed))
-                sk.update_batch(vals[idx])
-        rows = []
-        for key, sk in state.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(sk.to_row())
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df, group_cols, [item_col],
+        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
+        lambda: ReqSketch(k, hra, seed), ReqSketch.update_batch, lambda sk: [sk.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = ReqSketch(k, hra, seed)

@@ -32,14 +32,14 @@ re-runs for a fixed partitioning.
 
 from __future__ import annotations
 
-from typing import Iterator
+import uuid
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 
 def _tau_for(weights: np.ndarray, k: int) -> float:
@@ -155,69 +155,45 @@ def var_opt_agg(
         f"{prefix}item {item_type}, adjusted_weight double, "
         "total_weight double, n long, marked boolean, part_tag string"
     )
-    cols = group_cols + [item_col] + ([weight_col] if weight_col else [])
+    cols = [item_col] + ([weight_col] if weight_col else [])
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import uuid
+    def per_row(items: pd.Series, *weights: pd.Series) -> tuple[np.ndarray, ...]:
+        w = (
+            weights[0].to_numpy(dtype=np.float64)
+            if weights
+            else np.ones(len(items), dtype=np.float64)
+        )
+        # each row's hash, with its row number in the batch as the index
+        return items.to_numpy(), w, pd.util.hash_pandas_object(items).to_numpy()
 
-        # incremental fold: per-group state stays O(k) — a running ≤k
-        # var-opt sample resampled against each Arrow batch (sample ∪ batch),
-        # never the raw partition (which would be unbounded executor memory,
-        # violating the bounded-size sketch contract)
-        state: dict[tuple, list] = {}  # key -> [items, adj_w, tot_w, n, hash_acc]
-        for pdf in batches:
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                sub = pdf.iloc[idx]
-                items = sub[item_col].to_numpy()
-                w = (
-                    sub[weight_col].to_numpy(dtype=np.float64)
-                    if weight_col
-                    else np.ones(len(sub), dtype=np.float64)
-                )
-                h = (
-                    int(np.bitwise_xor.reduce(
-                        pd.util.hash_pandas_object(sub[item_col]).to_numpy()
-                    ))
-                    if len(sub)
-                    else 0
-                )
-                st = state.get(key)
-                if st is None:
-                    st = [None, None, 0.0, 0, 0, None]
-                    state[key] = st
-                st[2] += float(w.sum())
-                st[3] += len(sub)
-                st[4] ^= h
-                marked = np.zeros(len(items), bool)  # fresh rows: exact
-                if st[0] is not None:
-                    items = np.concatenate([st[0], items])
-                    w = np.concatenate([st[1], w])
-                    marked = np.concatenate([st[5], marked])
-                rng = np.random.default_rng((seed, st[4] & 0xFFFFFFFF))
-                st[0], st[1], st[5] = _varopt_sample(items, w, k, rng, marked)
-        for key, st in state.items():
-            si, sw = st[0], st[1]
-            out = {c: [key[i]] * len(si) for i, c in enumerate(group_cols)}
-            out["item"] = si
-            out["adjusted_weight"] = sw
-            out["total_weight"] = [st[2]] * len(si)
-            out["n"] = [st[3]] * len(si)
-            out["marked"] = st[5]
-            f = pd.DataFrame(
-                out,
-                columns=group_cols
-                + ["item", "adjusted_weight", "total_weight", "n", "marked"],
-            )
-            f["part_tag"] = uuid.uuid4().hex
-            yield f
+    # incremental fold: per-group state stays O(k) — a running ≤k var-opt
+    # sample resampled against each Arrow batch (sample ∪ batch), never the
+    # raw partition (which would be unbounded executor memory, violating
+    # the bounded-size sketch contract)
+    def update(st: list, items: np.ndarray, w: np.ndarray, h: np.ndarray) -> None:
+        st[2] += float(w.sum())
+        st[3] += len(items)
+        st[4] ^= int(np.bitwise_xor.reduce(h))
+        marked = np.zeros(len(items), bool)  # fresh rows: exact
+        if st[0] is not None:
+            items = np.concatenate([st[0], items])
+            w = np.concatenate([st[1], w])
+            marked = np.concatenate([st[5], marked])
+        rng = np.random.default_rng((seed, st[4] & 0xFFFFFFFF))
+        st[0], st[1], st[5] = _varopt_sample(items, w, k, rng, marked)
 
-    partials = df.select(cols).mapInPandas(partial, partial_schema)
+    def emit(st: list) -> list[dict]:
+        tag = uuid.uuid4().hex
+        return [
+            dict(item=i, adjusted_weight=w, total_weight=st[2], n=st[3], marked=m, part_tag=tag)
+            for i, w, m in zip(st[0], st[1], st[5])
+        ]
+
+    # state: [items, adjusted weights, total weight, n, item-hash xor, marked]
+    partials = fold_partials(
+        df, group_cols, cols, per_row, lambda: [None, None, 0.0, 0, 0, None], update, emit,
+        partial_schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         key = tuple(pdf[c].iloc[0] for c in group_cols)

@@ -12,8 +12,8 @@ accuracy concentrated at the tails, exactly where KLL's uniform rank error
 is the wrong tool (p99/p99.9 outlier-length cuts in LLM data pipelines).
 
 Spark mapping (same contract as quantiles.kll_sketch_agg): partial digests
-per input partition via `mapInPandas` (update = buffer + compress once per
-batch), shuffle carries only (≤ ~2δ centroids, min, max, n) per group, final
+per input partition via `_twostage.fold_partials` (update = buffer + compress
+once per batch), shuffle carries only (≤ ~2δ centroids, min, max, n) per group, final
 merge = concat centroids + one recompress. Associative and bounded-size, so
 the shuffle never carries raw rows.
 """
@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups
 
 DEFAULT_K = 200  # reference tdigest.hpp DEFAULT_K
 
@@ -295,29 +295,11 @@ def tdigest_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, TDigest] = {}
-        for pdf in batches:
-            vals = pdf[item_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                td = state.setdefault(key, TDigest(delta))
-                td.update_batch(vals[idx])
-        rows = []
-        for key, td in state.items():
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r.update(td.to_row())
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, schema)
+    partials = fold_partials(
+        df, group_cols, [item_col],
+        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
+        lambda: TDigest(delta), TDigest.update_batch, lambda td: [td.to_row()], schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         td = TDigest(delta)

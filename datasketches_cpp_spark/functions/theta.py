@@ -2,8 +2,9 @@
 mapped onto Spark's partial/final aggregation contract.
 
 The reference's update loop (theta_update_sketch_base_impl.hpp:137-251) runs
-*inside each input partition* as a `mapInPandas` fold that emits one partial
-sketch row per (group, partition) — the map-side combine. The union
+*inside each input partition* in the shared partial stage
+(`_twostage.fold_partials`: one `mapInArrow` fold that emits one partial
+sketch row per (group, partition)) — the map-side combine. The union
 (theta_union_base_impl.hpp:38-81) runs after the shuffle in the shared
 final stage (`_twostage.merge_groups`: one `mapInArrow` over each
 partition's sorted groups). This is explicit because Python UDAFs get no
@@ -16,8 +17,6 @@ wherever possible (size(sig)/theta-fraction needs no UDF at all).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -34,7 +33,7 @@ from ..hashing import DEFAULT_SEED, hash63_bytes_many, hash63_int64, hash63_str_
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 
 def _hash_series(s: pd.Series, dtype: str, seed: int) -> np.ndarray:
@@ -55,6 +54,15 @@ def _hash_series(s: pd.Series, dtype: str, seed: int) -> np.ndarray:
     vals = [str(v) for v in s.dropna() if str(v) != ""]
     mask = mask & (s.astype("string").fillna("").str.len() > 0).to_numpy()
     return hash63_str_many(vals, seed), mask
+
+
+def _hashable_rows(df: DataFrame, item_col: str) -> DataFrame:
+    """The rows whose item ``_hash_series`` hashes: not null, not NaN and,
+    for strings and binary, not empty."""
+    keep = notna(df, item_col)
+    if dict(df.dtypes)[item_col] in ("string", "binary"):
+        keep &= F.length(item_col) > 0
+    return df.where(keep)
 
 
 def _kmin_merge(state: tuple[int, np.ndarray], new_hashes: np.ndarray, k: int) -> tuple[int, np.ndarray]:
@@ -115,64 +123,41 @@ def theta_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     out_schema = sketch_schema(group_fields)
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Deferred compaction (r6): the old fold ran _kmin_merge — an
-        # O(k log k) union1d over the CURRENT sig — once per Arrow batch,
-        # i.e. ~k/batch_size times more sort work than the data warrants
-        # (at lg_k=18 over 8k-row batches that was ~32× overhead, ~45% of
-        # the whole agg stage). Incoming hash batches are now buffered
-        # per group and compacted only when the buffer outgrows 4k (and
-        # once at the end). k-min-of-distinct is order/batching
-        # insensitive, and theta only shrinks, so a stale (larger) theta
-        # screen at compaction time keeps extra rows the final compaction
-        # removes — the emitted partial sketch is bit-identical.
-        state: dict[tuple, tuple[int, np.ndarray]] = {}
-        bufs: dict[tuple, list[np.ndarray]] = {}
-        buf_n: dict[tuple, int] = {}
-        compact_at = 4 * k
+    compact_at = 4 * k
 
-        def _compact(key) -> None:
-            pend = bufs.pop(key, None)
-            if not pend:
-                return
-            buf_n[key] = 0
-            st = state.get(key, (theta0, np.empty(0, np.uint64)))
-            state[key] = _kmin_merge(st, np.concatenate(pend), k)
+    # Deferred compaction (r6): the old fold ran _kmin_merge — an
+    # O(k log k) union1d over the CURRENT sig — once per Arrow batch,
+    # i.e. ~k/batch_size times more sort work than the data warrants
+    # (at lg_k=18 over 8k-row batches that was ~32× overhead, ~45% of
+    # the whole agg stage). Incoming hash batches are now buffered
+    # per group and compacted only when the buffer outgrows 4k (and
+    # once at the end). k-min-of-distinct is order/batching
+    # insensitive, and theta only shrinks, so a stale (larger) theta
+    # screen at compaction time keeps extra rows the final compaction
+    # removes — the emitted partial sketch is bit-identical.
+    def compact(st: list) -> None:
+        if st[2]:
+            st[0], st[1] = _kmin_merge((st[0], st[1]), np.concatenate(st[2]), k)
+            st[2], st[3] = [], 0
 
-        for pdf in batches:
-            hashes, mask = _hash_series(pdf[item_col], item_dtype, seed)
-            if len(group_cols) == 0:
-                grouped = {(): np.arange(mask.sum())}
-            else:
-                kept = pdf.loc[mask, group_cols]
-                grouped = kept.groupby(group_cols, sort=False, dropna=False).indices
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                h = hashes[idx]
-                theta_now = state.get(key, (theta0, None))[0]
-                if theta_now < MAX_THETA:
-                    h = h[h < np.uint64(theta_now)]
-                bufs.setdefault(key, []).append(h)
-                buf_n[key] = buf_n.get(key, 0) + len(h)
-                if buf_n[key] >= compact_at:
-                    _compact(key)
-        for key in list(bufs):
-            _compact(key)
-        if not state:
-            # Empty input partition (common at sf>=0.1 where parquet row
-            # groups leave most scan partitions rowless): yield NOTHING.
-            # An empty pd.DataFrame built from {} lists infers float64 for
-            # the sig column and pyarrow cannot convert float64 ndarray ->
-            # list<int64>, crashing the whole job (round-1 driver bench).
-            return
-        rows = {
-            c: [key[i] for key in state] for i, c in enumerate(group_cols)
-        }
-        rows["theta"] = [_encode_theta(t) for t, _ in state.values()]
-        rows["sig"] = [s.astype(np.int64) for _, s in state.values()]
-        yield pd.DataFrame(rows, columns=group_cols + ["theta", "sig"])
+    def update(st: list, h: np.ndarray) -> None:
+        if st[0] < MAX_THETA:
+            h = h[h < np.uint64(st[0])]
+        st[2].append(h)
+        st[3] += len(h)
+        if st[3] >= compact_at:
+            compact(st)
 
-    partials = df.select(group_cols + [item_col]).mapInPandas(partial, out_schema)
+    def emit(st: list) -> list[dict]:
+        compact(st)
+        return [{"theta": _encode_theta(st[0]), "sig": st[1].astype(np.int64)}]
+
+    # state: [theta, sorted sig, pending hash batches, their length]
+    partials = fold_partials(
+        _hashable_rows(df, item_col), group_cols, [item_col],
+        lambda s: (_hash_series(s, item_dtype, seed)[0],),
+        lambda: [theta0, np.empty(0, np.uint64), [], 0], update, emit, out_schema,
+    )
     return _final_merge(partials, group_cols, k, out_schema)
 
 

@@ -19,8 +19,6 @@ num_retained/theta). Exact when theta never dropped (lg_k ≥ ndv).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -30,7 +28,7 @@ from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import merge_groups
+from ._twostage import fold_partials, merge_groups, notna
 
 _POLICIES = {"sum": "sum", "max": "max", "min": "min", "one": "first"}
 
@@ -90,53 +88,33 @@ def tuple_sketch_agg(
     prefix = f"{group_fields}, " if group_fields else ""
     schema = f"{prefix}theta long, sig array<long>, summaries array<double>"
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-group (theta, hash → summary) state, folded per batch and
-        # amortized-trimmed at 2k (the reference's lazy-rebuild discipline,
-        # theta_update_sketch_base.hpp:66-68) so partial state stays O(k)
-        # per group instead of growing with distinct keys seen
-        acc: dict[tuple, tuple[int, np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[key_col].notna()]
-            if len(pdf) == 0:
-                continue
-            hashes_all = _hash_items(pdf[key_col], key_dtype, seed)
-            vals_all = pdf[value_col].to_numpy(dtype=np.float64)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
+    # per-group [theta, hashes, summaries] state, folded per batch and
+    # amortized-trimmed at 2k (the reference's lazy-rebuild discipline,
+    # theta_update_sketch_base.hpp:66-68) so partial state stays O(k)
+    # per group instead of growing with distinct keys seen
+    def update(st: list, hashes: np.ndarray, values: np.ndarray) -> None:
+        h, s = _fold(hashes, values, policy)
+        if st[1] is not None:
+            keep = h < np.uint64(st[0])
+            h, s = _fold(
+                np.concatenate([st[1], h[keep]]), np.concatenate([st[2], s[keep]]), policy
             )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                h, s = _fold(hashes_all[idx], vals_all[idx], policy)
-                if key in acc:
-                    ptheta, ph, ps = acc[key]
-                    keep = h < np.uint64(ptheta)
-                    h2, s2 = _fold(
-                        np.concatenate([ph, h[keep]]),
-                        np.concatenate([ps, s[keep]]),
-                        policy,
-                    )
-                    theta = ptheta
-                else:
-                    theta, h2, s2 = MAX_THETA, h, s
-                if len(h2) > 2 * k:
-                    theta, h2, s2 = _cut(h2, s2, theta, k)
-                acc[key] = (theta, h2, s2)
-        rows = []
-        for key, (theta, h, s) in acc.items():
-            theta, h, s = _cut(h, s, theta, k)
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r["theta"] = -1 if theta >= MAX_THETA else theta
-            r["sig"] = h.astype(np.int64)
-            r["summaries"] = s
-            rows.append(r)
-        if not rows:
-            return  # empty partition: never yield an empty inferred-dtype frame
-        yield pd.DataFrame(rows, columns=group_cols + ["theta", "sig", "summaries"])
+        if len(h) > 2 * k:
+            st[0], h, s = _cut(h, s, st[0], k)
+        st[1], st[2] = h, s
 
-    partials = df.select(group_cols + [key_col, value_col]).mapInPandas(partial, schema)
+    def emit(st: list) -> list[dict]:
+        theta, h, s = _cut(st[1], st[2], st[0], k)
+        return [{"theta": -1 if theta >= MAX_THETA else theta, "sig": h.astype(np.int64),
+                 "summaries": s}]
+
+    partials = fold_partials(
+        df.where(notna(df, key_col)), group_cols, [key_col, value_col],
+        lambda keys, values: (
+            _hash_items(keys, key_dtype, seed), values.to_numpy(dtype=np.float64)
+        ),
+        lambda: [MAX_THETA, None, None], update, emit, schema,
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         # vectorized partial merge: theta = min over encoded thetas
@@ -402,52 +380,29 @@ def array_tuple_sketch_agg(
     prefix = f"{group_fields}, " if group_fields else ""
     schema = f"{prefix}theta long, sig array<long>, summaries array<double>"
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, tuple[int, np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[key_col].notna()]
-            if len(pdf) == 0:
-                continue
-            hashes_all = _hash_items(pdf[key_col], key_dtype, seed)
-            vals_all = np.stack(
-                [np.asarray(v, np.float64) for v in pdf[values_col]]
-            ).reshape(len(pdf), d)
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
-            )
-            for key, idx in grouped.items():
-                key = key if isinstance(key, tuple) else (key,)
-                h, s = _fold_nd(hashes_all[idx], vals_all[idx], policy)
-                if key in acc:
-                    ptheta, ph, ps = acc[key]
-                    keep = h < np.uint64(ptheta)
-                    h2, s2 = _fold_nd(
-                        np.concatenate([ph, h[keep]]),
-                        np.concatenate([ps, s[keep]]),
-                        policy,
-                    )
-                    theta = ptheta
-                else:
-                    theta, h2, s2 = MAX_THETA, h, s
-                if len(h2) > 2 * k:
-                    theta, h2, s2 = _cut(h2, s2, theta, k)
-                acc[key] = (theta, h2, s2)
-        rows = []
-        for key, (theta, h, s) in acc.items():
-            theta, h, s = _cut(h, s, theta, k)
-            r = {c: key[i] for i, c in enumerate(group_cols)}
-            r["theta"] = -1 if theta >= MAX_THETA else theta
-            r["sig"] = h.astype(np.int64)
-            r["summaries"] = s.reshape(-1)
-            rows.append(r)
-        if not rows:
-            return
-        yield pd.DataFrame(rows, columns=group_cols + ["theta", "sig", "summaries"])
+    def per_row(keys: pd.Series, values: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+        vals = np.stack([np.asarray(v, np.float64) for v in values]).reshape(len(values), d)
+        return _hash_items(keys, key_dtype, seed), vals
 
-    partials = df.select(group_cols + [key_col, values_col]).mapInPandas(
-        partial, schema
+    def update(st: list, hashes: np.ndarray, vals: np.ndarray) -> None:
+        h, s = _fold_nd(hashes, vals, policy)
+        if st[1] is not None:
+            keep = h < np.uint64(st[0])
+            h, s = _fold_nd(
+                np.concatenate([st[1], h[keep]]), np.concatenate([st[2], s[keep]]), policy
+            )
+        if len(h) > 2 * k:
+            st[0], h, s = _cut(h, s, st[0], k)
+        st[1], st[2] = h, s
+
+    def emit(st: list) -> list[dict]:
+        theta, h, s = _cut(st[1], st[2], st[0], k)
+        return [{"theta": -1 if theta >= MAX_THETA else theta, "sig": h.astype(np.int64),
+                 "summaries": s.reshape(-1)}]
+
+    partials = fold_partials(
+        df.where(notna(df, key_col)), group_cols, [key_col, values_col], per_row,
+        lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -702,53 +657,27 @@ def aos_sketch_agg(
         ).view(np.int64)
         return hash63_int64(k64, seed)
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, tuple[int, np.ndarray, list]] = {}
-        for pdf in batches:
-            pdf = pdf[pdf[key_col].notna()]
-            if len(pdf) == 0:
-                continue
-            hashes_all = _hashes(pdf[key_col])
-            vals_all = [
-                [] if v is None else list(v) for v in pdf[value_col]
-            ]
-            grouped = (
-                pdf.groupby(group_cols, sort=False, dropna=False).indices
-                if group_cols
-                else {(): np.arange(len(pdf))}
+    def update(st: list, hashes: np.ndarray, values: np.ndarray) -> None:
+        h, v = _aos_fold(hashes, [[] if x is None else list(x) for x in values])
+        if st[1] is not None:
+            keep = h < np.uint64(st[0])
+            h, v = _aos_fold(
+                np.concatenate([st[1], h[keep]]),
+                st[2] + [vi for vi, kp in zip(v, keep) if kp],
             )
-            for gkey, idx in grouped.items():
-                gkey = gkey if isinstance(gkey, tuple) else (gkey,)
-                h, v = _aos_fold(
-                    hashes_all[idx], [vals_all[i] for i in idx]
-                )
-                if gkey in acc:
-                    ptheta, ph, pv = acc[gkey]
-                    keep = h < np.uint64(ptheta)
-                    h, v = _aos_fold(
-                        np.concatenate([ph, h[keep]]),
-                        pv + [vi for vi, kp in zip(v, keep) if kp],
-                    )
-                    theta = ptheta
-                else:
-                    theta = MAX_THETA
-                if len(h) > 2 * k:
-                    theta, h, v = _aos_cut(h, v, theta, k)
-                acc[gkey] = (theta, h, v)
-        rows = []
-        for gkey, (theta, h, v) in acc.items():
-            theta, h, v = _aos_cut(h, v, theta, k)
-            r = {c: gkey[i] for i, c in enumerate(group_cols)}
-            r["theta"] = -1 if theta >= MAX_THETA else theta
-            r["sig"] = h.astype(np.int64)
-            r["summaries"] = v
-            rows.append(r)
-        if not rows:
-            return
-        yield pd.DataFrame(rows, columns=group_cols + ["theta", "sig", "summaries"])
+        if len(h) > 2 * k:
+            st[0], h, v = _aos_cut(h, v, st[0], k)
+        st[1], st[2] = h, v
 
-    partials = df.select(group_cols + [key_col, value_col]).mapInPandas(
-        partial, schema
+    def emit(st: list) -> list[dict]:
+        theta, h, v = _aos_cut(st[1], st[2], st[0], k)
+        return [{"theta": -1 if theta >= MAX_THETA else theta, "sig": h.astype(np.int64),
+                 "summaries": v}]
+
+    partials = fold_partials(
+        df.where(notna(df, key_col)), group_cols, [key_col, value_col],
+        lambda keys, values: (_hashes(keys), values.to_numpy()),
+        lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:

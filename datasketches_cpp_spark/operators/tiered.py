@@ -112,7 +112,9 @@ def _bloom_rep_filter(images: DataFrame, rep_ids: DataFrame,
         suggest_num_hashes_from,
     )
 
-    n = max(int(rep_ids.count()), 1)
+    n = int(rep_ids.count())
+    if not n:  # a filter over no ids lets nothing through
+        return images.where(F.lit(False))
     m = suggest_num_bits(n, fpp)
     k = suggest_num_hashes_from(n, m)
     row = bloom_filter_agg(rep_ids, id_col, m, k).collect()[0]

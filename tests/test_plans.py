@@ -99,16 +99,17 @@ def test_knn_probes_broadcast(spark, sf_dir):
 
 def _assert_partial_exchange_final(plan: str, group_col: str) -> None:
     """Two-stage sketch aggregate shape: exactly two Python map stages,
-    the partial (MapInPandas) below exactly one Exchange (hash-partitioned
-    on the group column) below the final merge (MapInArrow)."""
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.count("MapInArrow") == 1, plan
+    the partial fold (MapInArrow) below exactly one Exchange
+    (hash-partitioned on the group column) below the final merge
+    (MapInArrow)."""
+    assert plan.count("MapInArrow") == 2, plan
+    assert "MapInPandas" not in plan, plan
     assert plan.count("Exchange") == 1, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
     # plan strings print top-down: final ≺ exchange ≺ partial
     i_final = plan.find("MapInArrow")
     i_exchange = plan.find("Exchange")
-    i_partial = plan.find("MapInPandas")
+    i_partial = plan.rfind("MapInArrow")
     assert i_final < i_exchange < i_partial, plan
     assert re.search(rf"Exchange hashpartitioning\({group_col}#\d+, \d+\)", plan), plan
 

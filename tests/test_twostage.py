@@ -3,7 +3,9 @@ aggregates) against the grouped-map final it replaced,
 ``groupBy(...).applyInPandas(final)``: on the same partials every family
 must give identical ``toPandas()`` output — including the order-sensitive
 merges (KLL, classic, t-digest, REQ), whose bytes depend on the order in
-which a group's partial rows reach ``final``."""
+which a group's partial rows reach ``final``. And the groups of both
+stages (``fold_partials`` and ``merge_groups``) against Spark's own
+``groupBy``."""
 
 import math
 
@@ -20,6 +22,7 @@ from datasketches_cpp_spark.functions import (
     hll,
     quantiles,
     req,
+    sampling,
     tdigest,
     theta,
 )
@@ -72,9 +75,9 @@ def _rows(df, group_cols):
 
 def _collected(df):
     """Rows as Spark returns them (``toPandas`` would turn a long column
-    with a null into float64), sorted by their first column."""
+    with a null into float64), sorted."""
     rows = [tuple(_canon(v) for v in r) for r in df.collect()]
-    return sorted(rows, key=lambda r: (r[0] is not None, r[0] if r[0] is not None else 0))
+    return sorted(rows, key=lambda r: tuple((v is not None, v if v is not None else 0) for v in r))
 
 
 def _frame(spark, n=3000, parts=6):
@@ -120,9 +123,8 @@ def test_family_matches_grouped_map(spark, monkeypatch, family, group_cols):
 @pytest.mark.parametrize("family", sorted(FAMILIES))
 def test_null_free_batches_match_grouped_map(spark, monkeypatch, family):
     """Without a null in a batch its groups are sliced from one pandas
-    conversion; they must still match the per-group conversion. (The
-    partials turn a NaN key into null, so NaN keys go too.)"""
-    df = _frame(spark).where("g IS NOT NULL AND d IS NOT NULL AND NOT isnan(d)")
+    conversion; they must still match the per-group conversion."""
+    df = _frame(spark).where("g IS NOT NULL AND d IS NOT NULL")
     _same_as_reference(monkeypatch, family, df, ["g", "d"])
 
 
@@ -195,18 +197,55 @@ def test_long_keys_above_2_53_beside_a_null_key(spark, one_shuffle_partition):
     ]
 
 
+NAN = float("nan")
+KEY_CASES = {
+    # pandas holds a long column with a null as float64, rounding 2^53 + 1
+    "long_above_2_53": ("k long", [BIG + 1, BIG + 2, None, BIG + 1, BIG + 3]),
+    # pandas sees null and NaN as the same missing value
+    "nan_beside_null": ("k double", [NAN, None, 2.0, NAN]),
+    # Arrow keeps -0.0 and 0.0 apart, Spark groups (and prints) them as 0.0
+    "signed_zeros": ("k double", [-0.0, 0.0, 1.0, -0.0]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(KEY_CASES))
+def test_partial_groups_are_spark_groups(spark, one_shuffle_partition, case):
+    """Every group of a two-stage aggregate, partial and final, is a group
+    of Spark's own ``groupBy``, with the same exact key and row count, also
+    when the keys share an Arrow batch; likewise grouped by two columns."""
+    ddl, keys = KEY_CASES[case]
+    df = spark.createDataFrame(
+        [(k, i % 2, float(i)) for i, k in enumerate(keys)], f"{ddl}, j int, x double"
+    ).repartition(1)
+    for group_cols in (["k"], ["k", "j"]):
+        got = quantiles.kll_sketch_agg(df, group_cols, "x").select(*group_cols, "kll_n")
+        assert _collected(got) == _collected(df.groupBy(*group_cols).count())
+
+
 @pytest.mark.parametrize(
-    "module,agg", [(hll, hll.hll_stream_agg), (cpc, cpc.cpc_stream_agg)]
+    "module,agg",
+    [
+        (hll, hll.hll_stream_agg),
+        (cpc, cpc.cpc_stream_agg),
+        (theta, theta.theta_sketch_agg),
+        (hll, hll.hll_sketch_agg),
+        (cpc, cpc.cpc_sketch_agg),
+        # exact mode (k >= n): the partial's items come back as its output
+        (sampling, lambda df, g, item: sampling.var_opt_agg(df, g, item, None, k=64)),
+    ],
 )
 def test_stream_agg_items_above_2_53_beside_a_null_item(
     spark, monkeypatch, one_shuffle_partition, module, agg
 ):
-    """The one-stage stream aggregates hand raw items to ``final``: a null
-    item in one group must not change the long items of another group in
-    the same batch (as float64 they would hash as different values)."""
+    """A null item in one group must not change the long items of another
+    group in the same batch (as float64 they would hash as different
+    values): the group comes out as it does without the other group. The
+    one-stage stream aggregates hand raw items to ``final``, which must
+    also match the grouped-map final."""
     rows = [("a", None), ("a", 7)] + [("b", BIG + i) for i in range(1, 40)]
     df = spark.createDataFrame(rows, "g string, item long").repartition(1)
     got = _collected(agg(df, ["g"], "item"))
+    assert [r for r in got if r[0] == "b"] == _collected(agg(df.where("g = 'b'"), ["g"], "item"))
     with monkeypatch.context() as m:
         m.setattr(module, "merge_groups", _reference)
         want = _collected(agg(df, ["g"], "item"))
