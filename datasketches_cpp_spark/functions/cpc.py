@@ -451,7 +451,6 @@ def cpc_stream_agg(
     order_seed = seed ^ 0x9E3779B97F4A7C15
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf[item_col].notna()]
         hashes = _hash_items(pdf[item_col], item_dtype, seed)
         order_h = _hash_items(pdf[item_col], item_dtype, order_seed)
         st = CpcState(lg_k)
@@ -465,5 +464,7 @@ def cpc_stream_agg(
             row, columns=group_cols + ["estimate", "lower_bound", "upper_bound"]
         )
 
-    sel = df.select(group_cols + [item_col])
+    # null items leave in Spark: beside a long item they would make the
+    # group's pandas column float64 and round items above 2^53
+    sel = df.where(notna(df, item_col)).select(group_cols + [item_col])
     return merge_groups(sel, group_cols, final, out_schema)

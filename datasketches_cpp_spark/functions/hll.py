@@ -490,7 +490,7 @@ def hll_stream_agg(
     for moderate per-group cardinality; at 100 TB use hll_sketch_agg
     (merged → composite estimate, exactly like the reference post-union).
     """
-    from .theta import _hash_series
+    from .theta import _hash_series, _hashable_rows
 
     item_dtype = dict(df.dtypes)[item_col]
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
@@ -518,7 +518,9 @@ def hll_stream_agg(
             row, columns=group_cols + ["estimate", "lower_bound", "upper_bound"]
         )
 
-    sel = df.select(group_cols + [item_col])
+    # unhashable items leave in Spark: a null beside a long item would make
+    # the group's pandas column float64 and round items above 2^53
+    sel = _hashable_rows(df, item_col).select(group_cols + [item_col])
     return merge_groups(sel, group_cols, final, out_schema)
 
 

@@ -247,3 +247,32 @@ def test_aggregates_pinned(spark, pin_blobs):
     ).collect()
     assert len(rows) == 4
     assert _hash(rows) == AGG_PIN
+
+
+@pytest.mark.parametrize("position", [0, 1, 2])
+def test_null_in_any_argument_is_null(spark, pin_blobs, position):
+    """Every scalar function with a NULL at this argument position gives
+    NULL: no crash on ``int(s)`` of a NULL bound width, no answer for a
+    NULL rank, no 0 for a NULL frequent-items or count-min blob."""
+    types = dict(pin_blobs.dtypes)
+    calls = {
+        name: ", ".join(f"CAST(NULL AS {types[a]})" if j == position else a for j, a in enumerate(args))
+        for name, args in SCALAR_CALLS.items()
+        if len(args) > position
+    }
+    select = ", ".join(f"ds_{name}({a}) AS {name}" for name, a in calls.items())
+    rows = spark.sql(f"SELECT {select} FROM pin_blobs").collect()
+    got = {name: [r[name] for r in rows] for name in calls}
+    assert got == {name: [None] * len(rows) for name in calls}
+
+
+def test_nan_argument_is_a_value(spark, pin_blobs):
+    """A NaN rank or item is queried, not read as NULL: the searches put
+    NaN past every retained item."""
+    row = spark.sql(
+        "SELECT ds_kll_quantile(kl, CAST('NaN' AS DOUBLE)) AS q, ds_kll_quantile(kl, 1.0) AS top, "
+        "ds_kll_rank(kl, CAST('NaN' AS DOUBLE)) AS r, "
+        "ds_classic_rank(cq, CAST('NaN' AS DOUBLE)) AS cr FROM pin_blobs WHERE i = 0"
+    ).collect()[0]
+    assert row.q == row.top
+    assert row.r == row.cr == 1.0

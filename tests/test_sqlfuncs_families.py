@@ -299,33 +299,38 @@ def test_kll_classic_pmf_cdf_sql(sql_spark):
         assert cdf[-1] == 1.0
 
 
-def test_theta_data2sketch_nullable_bigint_groups_union_exactly(sql_spark):
-    """A BIGINT group containing a NULL reaches pandas as float64 (Arrow
-    null widening) — its values must hash exactly like the all-int
-    groups of the same column, or a union double-counts. 40 users split
-    across two groups (one with NULLs), 20 shared: exact-mode union must
-    report exactly 40."""
-    rows = [(1, int(v)) for v in range(40)]
-    rows += [(2, int(v)) for v in range(20, 60)]
-    rows += [(2, None), (2, None)]
-    from datasketches_cpp_spark import kmv
-    from datasketches_cpp_spark.functions import thetaserde
+BIG = 2**53
+D2S_CASES = {
+    # 40 users split across two groups (one with NULLs), 20 shared
+    "small": [(1, v) for v in range(40)] + [(2, v) for v in range(20, 60)] + [(2, None)] * 2,
+    # 2^53 + 1 and 2^53 are one value once widened to float64
+    "big": [(1, BIG + 1), (1, None), (2, BIG)],
+}
 
-    df = sql_spark.createDataFrame(rows, "g int, user_id long")
-    df.createOrReplaceTempView("t_nullable_ints")
-    blobs = {
-        r["g"]: bytes(r["sk"])
-        for r in sql_spark.sql(
-            "SELECT g, ds_theta_data2sketch(user_id) AS sk "
-            "FROM t_nullable_ints GROUP BY g"
-        ).collect()
-    }
 
-    def sk(b):
-        theta, hashes = thetaserde.deserialize_compact(b)
-        return kmv.ThetaSketch(
-            1 << 16, kmv.MAX_THETA if theta < 0 else theta, hashes
-        )
-
-    u = kmv.union([sk(blobs[1]), sk(blobs[2])])
-    assert u.get_estimate() == 60.0
+@pytest.mark.parametrize(
+    "family,case",
+    [("theta", "small"), ("theta", "big"), ("hll", "big"), ("cpc", "big")],
+    ids=["theta", "theta_big", "hll_big", "cpc_big"],
+)
+def test_theta_data2sketch_nullable_bigint_groups_union_exactly(sql_spark, family, case):
+    """A BIGINT group holding a NULL must hash its values exactly like the
+    null-free groups of the same column: else a union of the groups'
+    sketches double-counts, or (above 2^53, where float64 rounds) merges
+    distinct values. The union of the per-group blobs must equal one blob
+    over all non-null values, and in theta's exact mode COUNT(DISTINCT)."""
+    rows = D2S_CASES[case]
+    sql_spark.createDataFrame(rows, "g int, user_id long").createOrReplaceTempView(
+        "t_nullable_ints"
+    )
+    union = sql_spark.sql(
+        f"SELECT ds_{family}_estimate(ds_{family}_union(sk)) AS e FROM "
+        f"(SELECT ds_{family}_data2sketch(user_id) AS sk FROM t_nullable_ints GROUP BY g)"
+    ).collect()[0]["e"]
+    whole = sql_spark.sql(
+        f"SELECT ds_{family}_estimate(ds_{family}_data2sketch(user_id)) AS e "
+        "FROM t_nullable_ints WHERE user_id IS NOT NULL"
+    ).collect()[0]["e"]
+    assert union == whole
+    if family == "theta":
+        assert union == len({v for _, v in rows if v is not None})

@@ -223,29 +223,41 @@ def test_partial_groups_are_spark_groups(spark, one_shuffle_partition, case):
 
 
 @pytest.mark.parametrize(
-    "module,agg",
+    "module,agg,null_in",
     [
-        (hll, hll.hll_stream_agg),
-        (cpc, cpc.cpc_stream_agg),
-        (theta, theta.theta_sketch_agg),
-        (hll, hll.hll_sketch_agg),
-        (cpc, cpc.cpc_sketch_agg),
+        (hll, hll.hll_stream_agg, "other_group"),
+        (cpc, cpc.cpc_stream_agg, "other_group"),
+        (theta, theta.theta_sketch_agg, "other_group"),
+        (hll, hll.hll_sketch_agg, "other_group"),
+        (cpc, cpc.cpc_sketch_agg, "other_group"),
         # exact mode (k >= n): the partial's items come back as its output
-        (sampling, lambda df, g, item: sampling.var_opt_agg(df, g, item, None, k=64)),
+        (
+            sampling,
+            lambda df, g, item: sampling.var_opt_agg(df, g, item, None, k=64),
+            "other_group",
+        ),
+        (hll, hll.hll_stream_agg, "same_group"),
+        (cpc, cpc.cpc_stream_agg, "same_group"),
     ],
 )
 def test_stream_agg_items_above_2_53_beside_a_null_item(
-    spark, monkeypatch, one_shuffle_partition, module, agg
+    spark, monkeypatch, one_shuffle_partition, module, agg, null_in
 ):
-    """A null item in one group must not change the long items of another
-    group in the same batch (as float64 they would hash as different
-    values): the group comes out as it does without the other group. The
-    one-stage stream aggregates hand raw items to ``final``, which must
-    also match the grouped-map final."""
-    rows = [("a", None), ("a", 7)] + [("b", BIG + i) for i in range(1, 40)]
+    """A null item must not change the long items of its batch (as float64
+    they would hash as different values), whether it sits in another group
+    or in theirs: the group comes out as it does without the null. A group
+    of null items only gives no row. The one-stage stream aggregates hand
+    raw items to ``final``, which must also match the grouped-map final."""
+    if null_in == "other_group":
+        rows = [("a", None), ("a", 7)]
+    else:
+        rows = [("a", 7), ("b", None), ("c", None)]
+    rows += [("b", BIG + i) for i in range(1, 40)]
     df = spark.createDataFrame(rows, "g string, item long").repartition(1)
     got = _collected(agg(df, ["g"], "item"))
-    assert [r for r in got if r[0] == "b"] == _collected(agg(df.where("g = 'b'"), ["g"], "item"))
+    assert sorted({r[0] for r in got}) == ["a", "b"]
+    want_b = _collected(agg(df.where("g = 'b' AND item IS NOT NULL"), ["g"], "item"))
+    assert [r for r in got if r[0] == "b"] == want_b
     with monkeypatch.context() as m:
         m.setattr(module, "merge_groups", _reference)
         want = _collected(agg(df, ["g"], "item"))
