@@ -29,6 +29,17 @@ above 2^53. The partial stage converts each item column once per batch,
 an integer column with a null to exact Python ints, and the family turns
 it into per-row numpy arrays (hashes, say) that each group's update takes
 a slice of.
+
+``sketch_agg`` runs both stages for a family whose state is one sketch
+object per group (KLL, KLL over strings, REQ, classic quantiles, t-digest,
+density): ``update_batch`` folds, ``to_row`` emits, ``from_row`` and
+``merge`` combine the partials.
+
+``read_sketches`` is the reader of such states: one ``mapInArrow`` pass in
+which each row's sketch is decoded once and asked every question. Only
+the state columns go through pandas, converted as ``mapInPandas`` would;
+the other columns pass through in Arrow, so a long key beside a null key
+is not rounded.
 """
 
 from __future__ import annotations
@@ -41,7 +52,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import DoubleType, FloatType, StructType
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructField, StructType
 
 _NAN = object()  # NaN as a dict key: equal to itself, unlike float("nan")
 
@@ -292,3 +303,83 @@ def merge_groups(
     else:
         partials = partials.repartition(1)
     return partials.mapInArrow(merge_sorted_groups, schema)
+
+
+def sketch_agg(
+    df: DataFrame,
+    group_cols: list[str],
+    item_cols: list[str],
+    prepare: Callable[..., tuple[np.ndarray, ...]],
+    new: Callable[[], Any],
+    from_row: Callable[[dict], Any],
+    schema: StructType | str,
+) -> DataFrame:
+    """Both stages for a family whose state is a sketch with
+    ``update_batch``, ``merge`` and ``to_row``. The partial stage folds
+    each group's rows into ``new()`` (``prepare`` as in ``fold_partials``)
+    and emits ``to_row()``; the final merges ``from_row`` of each of the
+    group's partial rows into ``new()``, in order, and emits ``to_row()``,
+    whose keys are the columns of ``schema`` after the group columns."""
+    partials = fold_partials(
+        df, group_cols, item_cols, prepare, new,
+        lambda sk, *items: sk.update_batch(*items), lambda sk: [sk.to_row()], schema,
+    )
+
+    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+        sk = new()
+        # one Python step per partial sketch (plain dicts, no pandas rows)
+        for row in pdf.to_dict("records"):
+            sk.merge(from_row(row))
+        out = {c: [pdf[c].iloc[0]] for c in group_cols}
+        out.update({c: [v] for c, v in sk.to_row().items()})
+        return pd.DataFrame(out)
+
+    return merge_groups(partials, group_cols, final, schema)
+
+
+def read_sketches(
+    sketch_df: DataFrame,
+    state_cols: list[str],
+    answer: Callable[[dict], Any],
+    out: StructField,
+) -> DataFrame:
+    """``sketch_df`` with the column ``out`` added, or replaced in place
+    as ``withColumn`` does: in each row, ``answer(state)``, where
+    ``state`` maps the row's ``state_cols`` to their values."""
+    fields = [out if f.name == out.name else f for f in sketch_df.schema.fields]
+    schema = StructType(fields + ([] if out.name in sketch_df.columns else [out]))
+    timezone, safecheck, out_type = _worker_conf(sketch_df, schema)
+
+    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ser = _serializer(timezone, safecheck)
+        for batch in batches:
+            states = pd.concat(
+                [ser.arrow_to_pandas(batch.column(c), 0).rename(c) for c in state_cols], axis=1
+            )
+            answers = pd.Series(
+                [answer(row) for row in states.to_dict("records")], dtype=object, name=out.name
+            )
+            col = ser._create_array(answers, out_type[out.name].type, out.dataType)
+            cols = [col if f.name == out.name else batch.column(f.name) for f in out_type]
+            yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
+
+    return sketch_df.mapInArrow(read, schema)
+
+
+def read_columns(
+    sketch_df: DataFrame,
+    prefix: str,
+    state_cols: list[str],
+    answer: Callable[[dict], list[float]],
+    names: list[str],
+) -> DataFrame:
+    """``sketch_df`` without its columns whose names start with
+    ``prefix``, and with one double column per name in ``names``, read
+    from ``answer(state)``: the answers leave ``read_sketches`` as one
+    array, spread here in Spark."""
+    tmp = f"{prefix}answers"
+    out = read_sketches(
+        sketch_df, state_cols, answer, StructField(tmp, ArrayType(DoubleType()), True)
+    )
+    keep = [c for c in sketch_df.columns if not c.startswith(prefix)]
+    return out.select(*keep, *(out[tmp][i].alias(name) for i, name in enumerate(names)))

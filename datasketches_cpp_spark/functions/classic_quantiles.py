@@ -26,7 +26,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -36,12 +35,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import fold_partials, merge_groups
+from ._twostage import read_sketches, sketch_agg
+from .quantiles import SortedView, ViewQueries, _float_items
 
 DEFAULT_K = 128
 
 
-class ClassicQuantilesSketch:
+class ClassicQuantilesSketch(ViewQueries):
     """Single-node kernel; Spark wiring in classic_quantiles_agg below."""
 
     def __init__(self, k: int = DEFAULT_K, seed: int = 9001):
@@ -168,46 +168,13 @@ class ClassicQuantilesSketch:
 
     # -- queries -----------------------------------------------------------
 
-    def sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted values, cumulative weights)."""
-        vals = [self.base]
-        wts = [np.ones(len(self.base), np.int64)]
-        for lvl, arr in enumerate(self.levels):
-            if arr is not None:
-                vals.append(arr)
-                wts.append(np.full(len(arr), 1 << (lvl + 1), np.int64))
-        v = np.concatenate(vals) if vals else np.empty(0, np.float64)
-        w = np.concatenate(wts) if wts else np.empty(0, np.int64)
-        order = np.argsort(v, kind="stable")
-        return v[order], np.cumsum(w[order])
-
-    def get_quantile(self, rank: float) -> float:
-        if self.n == 0:
-            return math.nan
-        v, cw = self.sorted_view()
-        target = rank * cw[-1]
-        idx = int(np.searchsorted(cw, target, side="left"))
-        return float(v[min(idx, len(v) - 1)])
-
-    def get_rank(self, item: float, inclusive: bool = True) -> float:
-        if self.n == 0:
-            return math.nan
-        v, cw = self.sorted_view()
-        side = "right" if inclusive else "left"
-        idx = int(np.searchsorted(v, item, side=side))
-        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
-
-    def get_cdf(self, splits: np.ndarray) -> np.ndarray:
-        """Normalized CDF at the split points (+1 for the tail), the
-        reference's get_CDF query shape."""
-        splits = np.asarray(splits, np.float64)
-        return np.array([self.get_rank(s) for s in splits] + [1.0])
-
-    def get_pmf(self, splits: np.ndarray) -> np.ndarray:
-        return np.diff(self.get_cdf(splits), prepend=0.0)
-
-    def is_estimation_mode(self) -> bool:
-        return any(a is not None for a in self.levels)
+    def sorted_view(self) -> SortedView:
+        """The base buffer and the valid levels as one sorted view; a base
+        item weighs 1, an item of level l weighs 2^(l+1)."""
+        return SortedView.of(
+            [(self.base, 1)]
+            + [(a, 1 << (lvl + 1)) for lvl, a in enumerate(self.levels) if a is not None]
+        )
 
     def num_retained(self) -> int:
         return int(
@@ -278,23 +245,10 @@ def classic_quantiles_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    partials = fold_partials(
-        df, group_cols, [item_col],
-        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
-        lambda: ClassicQuantilesSketch(k, seed), ClassicQuantilesSketch.update_batch,
-        lambda sk: [sk.to_row()], schema,
+    return sketch_agg(
+        df, group_cols, [item_col], _float_items, lambda: ClassicQuantilesSketch(k, seed),
+        lambda row: ClassicQuantilesSketch.from_row(k, seed, row), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = ClassicQuantilesSketch(k, seed)
-        # one Python step per PARTIAL SKETCH (plain dicts, no pandas rows)
-        for row in pdf.to_dict("records"):
-            sk.merge(ClassicQuantilesSketch.from_row(k, seed, row))
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update({kk: [vv] for kk, vv in sk.to_row().items()})
-        return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_classic_quantiles(
@@ -304,24 +258,12 @@ def with_classic_quantiles(
     seed: int = 9001,
     out_col: str = "quantiles",
 ) -> DataFrame:
-    """Append array<double> of quantile estimates at ``ranks``."""
-    fields = [f.name for f in _sketch_fields()]
-    out_schema = StructType(
-        [f for f in sketch_df.schema.fields if f.name not in fields]
-        + [StructField("cq_n", LongType(), False),
-           StructField(out_col, ArrayType(DoubleType(), False), False)]
+    """Drop the state columns but ``cq_n`` and append array<double> of
+    quantile estimates at ``ranks``; an empty sketch's estimates read NULL."""
+    state = [f.name for f in _sketch_fields()]
+    out = read_sketches(
+        sketch_df, state,
+        lambda row: ClassicQuantilesSketch.from_row(k, seed, row).get_quantiles(ranks),
+        StructField(out_col, ArrayType(DoubleType()), False),
     )
-    other_cols = [f.name for f in sketch_df.schema.fields if f.name not in fields]
-
-    def read(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_rows = []
-        # one Python step per SKETCH row (plain dicts, no pandas rows)
-        for row in pdf.to_dict("records"):
-            sk = ClassicQuantilesSketch.from_row(k, seed, row)
-            r = {c: row[c] for c in other_cols}
-            r["cq_n"] = sk.n
-            r[out_col] = [sk.get_quantile(q) for q in ranks]
-            out_rows.append(r)
-        return pd.DataFrame(out_rows, columns=other_cols + ["cq_n", out_col])
-
-    return sketch_df.mapInPandas(lambda it: map(read, it), out_schema)
+    return out.select(*(c for c in sketch_df.columns if c not in state), "cq_n", out_col)

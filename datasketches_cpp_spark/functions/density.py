@@ -18,16 +18,15 @@ sequential keep/discard decisions (they are inherently ordered) but
 computes each step's kernel row vectorized against the whole level, and
 estimates evaluate as one (queries × points) matrix per level.
 
-Spark mapping (same contract as quantiles/tdigest aggs): partial sketches
-per input partition via _twostage.fold_partials (fold Arrow batches, compact at the
-k·levels bound), shuffle carries only O(k·log(n/k)·dim) floats per group,
+Spark mapping (same contract as quantiles/tdigest aggs, through
+_twostage.sketch_agg): partial sketches per input partition (fold Arrow
+batches, compact at the k·levels bound), shuffle carries only
+O(k·log(n/k)·dim) floats per group,
 final merge = level-wise concat + recompact (density_sketch_impl.hpp:105-111
 merge discipline).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import notna, read_columns, sketch_agg
 
 DEFAULT_K = 256
 
@@ -194,22 +193,11 @@ def density_sketch_agg(
     # null vectors are no-ops (the sketch-family convention — freq/theta/
     # countmin drop null items); without the filter a single NULL crashes
     # the whole batch with an inhomogeneous-shape ValueError
-    partials = fold_partials(
+    return sketch_agg(
         df.where(notna(df, vec_col)), group_cols, [vec_col], rows,
-        lambda: DensitySketch(k, dim, sigma, seed), DensitySketch.update_batch,
-        lambda ds: [ds.to_row()], schema,
+        lambda: DensitySketch(k, dim, sigma, seed),
+        lambda row: DensitySketch.from_row(k, dim, sigma, row, seed), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = DensitySketch(k, dim, sigma, seed)
-        # one Python step per PARTIAL SKETCH (plain dicts, no pandas rows)
-        for row in pdf.to_dict("records"):
-            ds.merge(DensitySketch.from_row(k, dim, sigma, row, seed))
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update({kk: [vv] for kk, vv in ds.to_row().items()})
-        return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_density_estimates(
@@ -221,27 +209,8 @@ def with_density_estimates(
 ) -> DataFrame:
     """Append density_<i> columns, one per query point."""
     q = np.asarray(query_points, np.float64).reshape(-1, dim)
-    out_cols = [f"density_{i}" for i in range(len(q))]
-    in_fields = sketch_df.schema.fields
-    schema = StructType(
-        [f for f in in_fields if not f.name.startswith("ds_")]
-        + [StructField(c, DoubleType(), True) for c in out_cols]
+    return read_columns(
+        sketch_df, "ds_", [f.name for f in _sketch_fields()],
+        lambda row: DensitySketch.from_row(k, dim, sigma, row).get_estimate(q).tolist(),
+        [f"density_{i}" for i in range(len(q))],
     )
-    keep = [f.name for f in in_fields if not f.name.startswith("ds_")]
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[keep].copy()
-            ests = []
-            # one Python step per SKETCH row (plain dicts, no pandas rows)
-            for row in pdf.to_dict("records"):
-                ds = DensitySketch.from_row(k, dim, sigma, row)
-                ests.append(ds.get_estimate(q))
-            ests = np.asarray(ests)
-            for i, c in enumerate(out_cols):
-                out[c] = ests[:, i]
-            yield out
-
-    return sketch_df.mapInPandas(compute, schema)

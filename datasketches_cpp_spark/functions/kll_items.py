@@ -2,11 +2,11 @@
 ``kll_sketch<T, C, SerDe>`` (kll_sketch.hpp:171-191) for non-numeric item
 types, concretely strings (the reference's own second-most-used
 configuration, kll_sketch_test string sections / serde.hpp:60-175
-length-prefixed string serde). Re-derived, not ported: same compaction
-law as functions/quantiles.KllSketch (ceil(k·(2/3)^depth) level caps,
-unbiased offset halving), but over numpy object arrays with Python
-ordering — any totally-ordered item type works; strings are the tested
-and Spark-wired case.
+length-prefixed string serde). Re-derived, not ported: it is
+functions/quantiles.KllSketch (ceil(k·(2/3)^depth) level caps, unbiased
+offset halving, the shared sorted view) over numpy object arrays with
+Python ordering — any totally-ordered item type works; strings are the
+tested and Spark-wired case.
 
 Wire format: identical preamble/level-offset layout to kllserde.py
 (family 15, v1 full / v2 single-item), with items encoded by the
@@ -17,34 +17,30 @@ writer agree on the item type out-of-band, exactly like the reference.
 
 from __future__ import annotations
 
-import math
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, StringType, StructField
 
-from .quantiles import _level_cap
-from ._twostage import fold_partials, merge_groups
+from .quantiles import KllSketch, _sketch_fields
+from ._twostage import read_sketches, sketch_agg
 
 DEFAULT_K = 200
 
 
-class KllItemSketch:
-    """KLL over arbitrary totally-ordered Python items (object ndarray)."""
+class KllItemSketch(KllSketch):
+    """KLL over arbitrary totally-ordered Python items (object ndarray):
+    KllSketch's compaction, sorted view and getters over object levels,
+    with min and max None while empty."""
 
-    __slots__ = ("k", "seed", "levels", "n", "min_item", "max_item", "ncomp")
+    __slots__ = ()
 
     def __init__(self, k: int = DEFAULT_K, seed: int = 9001):
-        self.k = k
-        self.seed = seed
-        self.levels: list[np.ndarray] = [np.empty(0, object)]
-        self.n = 0
+        super().__init__(k, seed)
+        self.levels = [np.empty(0, object)]
         self.min_item = None
         self.max_item = None
-        # per-compaction coin evolution — see quantiles.KllSketch.__init__
-        self.ncomp = 0
 
     # -- update ---------------------------------------------------------------
     def update_batch(self, items) -> None:
@@ -58,32 +54,6 @@ class KllItemSketch:
         self.levels[0] = np.concatenate([self.levels[0], arr])
         self._compress()
 
-    def _capacity(self) -> int:
-        h = len(self.levels)
-        return sum(_level_cap(self.k, h - 1 - lvl) for lvl in range(h))
-
-    def _compress(self) -> None:
-        while sum(len(b) for b in self.levels) >= self._capacity():
-            h = len(self.levels)
-            lvl = next(
-                (i for i in range(h)
-                 if len(self.levels[i]) >= _level_cap(self.k, h - 1 - i)),
-                None,
-            )
-            if lvl is None:
-                break
-            buf = np.sort(self.levels[lvl], kind="stable")
-            rng = np.random.default_rng(
-                (self.seed, lvl, len(buf), self.ncomp)
-            )
-            self.ncomp += 1
-            start = int(rng.integers(0, 2))
-            promoted = buf[start::2]
-            self.levels[lvl] = np.empty(0, object)
-            if lvl + 1 == len(self.levels):
-                self.levels.append(np.empty(0, object))
-            self.levels[lvl + 1] = np.concatenate([self.levels[lvl + 1], promoted])
-
     # -- merge ----------------------------------------------------------------
     def merge(self, other: "KllItemSketch") -> None:
         assert self.k == other.k, "merging sketches with different k"
@@ -94,44 +64,7 @@ class KllItemSketch:
             self.min_item = other.min_item
         if self.max_item is None or other.max_item > self.max_item:
             self.max_item = other.max_item
-        for i, buf in enumerate(other.levels):
-            if i >= len(self.levels):
-                self.levels.append(np.empty(0, object))
-            if len(buf):
-                self.levels[i] = np.concatenate([self.levels[i], buf])
-        self._compress()
-
-    # -- queries ---------------------------------------------------------------
-    def sorted_view(self):
-        items = np.concatenate(
-            [b for b in self.levels if len(b)] or [np.empty(0, object)]
-        )
-        weights = np.concatenate(
-            [np.full(len(b), 1 << i, np.int64)
-             for i, b in enumerate(self.levels) if len(b)]
-            or [np.empty(0, np.int64)]
-        )
-        order = np.argsort(items, kind="stable")
-        return items[order], np.cumsum(weights[order])
-
-    def get_quantile(self, rank: float):
-        if self.n == 0:
-            return None
-        v, cw = self.sorted_view()
-        target = rank * cw[-1]
-        idx = int(np.searchsorted(cw, target, side="left"))
-        return v[min(idx, len(v) - 1)]
-
-    def get_rank(self, item, inclusive: bool = True) -> float:
-        if self.n == 0:
-            return math.nan
-        v, cw = self.sorted_view()
-        side = "right" if inclusive else "left"
-        idx = int(np.searchsorted(v, item, side=side))
-        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
-
-    def num_retained(self) -> int:
-        return sum(len(b) for b in self.levels)
+        self._add_levels(other)
 
     # -- Spark row serde --------------------------------------------------------
     def to_row(self) -> dict:
@@ -296,21 +229,10 @@ def kll_string_agg(
         "kll_levels array<array<string>>"
     )
 
-    partials = fold_partials(
+    return sketch_agg(
         df, group_cols, [item_col], lambda s: (s.to_numpy(),), lambda: KllItemSketch(k, seed),
-        lambda sk, items: sk.update_batch(items.tolist()), lambda sk: [sk.to_row()], schema,
+        lambda row: KllItemSketch.from_row(k, seed, row), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllItemSketch(k, seed)
-        for row in pdf.to_dict("records"):
-            sk.merge(KllItemSketch.from_row(k, seed, row))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        for kk, v in sk.to_row().items():
-            out[kk] = [v]
-        return pd.DataFrame(out)
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_string_quantiles(
@@ -318,20 +240,8 @@ def with_string_quantiles(
     out_col: str = "quantiles",
 ) -> DataFrame:
     """Append array<string> of quantile estimates at the given ranks."""
-    fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sketch_df.schema.fields
+    return read_sketches(
+        sketch_df, [f.name for f in _sketch_fields()],
+        lambda row: KllItemSketch.from_row(k, seed, row).get_quantiles(ranks),
+        StructField(out_col, ArrayType(StringType()), True),
     )
-    schema = f"{fields}, {out_col} array<string>"
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                [KllItemSketch.from_row(k, seed, row).get_quantile(r) for r in ranks]
-                for row in pdf.to_dict("records")
-            ]
-            yield pdf
-
-    return sketch_df.mapInPandas(compute, schema)

@@ -25,16 +25,17 @@ same (level, fill) independent, which is what the unbiasedness argument
 in the error analysis needs (the reference draws a fresh bit each time). Exactness below capacity mirrors the reference's
 exact mode: until the first compaction the sketch IS the data.
 
-Spark mapping: partial sketches per input partition via
-``_twostage.fold_partials`` (map-side combine — the shuffle carries
-O(groups × partitions × k) floats, never raw rows), final merge via
-``_twostage.merge_groups``. Same explicit two-stage shape as
-functions/theta.py.
+Spark mapping: ``_twostage.sketch_agg`` — partial sketches per input
+partition (map-side combine — the shuffle carries O(groups × partitions ×
+k) floats, never raw rows), then the final merge. Same explicit two-stage
+shape as functions/theta.py. ``SortedView`` below is the query surface
+KLL shares with KLL over strings, REQ and classic quantiles.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -48,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import fold_partials, merge_groups
+from ._twostage import read_sketches, sketch_agg
 
 DEFAULT_K = 200
 _C = 2.0 / 3.0
@@ -59,7 +60,91 @@ def _level_cap(k: int, depth_from_top: int) -> int:
     return max(int(math.ceil(k * (_C ** depth_from_top))), _MIN_CAP)
 
 
-class KllSketch:
+class SortedView(NamedTuple):
+    """A sketch's retained items in ascending order with their cumulative
+    weights: the one query surface of KLL, KLL over strings, REQ and
+    classic quantiles, as the reference's quantiles_sorted_view.hpp:38-152
+    is theirs. t-digest's centroids form one too, for ``ks_delta``; its
+    own getters interpolate and share only ``check_rank``.
+
+    An empty view answers NaN, or None where its items are not floats
+    (KLL over strings)."""
+
+    items: np.ndarray
+    cum_weights: np.ndarray
+
+    @classmethod
+    def of(cls, buffers: Iterable[tuple[np.ndarray, int]]) -> "SortedView":
+        """The view of one or more (items, weight of each item) buffers,
+        in the given order: the stable sort keeps that order among equal
+        items."""
+        buffers = list(buffers)
+        items = np.concatenate([b for b, _ in buffers])
+        weights = np.concatenate([np.full(len(b), w, np.int64) for b, w in buffers])
+        order = np.argsort(items, kind="stable")
+        return cls(items[order], np.cumsum(weights[order]))
+
+    @staticmethod
+    def check_rank(rank: float) -> None:
+        """The reference's rank check: a rank is a number in [0, 1]."""
+        if not 0.0 <= rank <= 1.0:
+            raise ValueError(f"rank must be in [0, 1], got {rank}")
+
+    def quantiles(self, ranks: Iterable[float]) -> list:
+        """The item whose cumulative weight first reaches rank × total,
+        for each rank."""
+        ranks = list(ranks)
+        for r in ranks:
+            self.check_rank(r)
+        if not len(self.items):
+            return [math.nan if self.items.dtype.kind == "f" else None] * len(ranks)
+        cw = self.cum_weights
+        idx = np.searchsorted(cw, np.asarray(ranks, np.float64) * cw[-1], side="left")
+        return self.items[np.minimum(idx, len(self.items) - 1)].tolist()
+
+    def ranks(self, items, inclusive: bool = True) -> np.ndarray:
+        """The weight share of the retained items below each of ``items``
+        (at or below it if ``inclusive``)."""
+        if not len(self.items):
+            return np.full(len(items), math.nan)
+        idx = np.searchsorted(self.items, items, side="right" if inclusive else "left")
+        cw = self.cum_weights
+        return np.where(idx > 0, cw[np.maximum(idx - 1, 0)] / cw[-1], 0.0)
+
+    def rank(self, item, inclusive: bool = True) -> float:
+        return float(self.ranks([item], inclusive)[0])
+
+    def cdf(self, splits) -> np.ndarray:
+        """The inclusive rank at each split, and 1.0 for the tail."""
+        return np.append(self.ranks(np.asarray(splits, self.items.dtype)), 1.0)
+
+    def pmf(self, splits) -> np.ndarray:
+        return np.diff(self.cdf(splits), prepend=0.0)
+
+
+class ViewQueries:
+    """The getters of a sketch with a ``sorted_view()``: each builds the
+    view once and answers from it."""
+
+    __slots__ = ()
+
+    def get_quantile(self, rank: float):
+        return self.get_quantiles([rank])[0]
+
+    def get_quantiles(self, ranks) -> list:
+        return self.sorted_view().quantiles(ranks)
+
+    def get_rank(self, item, inclusive: bool = True) -> float:
+        return self.sorted_view().rank(item, inclusive)
+
+    def get_cdf(self, splits) -> np.ndarray:
+        return self.sorted_view().cdf(splits)
+
+    def get_pmf(self, splits) -> np.ndarray:
+        return self.sorted_view().pmf(splits)
+
+
+class KllSketch(ViewQueries):
     """Mutable KLL state over float64 items (pure numpy, no Spark)."""
 
     __slots__ = ("k", "seed", "levels", "n", "min_item", "max_item", "min_k", "ncomp")
@@ -128,9 +213,9 @@ class KllSketch:
             self.ncomp += 1
             start = int(rng.integers(0, 2))
             promoted = buf[start::2]
-            self.levels[lvl] = np.empty(0, np.float64)
+            self.levels[lvl] = np.empty(0, buf.dtype)
             if lvl + 1 == len(self.levels):
-                self.levels.append(np.empty(0, np.float64))
+                self.levels.append(np.empty(0, buf.dtype))
             self.levels[lvl + 1] = np.concatenate([self.levels[lvl + 1], promoted])
 
     # -- merge ----------------------------------------------------------------
@@ -147,48 +232,22 @@ class KllSketch:
         self.n += other.n
         self.min_item = min(self.min_item, other.min_item)
         self.max_item = max(self.max_item, other.max_item)
+        self._add_levels(other)
+
+    def _add_levels(self, other: "KllSketch") -> None:
+        """Concatenate ``other``'s levels index-wise onto these, then
+        re-compact."""
         for i, buf in enumerate(other.levels):
             if i >= len(self.levels):
-                self.levels.append(np.empty(0, np.float64))
+                self.levels.append(np.empty(0, buf.dtype))
             if len(buf):
                 self.levels[i] = np.concatenate([self.levels[i], buf])
         self._compress()
 
     # -- queries ----------------------------------------------------------------
-    def sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted items, cumulative weights) — quantiles_sorted_view."""
-        items = np.concatenate(
-            [b for b in self.levels if len(b)] or [np.empty(0, np.float64)]
-        )
-        weights = np.concatenate(
-            [np.full(len(b), 1 << i, np.int64) for i, b in enumerate(self.levels) if len(b)]
-            or [np.empty(0, np.int64)]
-        )
-        order = np.argsort(items, kind="stable")
-        return items[order], np.cumsum(weights[order])
-
-    def get_quantile(self, rank: float) -> float:
-        if self.n == 0:
-            return math.nan
-        items, cw = self.sorted_view()
-        target = rank * cw[-1]
-        idx = int(np.searchsorted(cw, target, side="left"))
-        return float(items[min(idx, len(items) - 1)])
-
-    def get_rank(self, item: float, inclusive: bool = True) -> float:
-        if self.n == 0:
-            return math.nan
-        items, cw = self.sorted_view()
-        side = "right" if inclusive else "left"
-        idx = int(np.searchsorted(items, item, side=side))
-        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
-
-    def get_cdf(self, splits: np.ndarray) -> np.ndarray:
-        return np.array([self.get_rank(s) for s in splits] + [1.0])
-
-    def get_pmf(self, splits: np.ndarray) -> np.ndarray:
-        cdf = self.get_cdf(splits)
-        return np.diff(np.concatenate([[0.0], cdf]))
+    def sorted_view(self) -> SortedView:
+        """The levels as one sorted view; an item of level i weighs 2^i."""
+        return SortedView.of((b, 1 << i) for i, b in enumerate(self.levels))
 
     def is_estimation_mode(self) -> bool:
         return len(self.levels) > 1
@@ -243,21 +302,17 @@ def ks_delta(a, b) -> float:
     """Max |CDF_a - CDF_b| over the union of retained items.
 
     Generic over any sketch exposing ``sorted_view()`` — KLL, classic
-    quantiles, REQ, and t-digest. The reference's template
+    quantiles, REQ, and t-digest: the shared ``SortedView`` is the
+    protocol, and its CDF is the one read here. The reference's template
     (kolmogorov_smirnov_impl.hpp delta(), over the sketch's sorted view)
     is instantiated by its tests only for KLL and classic; the engine
     keeps the same protocol and extends it to the other two quantile
     families (each with its own documented ks_epsilon envelope)."""
-    ia, ca = a.sorted_view()
-    ib, cb = b.sorted_view()
-    if len(ia) == 0 or len(ib) == 0:
+    va, vb = a.sorted_view(), b.sorted_view()
+    if len(va.items) == 0 or len(vb.items) == 0:
         return 0.0
-    pts = np.union1d(ia, ib)
-    ra = np.searchsorted(ia, pts, side="right")
-    rb = np.searchsorted(ib, pts, side="right")
-    fa = np.where(ra > 0, ca[np.maximum(ra - 1, 0)], 0) / ca[-1]
-    fb = np.where(rb > 0, cb[np.maximum(rb - 1, 0)], 0) / cb[-1]
-    return float(np.abs(fa - fb).max())
+    pts = np.union1d(va.items, vb.items)
+    return float(np.abs(va.ranks(pts) - vb.ranks(pts)).max())
 
 
 def ks_threshold(a, b, p_value: float) -> float:
@@ -290,6 +345,12 @@ def ks_test(a, b, p_value: float) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def _float_items(v: pd.Series) -> tuple[np.ndarray]:
+    """A batch's items as float64, null as NaN (which ``update_batch``
+    drops): the ``prepare`` of every float quantile family."""
+    return (v.to_numpy(dtype=np.float64, na_value=np.nan),)
+
+
 def _sketch_fields() -> list[StructField]:
     return [
         StructField("kll_n", LongType(), False),
@@ -312,21 +373,10 @@ def kll_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    partials = fold_partials(
-        df, group_cols, [item_col],
-        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
-        lambda: KllSketch(k, seed), KllSketch.update_batch, lambda sk: [sk.to_row()], schema,
+    return sketch_agg(
+        df, group_cols, [item_col], _float_items, lambda: KllSketch(k, seed),
+        lambda row: KllSketch.from_row(k, seed, row), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KllSketch(k, seed)
-        for row in pdf.to_dict("records"):
-            sk.merge(KllSketch.from_row(k, seed, row))
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update({kk: [vv] for kk, vv in sk.to_row().items()})
-        return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_quantiles(
@@ -337,22 +387,10 @@ def with_quantiles(
     out_col: str = "quantiles",
 ) -> DataFrame:
     """Append array<double> of quantile estimates at the given ranks."""
-    ranks_arr = list(ranks)
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def q(n: pd.Series, mn: pd.Series, mx: pd.Series, levels: pd.Series) -> pd.Series:
-        out = []
-        for i in range(len(n)):
-            sk = KllSketch.from_row(
-                k, seed,
-                {"kll_n": n.iloc[i], "kll_min": mn.iloc[i], "kll_max": mx.iloc[i],
-                 "kll_levels": levels.iloc[i]},
-            )
-            out.append([sk.get_quantile(r) for r in ranks_arr])
-        return pd.Series(out)
-
-    return sketch_df.withColumn(
-        out_col, q("kll_n", "kll_min", "kll_max", "kll_levels")
+    return read_sketches(
+        sketch_df, [f.name for f in _sketch_fields()],
+        lambda row: KllSketch.from_row(k, seed, row).get_quantiles(ranks),
+        StructField(out_col, ArrayType(DoubleType()), True),
     )
 
 

@@ -24,19 +24,18 @@ sliced vectorized, but the *rules* match the reference exactly:
 Why next to KLL/t-digest: REQ gives a GUARANTEED multiplicative (1±ε)
 rank error at the accurate tail — the strongest contract for p99.9+ cuts.
 
-Spark mapping (same contract as the other quantile aggs): partial REQ
-sketches per input partition via _twostage.fold_partials, shuffle carries level
-buffers only, final merge = level-wise concat + compress (the reference's
-merge discipline, req_sketch_impl.hpp compress loop :624-636).
+Spark mapping (same contract as the other quantile aggs, through
+_twostage.sketch_agg): partial REQ sketches per input partition, shuffle
+carries level buffers only, final merge = level-wise concat + compress
+(the reference's merge discipline, req_sketch_impl.hpp compress loop
+:624-636). Queries go through the shared quantiles.SortedView.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -47,7 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import fold_partials, merge_groups
+from ._twostage import read_columns, sketch_agg
+from .quantiles import SortedView, ViewQueries, _float_items
 
 MIN_K = 4
 INIT_NUM_SECTIONS = 3
@@ -124,7 +124,7 @@ def _trailing_zeros(x: np.uint64) -> int:
     return (v & -v).bit_length() - 1
 
 
-class ReqSketch:
+class ReqSketch(ViewQueries):
     """Driver/test-side REQ sketch; the Spark agg carries its fields as
     columns. hra=True (default, like the reference): high ranks accurate."""
 
@@ -204,11 +204,19 @@ class ReqSketch:
                 break
 
     # -- queries --------------------------------------------------------------
-    def sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """Public (sorted items, cumulative weights) — the protocol surface
-        the generic KS test consumes (quantiles.ks_delta), same shape as
-        KllSketch/ClassicQuantilesSketch.sorted_view."""
-        return self._sorted_view()
+    def sorted_view(self) -> SortedView:
+        """The compactors as one sorted view; an item of compactor h
+        weighs 2^h."""
+        return SortedView.of((c.buf, 1 << c.lg_weight) for c in self.compactors)
+
+    def get_quantiles(self, ranks) -> list[float]:
+        """REQ answers a rank of 0 or 1 with its exact min or max
+        (req_sketch_impl.hpp get_quantile), the others from the view."""
+        ranks = list(ranks)
+        qs = self.sorted_view().quantiles(ranks)
+        if self.n == 0:
+            return qs
+        return [self.min if r <= 0.0 else self.max if r >= 1.0 else q for r, q in zip(ranks, qs)]
 
     def ks_epsilon(self) -> float:
         """Additive rank-error term for the generic KS threshold. REQ's
@@ -257,47 +265,6 @@ class ReqSketch:
         )
         fixed = FIXED_RSE_FACTOR / self.k
         return min(rank + num_std_dev * relative, rank + num_std_dev * fixed)
-
-    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        items = np.concatenate([c.buf for c in self.compactors])
-        weights = np.concatenate(
-            [np.full(len(c.buf), 1 << c.lg_weight, np.int64) for c in self.compactors]
-        )
-        order = np.argsort(items, kind="stable")
-        return items[order], np.cumsum(weights[order])
-
-    def get_rank(self, item: float, inclusive: bool = True) -> float:
-        if self.n == 0:
-            return math.nan
-        items, cw = self._sorted_view()
-        side = "right" if inclusive else "left"
-        idx = int(np.searchsorted(items, item, side=side))
-        return float(cw[idx - 1] / cw[-1]) if idx > 0 else 0.0
-
-    def get_quantile(self, rank: float) -> float:
-        if self.n == 0:
-            return math.nan
-        if rank <= 0.0:
-            return self.min
-        if rank >= 1.0:
-            return self.max
-        items, cw = self._sorted_view()
-        target = rank * cw[-1]
-        idx = int(np.searchsorted(cw, target, side="left"))
-        return float(items[min(idx, len(items) - 1)])
-
-    def get_cdf(self, splits: np.ndarray) -> np.ndarray:
-        """Normalized CDF at the split points (+1 for the tail) — the
-        reference's get_CDF query shape (req_sketch.hpp get_CDF via
-        quantiles_sorted_view)."""
-        splits = np.asarray(splits, np.float64)
-        items, cw = self._sorted_view()
-        idx = np.searchsorted(items, splits, side="right")
-        cdf = np.where(idx > 0, cw[np.maximum(idx - 1, 0)] / cw[-1], 0.0)
-        return np.append(cdf, 1.0)
-
-    def get_pmf(self, splits: np.ndarray) -> np.ndarray:
-        return np.diff(self.get_cdf(splits), prepend=0.0)
 
     # -- bounds (req_sketch_impl.hpp:300-330) -----------------------------------
     @staticmethod
@@ -370,21 +337,10 @@ def req_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    partials = fold_partials(
-        df, group_cols, [item_col],
-        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
-        lambda: ReqSketch(k, hra, seed), ReqSketch.update_batch, lambda sk: [sk.to_row()], schema,
+    return sketch_agg(
+        df, group_cols, [item_col], _float_items, lambda: ReqSketch(k, hra, seed),
+        lambda row: ReqSketch.from_row(k, hra, row, seed), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = ReqSketch(k, hra, seed)
-        for row in pdf.to_dict("records"):
-            sk.merge(ReqSketch.from_row(k, hra, row, seed))
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update({kk: [vv] for kk, vv in sk.to_row().items()})
-        return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_req_quantiles(
@@ -394,26 +350,8 @@ def with_req_quantiles(
     hra: bool = True,
 ) -> DataFrame:
     """Append q_<rank> columns from the REQ state columns."""
-    out_cols = [f"q{str(r).replace('.', '_')}" for r in ranks]
-    in_fields = sketch_df.schema.fields
-    schema = StructType(
-        [f for f in in_fields if not f.name.startswith("req_")]
-        + [StructField(c, DoubleType(), True) for c in out_cols]
+    return read_columns(
+        sketch_df, "req_", [f.name for f in _sketch_fields()],
+        lambda row: ReqSketch.from_row(k, hra, row).get_quantiles(ranks),
+        [f"q{str(r).replace('.', '_')}" for r in ranks],
     )
-    keep = [f.name for f in in_fields if not f.name.startswith("req_")]
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[keep].copy()
-            qs: dict[str, list] = {c: [] for c in out_cols}
-            for row in pdf.to_dict("records"):
-                sk = ReqSketch.from_row(k, hra, row)
-                for r, c in zip(ranks, out_cols):
-                    qs[c].append(sk.get_quantile(r))
-            for c in out_cols:
-                out[c] = qs[c]
-            yield out
-
-    return sketch_df.mapInPandas(compute, schema)

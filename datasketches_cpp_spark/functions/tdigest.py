@@ -11,20 +11,18 @@ cluster with one `np.add.reduceat`. That keeps rank error ~q(1-q)/δ —
 accuracy concentrated at the tails, exactly where KLL's uniform rank error
 is the wrong tool (p99/p99.9 outlier-length cuts in LLM data pipelines).
 
-Spark mapping (same contract as quantiles.kll_sketch_agg): partial digests
-per input partition via `_twostage.fold_partials` (update = buffer + compress
-once per batch), shuffle carries only (≤ ~2δ centroids, min, max, n) per group, final
-merge = concat centroids + one recompress. Associative and bounded-size, so
-the shuffle never carries raw rows.
+Spark mapping (same contract as quantiles.kll_sketch_agg, through
+`_twostage.sketch_agg`): partial digests per input partition (update =
+buffer + compress once per batch), shuffle carries only (≤ ~2δ centroids,
+min, max, n) per group, final merge = concat centroids + one recompress.
+Associative and bounded-size, so the shuffle never carries raw rows.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -34,7 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._twostage import fold_partials, merge_groups
+from ._twostage import read_columns, sketch_agg
+from .quantiles import SortedView, _float_items
 
 DEFAULT_K = 200  # reference tdigest.hpp DEFAULT_K
 
@@ -122,12 +121,12 @@ class TDigest:
         )
 
     # -- queries --------------------------------------------------------------
-    def sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """(centroid means ascending, cumulative weights) — the point-mass
-        view the generic KS test consumes (quantiles.ks_delta); same
-        protocol shape as the KLL/classic/REQ sorted views."""
+    def sorted_view(self) -> SortedView:
+        """The centroids as point masses, means ascending: the view the
+        generic KS test consumes (quantiles.ks_delta). The getters below
+        interpolate instead of reading it."""
         order = np.argsort(self.means, kind="stable")
-        return self.means[order], np.cumsum(self.weights[order])
+        return SortedView(self.means[order], np.cumsum(self.weights[order]))
 
     def num_retained(self) -> int:
         return int(len(self.means))
@@ -157,6 +156,7 @@ class TDigest:
         mid-range rank error; rank queries (get_rank, which has no such
         transposition) match the reference bit-for-bit — verified against
         reference-generated fixtures in tests/test_reference_interop.py."""
+        SortedView.check_rank(rank)
         if self.n == 0:
             return math.nan
         m, w = self.means, self.weights
@@ -204,6 +204,9 @@ class TDigest:
         w1 = weight - (total - float(w[-1]) / 2.0)
         w2 = float(w[-1]) / 2.0 - w1
         return float((m[-1] * w2 + self.max * w1) / (w1 + w2))
+
+    def get_quantiles(self, ranks) -> list[float]:
+        return [self.get_quantile(r) for r in ranks]
 
     def get_rank(self, value: float) -> float:
         """The published t-digest rank rule (tdigest_impl.hpp get_rank):
@@ -295,48 +298,18 @@ def tdigest_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    partials = fold_partials(
-        df, group_cols, [item_col],
-        lambda v: (v.to_numpy(dtype=np.float64, na_value=np.nan),),
-        lambda: TDigest(delta), TDigest.update_batch, lambda td: [td.to_row()], schema,
+    return sketch_agg(
+        df, group_cols, [item_col], _float_items, lambda: TDigest(delta),
+        lambda row: TDigest.from_row(delta, row), schema,
     )
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        td = TDigest(delta)
-        for row in pdf.to_dict("records"):
-            td.merge(TDigest.from_row(delta, row))
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update({kk: [vv] for kk, vv in td.to_row().items()})
-        return pd.DataFrame(r, columns=group_cols + [f.name for f in _sketch_fields()])
-
-    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_tdigest_quantiles(
     sketch_df: DataFrame, ranks: list[float], delta: int = DEFAULT_K
 ) -> DataFrame:
-    """Append q_<rank> columns from the digest state columns (driver-light
-    pandas UDF over the ≤2δ-centroid rows)."""
-    out_cols = [f"q{str(r).replace('.', '_')}" for r in ranks]
-    in_fields = sketch_df.schema.fields
-    schema = StructType(
-        [f for f in in_fields if not f.name.startswith("td_")]
-        + [StructField(c, DoubleType(), True) for c in out_cols]
+    """Append q_<rank> columns from the digest state columns."""
+    return read_columns(
+        sketch_df, "td_", [f.name for f in _sketch_fields()],
+        lambda row: TDigest.from_row(delta, row).get_quantiles(ranks),
+        [f"q{str(r).replace('.', '_')}" for r in ranks],
     )
-    keep = [f.name for f in in_fields if not f.name.startswith("td_")]
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[keep].copy()
-            qs: dict[str, list] = {c: [] for c in out_cols}
-            for row in pdf.to_dict("records"):
-                td = TDigest.from_row(delta, row)
-                for r, c in zip(ranks, out_cols):
-                    qs[c].append(td.get_quantile(r))
-            for c in out_cols:
-                out[c] = qs[c]
-            yield out
-
-    return sketch_df.mapInPandas(compute, schema)

@@ -41,6 +41,12 @@ Design notes, 100 TB hat on:
   gives NULL; an aggregate folds its group's non-null values. A NaN is a
   value, not a NULL; a NaN answer (a quantile of an empty sketch) reads
   as NULL.
+* The rank rule of ``<prefix>kll_quantile``, ``classic_quantile``,
+  ``req_quantile`` and ``tdigest_quantile``: a rank is a number in
+  [0, 1], as in the reference, and any other rank, NaN included, fails
+  the query (``ValueError``). Rank 0 and rank 1 give the smallest and
+  largest retained item; REQ and t-digest give their exact min and max.
+  The first three search the shared ``quantiles.SortedView``.
 * A scalar function decodes each distinct blob once per Arrow batch and
   shares the decoded sketch between the batch's rows, so no query may
   change the sketch it is handed.

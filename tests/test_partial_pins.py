@@ -4,7 +4,9 @@ End hashes cannot see a change in the partial stage of an order-sensitive
 family (KLL, classic, t-digest, REQ, var-opt): a different batching or row
 order inside a group gives a different, equally valid merge tree. So each
 family's partial rows are read directly, by making the module's
-``merge_groups`` return its input, and hashed sorted by (keys, state).
+``merge_groups`` (or ``_twostage``'s, for a family that runs through
+``_twostage.sketch_agg``) return its input, and hashed sorted by (keys,
+state).
 
 The frame is deterministic, has six input partitions, and holds no null
 or NaN in its keys or items. The order-sensitive families are pinned again
@@ -18,6 +20,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from datasketches_cpp_spark.functions import (
+    _twostage,
     bloom,
     classic_quantiles,
     countmin,
@@ -133,7 +136,9 @@ def _canon(v):
 def _partial_hash(monkeypatch, family, df, group_cols):
     module, agg = FAMILIES[family]
     with monkeypatch.context() as m:
-        m.setattr(module, "merge_groups", lambda partials, *_: partials)
+        # a family that runs through sketch_agg reaches merge_groups there
+        target = module if hasattr(module, "merge_groups") else _twostage
+        m.setattr(target, "merge_groups", lambda partials, *_: partials)
         partials = agg(df, group_cols)
         # var-opt tags each partial with a random id so its final can
         # count every partial's totals once; the tag is not state

@@ -149,6 +149,25 @@ def test_ks_delta_pinned():
     assert _hash(got) == PINS["ks_delta"]
 
 
+@pytest.mark.parametrize("n", [0, 40])
+@pytest.mark.parametrize("rank", [math.nan, -0.5, 1.5])
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_rank_outside_unit_interval_raises(family, rank, n):
+    """A rank is a number in [0, 1], as in the reference; NaN is not one.
+    An empty sketch checks it too."""
+    with pytest.raises(ValueError, match="rank"):
+        _sketch(family, n).get_quantile(rank)
+
+
+@pytest.mark.parametrize("family", ["kll", "req", "classic"])
+def test_empty_sketch_cdf_and_pmf(family):
+    """An empty sketch has no distribution: NaN at every split, and 1.0
+    for the tail of the CDF."""
+    sk = FAMILIES[family]()
+    assert _canon(sk.get_cdf([1.0, 2.0])) == ("nan", "nan", (1.0).hex())
+    assert _canon(sk.get_pmf([1.0, 2.0])) == ("nan", "nan", "nan")
+
+
 # -- Spark: each aggregate and its reader ---------------------------------------
 
 POINTS = np.array([[1.0, 2.0], [40.0, 3.0]])
@@ -198,3 +217,10 @@ def test_aggregate_and_reader_pinned(spark, family):
     schema = [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields]
     assert _hash([schema, rows]) == SPARK_PINS[family]
 
+
+def test_classic_reader_answers_an_empty_group(spark):
+    """A group whose items are all null has an empty sketch, whose
+    quantiles read NULL, as ``with_quantiles`` gives them."""
+    sk = classic_quantiles.classic_quantiles_agg(_table(spark).where("g = 'gz'"), ["g"], "v", k=8)
+    out = classic_quantiles.with_classic_quantiles(sk, RANKS, k=8)
+    assert [tuple(r) for r in out.collect()] == [("gz", 0, [None] * len(RANKS))]

@@ -11,7 +11,8 @@ BIGINT, STRING and DOUBLE values and blob columns, and each result is
 hashed. The hashes were taken before the functions moved to ``arrow_udf``.
 
 The NULL rule is tested over the same table: a NULL in any argument of a
-scalar function gives NULL, and a NaN argument is a value, not a NULL.
+scalar function gives NULL, and a NaN argument is a value, not a NULL (a
+NaN rank is then refused, as a rank outside [0, 1]).
 """
 
 import hashlib
@@ -21,6 +22,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import PythonException
 
 from datasketches_cpp_spark import kmv
 from datasketches_cpp_spark.functions import hllserde, thetaserde
@@ -267,12 +269,15 @@ def test_null_in_any_argument_is_null(spark, pin_blobs, position):
 
 
 def test_nan_argument_is_a_value(spark, pin_blobs):
-    """A NaN rank or item is queried, not read as NULL: the searches put
-    NaN past every retained item."""
+    """A NaN rank or item is queried, not read as NULL: the searches put a
+    NaN item past every retained item, and a NaN rank, which is not in
+    [0, 1], fails the query as any rank outside [0, 1] does."""
+    with pytest.raises(PythonException, match="rank must be in"):
+        spark.sql(
+            "SELECT ds_kll_quantile(kl, CAST('NaN' AS DOUBLE)) AS q FROM pin_blobs WHERE i = 0"
+        ).collect()
     row = spark.sql(
-        "SELECT ds_kll_quantile(kl, CAST('NaN' AS DOUBLE)) AS q, ds_kll_quantile(kl, 1.0) AS top, "
-        "ds_kll_rank(kl, CAST('NaN' AS DOUBLE)) AS r, "
+        "SELECT ds_kll_rank(kl, CAST('NaN' AS DOUBLE)) AS r, "
         "ds_classic_rank(cq, CAST('NaN' AS DOUBLE)) AS cr FROM pin_blobs WHERE i = 0"
     ).collect()[0]
-    assert row.q == row.top
     assert row.r == row.cr == 1.0

@@ -20,6 +20,7 @@ from datasketches_cpp_spark.functions import (
     cpc,
     freq,
     hll,
+    kll_items,
     quantiles,
     req,
     sampling,
@@ -33,6 +34,12 @@ def _reference(partials, group_cols, final, schema):
     if group_cols:
         return partials.groupBy(*group_cols).applyInPandas(final, schema)
     return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+
+
+def _use_reference(m, module):
+    """Run ``module``'s final stage as ``_reference``: where the module
+    calls ``merge_groups``, or else where ``_twostage.sketch_agg`` does."""
+    m.setattr(module if hasattr(module, "merge_groups") else _twostage, "merge_groups", _reference)
 
 
 FAMILIES = {
@@ -107,7 +114,7 @@ def _same_as_reference(monkeypatch, family, df, group_cols):
     module, agg = FAMILIES[family]
     got = _rows(agg(df, group_cols), group_cols)
     with monkeypatch.context() as m:
-        m.setattr(module, "merge_groups", _reference)
+        _use_reference(m, module)
         want = _rows(agg(df, group_cols), group_cols)
     assert got == want
     return got
@@ -259,6 +266,30 @@ def test_stream_agg_items_above_2_53_beside_a_null_item(
     want_b = _collected(agg(df.where("g = 'b' AND item IS NOT NULL"), ["g"], "item"))
     assert [r for r in got if r[0] == "b"] == want_b
     with monkeypatch.context() as m:
-        m.setattr(module, "merge_groups", _reference)
+        _use_reference(m, module)
         want = _collected(agg(df, ["g"], "item"))
     assert got == want
+
+
+READERS = {
+    "kll": lambda df: quantiles.with_quantiles(quantiles.kll_sketch_agg(df, ["g"], "v"), [0.5]),
+    "kll_items": lambda df: kll_items.with_string_quantiles(
+        kll_items.kll_string_agg(df.selectExpr("g", "CAST(v AS STRING) AS v"), ["g"], "v"), [0.5]),
+    "classic": lambda df: classic_quantiles.with_classic_quantiles(
+        classic_quantiles.classic_quantiles_agg(df, ["g"], "v"), [0.5]),
+    "req": lambda df: req.with_req_quantiles(req.req_sketch_agg(df, ["g"], "v"), [0.5]),
+    "tdigest": lambda df: tdigest.with_tdigest_quantiles(
+        tdigest.tdigest_agg(df, ["g"], "v"), [0.5]),
+}
+
+
+@pytest.mark.parametrize("family", sorted(READERS))
+def test_readers_keep_long_keys_beside_a_null_key(spark, one_shuffle_partition, family):
+    """A reader passes the key columns through as they are: a null key in
+    the same Arrow batch must not turn long keys above 2^53 into
+    float64, which rounds them."""
+    df = spark.createDataFrame(
+        [(BIG + 1, 1.0), (None, 2.0), (BIG + 3, 3.0)], "g long, v double"
+    ).repartition(1)
+    got = sorted((r["g"] is None, r["g"] or 0) for r in READERS[family](df).collect())
+    assert got == [(False, BIG + 1), (False, BIG + 3), (True, 0)]
