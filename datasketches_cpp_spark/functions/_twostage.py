@@ -35,16 +35,20 @@ object per group (KLL, KLL over strings, REQ, classic quantiles, t-digest,
 density): ``update_batch`` folds, ``to_row`` emits, ``from_row`` and
 ``merge`` combine the partials.
 
-``read_sketches`` is the reader of such states: one ``mapInArrow`` pass in
-which each row's sketch is decoded once and asked every question. Only
-the state columns go through pandas, converted as ``mapInPandas`` would;
-the other columns pass through in Arrow, so a long key beside a null key
-is not rounded.
+``map_rows`` is the one per-row pass over a sketch table, behind every
+reader, serde writer and reader, probe and set-op: one ``mapInArrow`` call
+that hands a batch-level function the columns it reads, each converted by
+the ``_items`` rule (an integer column with a null arrives as exact Python
+ints), and adds one column per sequence the function returns. Every other
+column passes through in Arrow, untouched, so a long key beside a null key
+is not rounded; the columns the function consumed (a blob, a broadcast
+filter) can be dropped. ``read_sketches`` is its use for such states: each
+row's sketch is decoded once and asked every question.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterator
+from typing import Any, Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -52,7 +56,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, DoubleType, FloatType, StringType, StructField, StructType,
+)
 
 _NAN = object()  # NaN as a dict key: equal to itself, unlike float("nan")
 
@@ -337,6 +343,102 @@ def sketch_agg(
     return merge_groups(partials, group_cols, final, schema)
 
 
+def _answers(values: Sequence, name: str) -> pd.Series:
+    """A batch-level function's output column in pandas: a numpy array
+    keeps its dtype; any other sequence is held as objects, so Python
+    ints stay exact (a list of ints beside a None would become float64)."""
+    if isinstance(values, np.ndarray):
+        return pd.Series(values, name=name)
+    return pd.Series(values, dtype=object, name=name)
+
+
+def map_rows(
+    df: DataFrame,
+    in_cols: list[str],
+    fn: Callable[..., Sequence[Sequence]],
+    out: list[StructField],
+    drop: Iterable[str] = (),
+) -> DataFrame:
+    """``df`` without the columns ``drop`` and with the columns ``out``,
+    each added, or replacing a column of its name in place as
+    ``withColumn`` does. For each Arrow batch, ``fn`` gets the batch's
+    ``in_cols`` as pandas Series (see ``_items``) and returns one sequence
+    per field of ``out``, with one value per row; they are converted to
+    Arrow by PySpark's own pandas serializer, as a pandas map would
+    convert them. Every other column passes through in Arrow."""
+    drop = set(drop)
+    kept = [f for f in df.schema.fields if f.name not in drop]
+    made = {f.name: f for f in out}
+    names = {f.name for f in kept}
+    schema = StructType(
+        [made.get(f.name, f) for f in kept] + [f for f in out if f.name not in names]
+    )
+    timezone, safecheck, out_type = _worker_conf(df, schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ser = _serializer(timezone, safecheck)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            answers = fn(*(_items(batch.column(c), ser) for c in in_cols))
+            new = {
+                f.name: ser._create_array(
+                    _answers(a, f.name), out_type[f.name].type, f.dataType, arrow_cast=True
+                )
+                for f, a in zip(out, answers)
+            }
+            cols = [new[f.name] if f.name in new else batch.column(f.name) for f in out_type]
+            yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
+
+    return df.mapInArrow(run, schema)
+
+
+def pair_rows(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    key_cols: list[str],
+    value_cols: list[str],
+    pair: Callable[[tuple, tuple], dict],
+    out: str,
+) -> DataFrame:
+    """One row per key of two keyed sketch tables: ``key``, the key
+    values as text (``"|".join`` of their ``str``), then the columns of
+    the DDL ``out``, read from ``pair(a, b)``. ``a`` and ``b`` hold each
+    side's ``value_cols``, all None where that side has no row for the
+    key. The sides are full-outer joined on ``key_cols`` null-safely: a
+    null key meets a null key, as ``groupBy`` made each one group. With
+    no key columns, the (one-row) sides pair up under the key ""."""
+    join_cols = key_cols or ["_k"]
+    sides = []
+    for side, df in (("a", df_a), ("b", df_b)):
+        df = df.select(*key_cols, *value_cols)
+        if not key_cols:  # global (one-row) sketches: constant join key
+            df = df.withColumn("_k", F.lit(1))
+        sides.append(df.alias(side))
+    on = [F.col(f"a.`{c}`").eqNullSafe(F.col(f"b.`{c}`")) for c in join_cols]
+    joined = sides[0].join(sides[1], on, "full_outer").select(
+        *(F.coalesce(F.col(f"a.`{c}`"), F.col(f"b.`{c}`")).alias(c) for c in key_cols),
+        *(F.col(f"a.`{c}`").alias(f"{c}_a") for c in value_cols),
+        *(F.col(f"b.`{c}`").alias(f"{c}_b") for c in value_cols),
+    )
+    fields = [StructField("key", StringType(), True)] + StructType.fromDDL(out).fields
+    nk, nv = len(key_cols), len(value_cols)
+
+    def run(*cols: pd.Series) -> list[list]:
+        # one Python step per sketch PAIR (each carrying O(k) numpy
+        # work), never per data row
+        if key_cols:
+            keys = ["|".join(map(str, vals)) for vals in zip(*(c.to_numpy() for c in cols[:nk]))]
+        else:
+            keys = [""] * len(cols[0])
+        a = zip(*(c.to_numpy() for c in cols[nk:nk + nv]))
+        b = zip(*(c.to_numpy() for c in cols[nk + nv:]))
+        rows = [pair(x, y) for x, y in zip(a, b)]
+        return [keys] + [[r[f.name] for r in rows] for f in fields[1:]]
+
+    return map_rows(joined, joined.columns, run, fields, drop=joined.columns)
+
+
 def read_sketches(
     sketch_df: DataFrame,
     state_cols: list[str],
@@ -346,24 +448,12 @@ def read_sketches(
     """``sketch_df`` with the column ``out`` added, or replaced in place
     as ``withColumn`` does: in each row, ``answer(state)``, where
     ``state`` maps the row's ``state_cols`` to their values."""
-    fields = [out if f.name == out.name else f for f in sketch_df.schema.fields]
-    schema = StructType(fields + ([] if out.name in sketch_df.columns else [out]))
-    timezone, safecheck, out_type = _worker_conf(sketch_df, schema)
 
-    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ser = _serializer(timezone, safecheck)
-        for batch in batches:
-            states = pd.concat(
-                [ser.arrow_to_pandas(batch.column(c), 0).rename(c) for c in state_cols], axis=1
-            )
-            answers = pd.Series(
-                [answer(row) for row in states.to_dict("records")], dtype=object, name=out.name
-            )
-            col = ser._create_array(answers, out_type[out.name].type, out.dataType)
-            cols = [col if f.name == out.name else batch.column(f.name) for f in out_type]
-            yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
+    def read(*states: pd.Series) -> list[list]:
+        rows = pd.concat([s.rename(c) for c, s in zip(state_cols, states)], axis=1)
+        return [[answer(row) for row in rows.to_dict("records")]]
 
-    return sketch_df.mapInArrow(read, schema)
+    return map_rows(sketch_df, state_cols, read, [out])
 
 
 def read_columns(

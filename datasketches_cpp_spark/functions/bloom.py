@@ -23,17 +23,17 @@ because bloom never produces false negatives.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, StructField
 
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import fold_partials, map_rows, merge_groups, notna
 
 
 def suggest_num_bits(n: int, fpp: float) -> int:
@@ -118,6 +118,21 @@ def bloom_filter_agg(
     return merge_groups(partials, [], final, schema)
 
 
+def _contains(
+    items: pd.Series, dtype: str, bits: bytes, num_bits: int, num_hashes: int, seed: int
+) -> np.ndarray:
+    """Whether each item's bits are all set in the filter ``bits``. A
+    null item answers False: the filter was never updated with a null
+    (updates drop notna rows), so membership is definitively False."""
+    arr = np.frombuffer(bits, dtype=np.uint8)
+    valid = items.notna().to_numpy()
+    ans = np.zeros(len(items), bool)
+    if valid.any():
+        pos = _bit_positions(items[valid], dtype, num_bits, num_hashes, seed)  # (n, k)
+        ans[valid] = ((arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
+    return ans
+
+
 def might_contain(
     probe_df: DataFrame,
     filter_df: DataFrame,
@@ -128,38 +143,19 @@ def might_contain(
     filter to every probe partition. No false negatives — a False is
     definitive."""
     item_dtype = dict(probe_df.dtypes)[item_col]
-    joined = probe_df.crossJoin(
-        F.broadcast(filter_df.select("bits", "num_bits", "num_hashes", "seed"))
-    )
-    probe_cols = [c for c, _ in probe_df.dtypes]
-    schema = ", ".join(
-        [f"`{c}` {t}" for c, t in probe_df.dtypes] + [f"{out_col} boolean"]
-    )
+    filter_cols = ["bits", "num_bits", "num_hashes", "seed"]
+    joined = probe_df.crossJoin(F.broadcast(filter_df.select(*filter_cols)))
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            arr = np.frombuffer(pdf["bits"].iloc[0], dtype=np.uint8)
-            m = int(pdf["num_bits"].iloc[0])
-            k = int(pdf["num_hashes"].iloc[0])
-            seed = int(pdf["seed"].iloc[0])
-            # NULL probe keys: the filter was never updated with a null
-            # (updates drop notna rows), so membership is definitively
-            # False — without the mask a null-widened int column hashes
-            # NaN-cast garbage and answers randomly
-            valid = pdf[item_col].notna().to_numpy()
-            ans = np.zeros(len(pdf), bool)
-            if valid.any():
-                sub = pdf[item_col][valid]
-                pos = _bit_positions(sub, item_dtype, m, k, seed)  # (n, k)
-                bits = (arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-                ans[valid] = bits.all(axis=1)
-            out = pdf[probe_cols].copy()
-            out[out_col] = ans
-            yield out
+    def probe(items, bits, num_bits, num_hashes, seed):
+        return [_contains(
+            items, item_dtype, bits.iloc[0],
+            int(num_bits.iloc[0]), int(num_hashes.iloc[0]), int(seed.iloc[0]),
+        )]
 
-    return joined.mapInPandas(probe, schema)
+    return map_rows(
+        joined, [item_col] + filter_cols, probe,
+        [StructField(out_col, BooleanType(), True)], drop=filter_cols,
+    )
 
 
 _FILTER_SCHEMA = "bits binary, num_bits int, num_hashes int, seed long, n_items long"

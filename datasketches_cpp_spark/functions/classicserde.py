@@ -44,7 +44,7 @@ import struct
 
 import numpy as np
 
-from .classic_quantiles import ClassicQuantilesSketch
+from .classic_quantiles import ClassicQuantilesSketch, _sketch_fields
 
 _FAMILY = 8
 _SERIAL_VERSION = 3
@@ -159,52 +159,33 @@ def with_classic_bytes(sketch_df, k: int, out_col: str = "sketch_bytes",
     classic-quantiles sketch table (the row shape classic_quantiles_agg
     emits). The written parquet is directly consumable by any Java/C++
     DataSketches deployment standardized on the classic k=128 family."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
 
-    schema = StructType(list(sketch_df.schema.fields)
-                        + [StructField(out_col, BinaryType(), False)])
-    cols = [f.name for f in sketch_df.schema.fields]
+    from ._twostage import map_rows
 
-    def add_bytes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                serialize_classic(ClassicQuantilesSketch.from_row(k, seed, row))
-                for row in pdf.to_dict("records")
-            ]
-            yield pdf[cols + [out_col]]
+    state_cols = [f.name for f in _sketch_fields()]
 
-    return sketch_df.mapInPandas(add_bytes, schema)
+    def add_bytes(*states):
+        return [[
+            serialize_classic(ClassicQuantilesSketch.from_row(k, seed, dict(zip(state_cols, row))))
+            for row in zip(*states)
+        ]]
+
+    return map_rows(
+        sketch_df, state_cols, add_bytes, [StructField(out_col, BinaryType(), False)]
+    )
 
 
 def classic_from_bytes(blob_df, k: int, bytes_col: str = "sketch_bytes",
                        seed: int = 9001):
     """Inverse: BinaryType family-8 blobs (any of v1/v2/v3) → the engine's
     classic sketch row shape, mergeable/queryable by classic_quantiles.*."""
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
+    from ._twostage import map_rows
 
-    other = [f for f in blob_df.schema.fields if f.name != bytes_col]
-    schema = StructType(other + [
-        StructField("cq_n", LongType(), False),
-        StructField("cq_min", DoubleType(), True),
-        StructField("cq_max", DoubleType(), True),
-        StructField("cq_base", ArrayType(DoubleType(), False), False),
-        StructField("cq_levels", ArrayType(ArrayType(DoubleType(), False), False), False),
-    ])
-    names = [f.name for f in other]
+    out = _sketch_fields()
 
-    def parse(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows = [deserialize_classic(bytes(b), seed).to_row()
-                    for b in pdf[bytes_col]]
-            out = pdf[names].copy()
-            for col in ("cq_n", "cq_min", "cq_max", "cq_base", "cq_levels"):
-                out[col] = [r[col] for r in rows]
-            yield out
+    def parse(blobs):
+        rows = [deserialize_classic(bytes(b), seed).to_row() for b in blobs]
+        return [[r[f.name] for r in rows] for f in out]
 
-    return blob_df.mapInPandas(parse, schema)
+    return map_rows(blob_df, [bytes_col], parse, out, drop=[bytes_col])

@@ -23,17 +23,17 @@ table against the (small, usually broadcast) sketch row.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StructField
 
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import fold_partials, map_rows, merge_groups, notna
 
 
 def suggest_num_buckets(relative_error: float) -> int:
@@ -146,50 +146,43 @@ def estimate_frequencies(
     lower_bound long). With no join_cols the (single-row) sketch is
     cross-broadcast to every probe — the scale shape for 'one sketch, many
     lookups'. estimate = min over rows; bounds per count_min.hpp:71-88
-    (upper = est, lower = est - ε·total)."""
+    (upper = est, lower = est - ε·total). A null (or NaN) probe item
+    answers 0: the aggregate never counts one."""
     item_dtype = dict(probe_df.dtypes)[item_col]
     join_cols = join_cols or []
-    sk = sketch_df.select(
-        *(join_cols + ["cm_matrix", "cm_total", "num_hashes", "num_buckets", "seed"])
-    )
+    sketch_cols = ["cm_matrix", "cm_total", "num_hashes", "num_buckets", "seed"]
+    sk = sketch_df.select(*(join_cols + sketch_cols))
     joined = (
-        probe_df.join(F.broadcast(sk), join_cols)
+        probe_df.join(F.broadcast(sk), join_cols).select(
+            *(F.col(f"`{c}`") for c in probe_df.columns), *sketch_cols
+        )
         if join_cols
         else probe_df.crossJoin(F.broadcast(sk))
     )
-    out_fields = [f"`{c}` {t}" for c, t in probe_df.dtypes]
-    schema = ", ".join(
-        out_fields + ["estimate long", "upper_bound long", "lower_bound long"]
-    )
-    probe_cols = [c for c, _ in probe_df.dtypes]
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def probe(items, matrices, totals, num_hashes, num_buckets, seeds):
+        d = int(num_hashes.iloc[0])
+        w = int(num_buckets.iloc[0])
+        seed = int(seeds.iloc[0])
+        ests = np.zeros(len(items), dtype=np.int64)
+        eps_tot = np.zeros(len(items), dtype=np.int64)
+        valid = items.notna().to_numpy()
+        # group probes by identical sketch CONTENT (bytes), not id():
+        # after Arrow conversion every row's buffer is a distinct
+        # object, so id() made every group a single row and the
+        # vectorized hash/gather degenerated to a per-row loop
+        for idx in matrices.groupby(matrices.map(bytes), sort=False).indices.values():
+            idx = idx[valid[idx]]
+            if not len(idx):
                 continue
-            d = int(pdf["num_hashes"].iloc[0])
-            w = int(pdf["num_buckets"].iloc[0])
-            seed = int(pdf["seed"].iloc[0])
-            # group probes by identical sketch CONTENT (bytes), not id():
-            # after Arrow conversion every row's buffer is a distinct
-            # object, so id() made every group a single row and the
-            # vectorized hash/gather degenerated to a per-row loop
-            ests = np.empty(len(pdf), dtype=np.int64)
-            eps_tot = np.empty(len(pdf), dtype=np.int64)
-            for key, idx in pdf.groupby(
-                pdf["cm_matrix"].map(bytes), sort=False
-            ).indices.items():
-                mat = np.asarray(pdf["cm_matrix"].iloc[idx[0]], np.int64).reshape(d, w)
-                buckets = _row_hashes(pdf[item_col].iloc[idx], item_dtype, d, w, seed)
-                vals = mat[np.arange(d)[None, :], buckets]  # (n, d)
-                ests[idx] = vals.min(axis=1)
-                eps_tot[idx] = int(
-                    math.ceil(relative_error(w) * int(pdf["cm_total"].iloc[idx[0]]))
-                )
-            out = pdf[probe_cols].copy()
-            out["estimate"] = ests
-            out["upper_bound"] = ests
-            out["lower_bound"] = np.maximum(ests - eps_tot, 0)
-            yield out
+            mat = np.asarray(matrices.iloc[idx[0]], np.int64).reshape(d, w)
+            buckets = _row_hashes(items.iloc[idx], item_dtype, d, w, seed)
+            vals = mat[np.arange(d)[None, :], buckets]  # (n, d)
+            ests[idx] = vals.min(axis=1)
+            eps_tot[idx] = int(math.ceil(relative_error(w) * int(totals.iloc[idx[0]])))
+        return [ests, ests, np.maximum(ests - eps_tot, 0)]
 
-    return joined.mapInPandas(probe, schema)
+    out = [
+        StructField(c, LongType(), True) for c in ("estimate", "upper_bound", "lower_bound")
+    ]
+    return map_rows(joined, [item_col] + sketch_cols, probe, out, drop=sketch_cols)

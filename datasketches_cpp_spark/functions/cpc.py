@@ -43,10 +43,11 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField
 
 from ..hashing import DEFAULT_SEED
 from .tuplesketch import _hash_items
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import fold_partials, map_rows, merge_groups, notna
 
 
 def _coupons(hashes: np.ndarray, lg_k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -384,14 +385,11 @@ def with_estimate(
     """(lg_k, coupons) rows → + (estimate double, lower_bound, upper_bound).
 
     The inversion is a 64-term scalar computation per GROUP row (there is
-    one sketch row per group after the merge), so a pandas UDF over the
+    one sketch row per group after the merge), so a per-row pass over the
     handful of result rows is the right altitude — the data-sized work
     already happened in the two-stage agg."""
-    import pyspark.sql.functions as F
-    import pyspark.sql.types as T
 
-    @F.pandas_udf("estimate double, lower_bound double, upper_bound double")
-    def est(lg_ks: pd.Series, coupons: pd.Series) -> pd.DataFrame:
+    def est(lg_ks: pd.Series, coupons: pd.Series) -> list[np.ndarray]:
         n = len(lg_ks)
         e = np.empty(n, np.float64)
         lo = np.empty(n, np.float64)
@@ -402,17 +400,10 @@ def with_estimate(
             lg = int(lg_ks.iloc[i])
             e[i] = icon_estimate(c, lg)
             lo[i], hi[i] = icon_bounds(c, lg, num_std_devs)
-        return pd.DataFrame(
-            {"estimate": e, "lower_bound": lo, "upper_bound": hi}
-        )
+        return [e, lo, hi]
 
-    df = sketch_df.withColumn("_eb", est("lg_k", "coupons"))
-    return (
-        df.withColumn(out_col, F.col("_eb.estimate"))
-        .withColumn("lower_bound", F.col("_eb.lower_bound"))
-        .withColumn("upper_bound", F.col("_eb.upper_bound"))
-        .drop("_eb")
-    )
+    out = [StructField(c, DoubleType(), True) for c in (out_col, "lower_bound", "upper_bound")]
+    return map_rows(sketch_df, ["lg_k", "coupons"], est, out)
 
 
 def cpc_stream_agg(

@@ -613,52 +613,34 @@ def with_cpc_bytes(sketch_df, out_col: str = "sketch_bytes", seed: int = 9001):
     `cpc.cpc_sketch_agg` emits.  Streams are written in merged mode (ICON
     estimator on the reader side); parquet-writable and consumable by any
     DataSketches deployment."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
 
-    schema = StructType(
-        list(sketch_df.schema.fields) + [StructField(out_col, BinaryType(), False)]
+    from ._twostage import map_rows
+
+    def add_bytes(lg_ks, coupons):
+        return [[
+            serialize_cpc(np.asarray(arr, np.int64).view(np.uint64), int(lg_k), seed=seed)
+            for lg_k, arr in zip(lg_ks, coupons)
+        ]]
+
+    return map_rows(
+        sketch_df, ["lg_k", "coupons"], add_bytes, [StructField(out_col, BinaryType(), False)]
     )
-    cols = [f.name for f in sketch_df.schema.fields]
-
-    def add_bytes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                serialize_cpc(
-                    np.asarray(arr, np.int64).view(np.uint64), int(lg_k), seed=seed
-                )
-                for lg_k, arr in zip(pdf["lg_k"], pdf["coupons"])
-            ]
-            yield pdf[cols + [out_col]]
-
-    return sketch_df.mapInPandas(add_bytes, schema)
 
 
 def cpc_from_bytes(blob_df, bytes_col: str = "sketch_bytes", seed: int = 9001):
     """BinaryType reference CPC blobs → (lg_k int, coupons array<long>)
     rows ready for `cpc.cpc_union_agg` / `cpc.with_estimate`."""
-    from pyspark.sql.types import (
-        ArrayType, IntegerType, LongType, StructField, StructType,
-    )
+    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField
 
-    other = [f for f in blob_df.schema.fields if f.name != bytes_col]
-    schema = StructType(
-        other
-        + [StructField("lg_k", IntegerType(), False),
-           StructField("coupons", ArrayType(LongType(), False), False)]
-    )
-    names = [f.name for f in other]
+    from ._twostage import map_rows
 
-    def parse(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            states = [deserialize_cpc(bytes(b), seed=seed) for b in pdf[bytes_col]]
-            out = pdf[names].copy()
-            out["lg_k"] = [s["lg_k"] for s in states]
-            out["coupons"] = [s["matrix"].view(np.int64) for s in states]
-            yield out
+    def parse(blobs):
+        states = [deserialize_cpc(bytes(b), seed=seed) for b in blobs]
+        return [[s["lg_k"] for s in states], [s["matrix"].view(np.int64) for s in states]]
 
-    return blob_df.mapInPandas(parse, schema)
+    out = [
+        StructField("lg_k", IntegerType(), False),
+        StructField("coupons", ArrayType(LongType(), False), False),
+    ]
+    return map_rows(blob_df, [bytes_col], parse, out, drop=[bytes_col])

@@ -130,58 +130,41 @@ def with_density_bytes(
     carrying (ds_levels array<array<double>>, ds_n long) rows — the shape
     `density.density_sketch_agg` emits.  Parquet-writable and consumable
     by any DataSketches deployment."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
 
-    schema = StructType(
-        list(sketch_df.schema.fields) + [StructField(out_col, BinaryType(), False)]
+    from ._twostage import map_rows
+
+    def add_bytes(all_levels, ns):
+        return [[
+            serialize_density(
+                [np.asarray(lv, np.float64).reshape(-1, dim) for lv in levels],
+                int(n), k, dim, item_dtype=item_dtype,
+            )
+            for levels, n in zip(all_levels, ns)
+        ]]
+
+    return map_rows(
+        sketch_df, ["ds_levels", "ds_n"], add_bytes,
+        [StructField(out_col, BinaryType(), False)],
     )
-    cols = [f.name for f in sketch_df.schema.fields]
-
-    def add_bytes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                serialize_density(
-                    [np.asarray(lv, np.float64).reshape(-1, dim) for lv in levels],
-                    int(n), k, dim, item_dtype=item_dtype,
-                )
-                for levels, n in zip(pdf["ds_levels"], pdf["ds_n"])
-            ]
-            yield pdf[cols + [out_col]]
-
-    return sketch_df.mapInPandas(add_bytes, schema)
 
 
 def density_from_bytes(blob_df, bytes_col: str = "sketch_bytes", item_dtype: str = "<f4"):
     """Inverse: BinaryType reference density blobs → (ds_levels, ds_n)
     columns consumable by `density.with_density_estimates`."""
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 
-    other = [f for f in blob_df.schema.fields if f.name != bytes_col]
-    schema = StructType(
-        other
-        + [StructField("ds_levels", ArrayType(ArrayType(DoubleType(), False), False), False),
-           StructField("ds_n", LongType(), False)]
-    )
-    names = [f.name for f in other]
+    from ._twostage import map_rows
 
-    def parse(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            states = [
-                deserialize_density(bytes(b), item_dtype=item_dtype)
-                for b in pdf[bytes_col]
-            ]
-            out = pdf[names].copy()
-            out["ds_levels"] = [
-                [lv.ravel() for lv in s["levels"]] for s in states
-            ]
-            out["ds_n"] = [s["n"] for s in states]
-            yield out
+    def parse(blobs):
+        states = [deserialize_density(bytes(b), item_dtype=item_dtype) for b in blobs]
+        return [
+            [[lv.ravel() for lv in s["levels"]] for s in states],
+            [s["n"] for s in states],
+        ]
 
-    return blob_df.mapInPandas(parse, schema)
+    out = [
+        StructField("ds_levels", ArrayType(ArrayType(DoubleType(), False), False), False),
+        StructField("ds_n", LongType(), False),
+    ]
+    return map_rows(blob_df, [bytes_col], parse, out, drop=[bytes_col])

@@ -36,12 +36,6 @@ from ._twostage import fold_partials, merge_groups, notna
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
 
-EPSILON_FACTOR = 3.5  # a-priori ε = 3.5 / max_map_size (reference :170-183)
-
-
-def a_priori_error(max_map_size: int, total_weight: float) -> float:
-    return EPSILON_FACTOR / max_map_size * total_weight
-
 
 class MGState:
     """One group's Misra-Gries state: {item: over-estimate}, offset."""

@@ -374,26 +374,14 @@ def with_hll_bytes(regs_df, lg_k: int, regs_col: str = "regs", out_col: str = "s
     carrying K-byte register states (the shape `hll.hll_sketch_agg(...,
     keep_registers=True)` emits). Parquet-writable, consumable by any
     DataSketches deployment."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
 
-    schema = StructType(
-        list(regs_df.schema.fields) + [StructField(out_col, BinaryType(), False)]
-    )
-    cols = [f.name for f in regs_df.schema.fields]
+    from ._twostage import map_rows
 
-    def add(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                serialize_hll8(np.frombuffer(b, np.uint8), lg_k)
-                for b in pdf[regs_col]
-            ]
-            yield pdf[cols + [out_col]]
+    def add(regs):
+        return [[serialize_hll8(np.frombuffer(b, np.uint8), lg_k) for b in regs]]
 
-    return regs_df.mapInPandas(add, schema)
+    return map_rows(regs_df, [regs_col], add, [StructField(out_col, BinaryType(), False)])
 
 
 def hll_from_bytes(blob_df, lg_k: int, bytes_col: str = "sketch_bytes",
@@ -403,27 +391,22 @@ def hll_from_bytes(blob_df, lg_k: int, bytes_col: str = "sketch_bytes",
     column mergeable by hll.hll_merge_sketches. All blobs must carry the
     given lg_k (cross-lg_k union needs the reference's downsampling
     semantics, which this engine does not re-derive — fail fast instead)."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
 
-    other = [f for f in blob_df.schema.fields if f.name != bytes_col]
-    schema = StructType(other + [StructField(out_col, BinaryType(), False)])
-    names = [f.name for f in other]
+    from ._twostage import map_rows
 
-    def parse(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            regs_out = []
-            for b in pdf[bytes_col]:
-                got_lg_k, regs = deserialize_hll(bytes(b))
-                if got_lg_k != lg_k:
-                    raise HllSerdeError(
-                        f"stream lg_k {got_lg_k} != requested {lg_k}; "
-                        "cross-lg_k merge is out of scope"
-                    )
-                regs_out.append(regs.tobytes())
-            out = pdf[names].copy()
-            out[out_col] = regs_out
-            yield out
+    def parse(blobs):
+        regs_out = []
+        for b in blobs:
+            got_lg_k, regs = deserialize_hll(bytes(b))
+            if got_lg_k != lg_k:
+                raise HllSerdeError(
+                    f"stream lg_k {got_lg_k} != requested {lg_k}; "
+                    "cross-lg_k merge is out of scope"
+                )
+            regs_out.append(regs.tobytes())
+        return [regs_out]
 
-    return blob_df.mapInPandas(parse, schema)
+    return map_rows(
+        blob_df, [bytes_col], parse, [StructField(out_col, BinaryType(), False)], drop=[bytes_col]
+    )

@@ -39,7 +39,6 @@ from typing import Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -89,6 +88,12 @@ class SortedView(NamedTuple):
         """The reference's rank check: a rank is a number in [0, 1]."""
         if not 0.0 <= rank <= 1.0:
             raise ValueError(f"rank must be in [0, 1], got {rank}")
+
+    @staticmethod
+    def ranks_last(item) -> bool:
+        """The item rule: a NaN item sorts above every retained item, where
+        ``searchsorted`` places it, so every family ranks it 1.0."""
+        return item != item
 
     def quantiles(self, ranks: Iterable[float]) -> list:
         """The item whose cumulative weight first reaches rank × total,
@@ -393,18 +398,3 @@ def with_quantiles(
         StructField(out_col, ArrayType(DoubleType()), True),
     )
 
-
-def exact_percentiles(
-    df: DataFrame, group_cols: list[str], item_col: str, percents: list[float]
-) -> DataFrame:
-    """The exact relational twin (Spark builtin `percentile`, discrete
-    interpolation-free variant via sort) — used as the oracle-checkable
-    quantile query; the KLL path above covers the sketched/mergeable role
-    at scale (one pass, bounded memory, re-aggregatable)."""
-    agg = [
-        F.expr(
-            f"percentile_approx({item_col}, {p}, 2147483647)"
-        ).alias(f"p{int(p * 100):02d}")
-        for p in percents
-    ]
-    return df.groupBy(*group_cols).agg(*agg) if group_cols else df.agg(*agg)

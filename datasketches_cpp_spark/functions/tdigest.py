@@ -216,7 +216,7 @@ class TDigest:
             return math.nan
         if value < self.min:
             return 0.0
-        if value > self.max:
+        if value > self.max or SortedView.ranks_last(value):
             return 1.0
         m, w = self.means, self.weights
         if len(m) == 1:

@@ -33,7 +33,7 @@ from ..hashing import DEFAULT_SEED, hash63_bytes_many, hash63_int64, hash63_str_
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import fold_partials, merge_groups, notna, pair_rows
 
 
 def _hash_series(s: pd.Series, dtype: str, seed: int) -> np.ndarray:
@@ -236,7 +236,11 @@ def theta_union_agg(sketch_df: DataFrame, group_cols: list[str], k: int) -> Data
     return _final_merge(sketch_df, group_cols, k, schema)
 
 
-_SETOP_SCHEMA = "key string, theta long, sig array<long>, est_a double, est_b double, est_union double, est_intersection double, est_a_not_b double, jaccard double, jaccard_lb double, jaccard_ub double"
+_SETOP_SCHEMA = (
+    "theta long, sig array<long>, est_a double, est_b double, est_union double, "
+    "est_intersection double, est_a_not_b double, jaccard double, jaccard_lb double, "
+    "jaccard_ub double"
+)
 
 
 def theta_pair_set_ops(
@@ -245,60 +249,29 @@ def theta_pair_set_ops(
     """Join two keyed sketch tables and compute union / intersection /
     a-not-b / jaccard per key in one vectorized pass (the S7 verification
     math on arbitrary keyed sketches). Missing side = empty sketch."""
-    a = df_a.select(
-        *key_cols, F.col("theta").alias("theta_a"), F.col("sig").alias("sig_a")
-    )
-    b = df_b.select(
-        *key_cols, F.col("theta").alias("theta_b"), F.col("sig").alias("sig_b")
-    )
-    joined = a.join(b, key_cols, "full_outer")
-
     from ..kmv import ThetaSketch, a_not_b, intersection, jaccard, union
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Column-zip iteration: one Python step per SKETCH PAIR (each
-        # carrying O(k) numpy work), never per data row — no pandas
-        # row-object construction in the loop.
-        def mk(theta, sig):
-            if sig is None or (isinstance(sig, float) and pd.isna(sig)):
-                return ThetaSketch(k, MAX_THETA)
-            arr = np.asarray(sig, dtype=np.int64).astype(np.uint64)
-            return ThetaSketch(k, _decode_theta(int(theta)), arr)
+    def mk(theta, sig):
+        if sig is None:
+            return ThetaSketch(k, MAX_THETA)
+        arr = np.asarray(sig, dtype=np.int64).astype(np.uint64)
+        return ThetaSketch(k, _decode_theta(int(theta)), arr)
 
-        if key_cols:
-            keys = [
-                "|".join(map(str, vals))
-                for vals in zip(*(pdf[c].to_numpy() for c in key_cols))
-            ]
-        else:
-            keys = [""] * len(pdf)
-        out = []
-        for key, theta_a, sig_a, theta_b, sig_b in zip(
-            keys,
-            pdf["theta_a"].to_numpy(),
-            pdf["sig_a"].to_numpy(),
-            pdf["theta_b"].to_numpy(),
-            pdf["sig_b"].to_numpy(),
-        ):
-            sa = mk(theta_a if pd.notna(theta_a) else -1, sig_a)
-            sb = mk(theta_b if pd.notna(theta_b) else -1, sig_b)
-            u = union([sa, sb], k=k)
-            jl, je, ju = jaccard(sa, sb)
-            out.append(
-                {
-                    "key": key,
-                    "theta": _encode_theta(u.theta),
-                    "sig": u.hashes.astype(np.int64),
-                    "est_a": sa.get_estimate(),
-                    "est_b": sb.get_estimate(),
-                    "est_union": u.get_estimate(),
-                    "est_intersection": intersection(sa, sb).get_estimate(),
-                    "est_a_not_b": a_not_b(sa, sb).get_estimate(),
-                    "jaccard": je,
-                    "jaccard_lb": jl,
-                    "jaccard_ub": ju,
-                }
-            )
-        return pd.DataFrame(out)
+    def pair(a: tuple, b: tuple) -> dict:
+        sa, sb = mk(*a), mk(*b)
+        u = union([sa, sb], k=k)
+        jl, je, ju = jaccard(sa, sb)
+        return {
+            "theta": _encode_theta(u.theta),
+            "sig": u.hashes.astype(np.int64),
+            "est_a": sa.get_estimate(),
+            "est_b": sb.get_estimate(),
+            "est_union": u.get_estimate(),
+            "est_intersection": intersection(sa, sb).get_estimate(),
+            "est_a_not_b": a_not_b(sa, sb).get_estimate(),
+            "jaccard": je,
+            "jaccard_lb": jl,
+            "jaccard_ub": ju,
+        }
 
-    return joined.mapInPandas(lambda it: (compute(pdf) for pdf in it), _SETOP_SCHEMA)
+    return pair_rows(df_a, df_b, key_cols, ["theta", "sig"], pair, _SETOP_SCHEMA)

@@ -362,53 +362,33 @@ def with_theta_bytes(
     Writing the result to parquet yields a table ANY DataSketches
     deployment (Java/C++/Python binding) can consume — the interop path
     the parquet-array checkpoint format deliberately is not."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StructField, StructType
+    from pyspark.sql.types import BinaryType, StructField
+
+    from ._twostage import map_rows
 
     ser = serialize_compressed if compressed else serialize_compact_v3
-    schema = StructType(list(sketch_df.schema.fields) + [StructField(out_col, BinaryType(), False)])
-    cols = [f.name for f in sketch_df.schema.fields]
 
-    def add_bytes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                ser(int(t), np.asarray(s, np.int64), seed)
-                for t, s in zip(pdf["theta"], pdf["sig"])
-            ]
-            yield pdf[cols + [out_col]]
+    def add_bytes(thetas, sigs):
+        return [[ser(int(t), np.asarray(s, np.int64), seed) for t, s in zip(thetas, sigs)]]
 
-    return sketch_df.mapInPandas(add_bytes, schema)
+    return map_rows(
+        sketch_df, ["theta", "sig"], add_bytes, [StructField(out_col, BinaryType(), False)]
+    )
 
 
 def theta_from_bytes(blob_df, bytes_col: str = "sketch_bytes", seed: int = DEFAULT_SEED):
     """Inverse: a BinaryType column of v3/v4 reference blobs → (theta, sig)
     columns consumable by the engine's set ops / estimators."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, LongType, StructField
 
-    other = [f for f in blob_df.schema.fields if f.name != bytes_col]
-    schema = StructType(
-        other
-        + [StructField("theta", LongType(), False),
-           StructField("sig", ArrayType(LongType(), False), False)]
-    )
-    names = [f.name for f in other]
+    from ._twostage import map_rows
 
-    def parse(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            thetas, sigs = [], []
-            for b in pdf[bytes_col]:
-                t, e = deserialize_compact(bytes(b), seed)
-                thetas.append(t)
-                sigs.append(e.tolist())
-            out = pdf[names].copy()
-            out["theta"] = thetas
-            out["sig"] = sigs
-            yield out
+    def parse(blobs):
+        parsed = [deserialize_compact(bytes(b), seed) for b in blobs]
+        return [[t for t, _ in parsed], [e.tolist() for _, e in parsed]]
 
-    return blob_df.mapInPandas(parse, schema)
+    out = [
+        StructField("theta", LongType(), False),
+        StructField("sig", ArrayType(LongType(), False), False),
+    ]
+    return map_rows(blob_df, [bytes_col], parse, out, drop=[bytes_col])

@@ -28,7 +28,7 @@ from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 from ..kmv import MAX_THETA
 
 from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
-from ._twostage import fold_partials, merge_groups, notna
+from ._twostage import fold_partials, merge_groups, notna, pair_rows
 
 _POLICIES = {"sum": "sum", "max": "max", "min": "min", "one": "first"}
 
@@ -189,13 +189,79 @@ def _combine_summaries(sa: np.ndarray, sb: np.ndarray, policy: str) -> np.ndarra
     raise ValueError(f"unknown policy {policy!r}")
 
 
-_TUPLE_SETOP_SCHEMA = (
-    "key string, theta long, "
-    "est_a double, est_b double, est_union double, "
-    "est_intersection double, est_a_not_b double, "
-    "sum_a double, sum_b double, sum_union double, "
-    "sum_intersection double, sum_a_not_b double"
-)
+def _tuple_set_ops(a: tuple, b: tuple, k: int, d: int, policy: str) -> tuple[int, dict]:
+    """The set-ops of one key's pair of tuple sketches, each side a
+    (theta, sig, summaries) triple (all None for a missing side, which is
+    an empty sketch) with summaries of width ``d``: the result's theta,
+    and for each of a, b, union, intersection and a-not-b its retained
+    count and summary rows (m, d)."""
+
+    def side(theta_enc, sig, summ):
+        if sig is None:
+            return MAX_THETA, np.empty(0, np.uint64), np.empty((0, d), np.float64)
+        t = MAX_THETA if int(theta_enc) < 0 else int(theta_enc)
+        h = np.asarray(sig, np.int64).view(np.uint64)
+        return t, h, np.asarray(summ, np.float64).reshape(-1, d)
+
+    ta, ha, sa = side(*a)
+    tb, hb, sb = side(*b)
+    theta = min(ta, tb)
+    # screen both to < min theta (sigs are sorted ascending)
+    ca = int(np.searchsorted(ha, np.uint64(theta)))
+    cb = int(np.searchsorted(hb, np.uint64(theta)))
+    ha, sa_s = ha[:ca], sa[:ca]
+    hb, sb_s = hb[:cb], sb[:cb]
+
+    common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
+    mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
+    mask_b_only = np.ones(len(hb), bool); mask_b_only[ib] = False
+
+    u_h = np.concatenate([common, ha[mask_a_only], hb[mask_b_only]])
+    u_s = np.concatenate([
+        _combine_summaries(sa_s[ia], sb_s[ib], policy),
+        sa_s[mask_a_only],
+        sb_s[mask_b_only],
+    ])
+    order = np.argsort(u_h, kind="stable")
+    u_h, u_s = u_h[order], u_s[order]
+    if len(u_h) > k:  # union re-trim, lowering theta (min-theta merge law)
+        theta = int(u_h[k])
+        u_h, u_s = u_h[:k], u_s[:k]
+        ca = int(np.searchsorted(ha, np.uint64(theta)))
+        cb = int(np.searchsorted(hb, np.uint64(theta)))
+        ha, sa_s = ha[:ca], sa[:ca]
+        hb, sb_s = hb[:cb], sb[:cb]
+        common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
+        mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
+
+    i_s = _combine_summaries(sa_s[ia], sb_s[ib], policy)
+    return theta, {
+        "a": (len(ha), sa_s),
+        "b": (len(hb), sb_s),
+        "union": (len(u_h), u_s),
+        "intersection": (len(common), i_s),
+        "a_not_b": (int(mask_a_only.sum()), sa_s[mask_a_only]),
+    }
+
+
+def _tuple_pair_set_ops(
+    df_a: DataFrame, df_b: DataFrame, key_cols: list[str], k: int, d: int, policy: str,
+    summed: str, total, out: str,
+) -> DataFrame:
+    """``_tuple_set_ops`` per key of two keyed tuple sketch tables: each
+    set-op's distinct-key estimate ``est_*`` and its summaries' estimated
+    population sum ``<summed>_*``, ``total(rows, frac)``."""
+
+    def pair(a: tuple, b: tuple) -> dict:
+        theta, parts = _tuple_set_ops(a, b, k, d, policy)
+        frac = theta / float(MAX_THETA)
+        row = {"theta": -1 if theta >= MAX_THETA else theta}
+        for name, (n, rows) in parts.items():
+            row[f"est_{name}"] = float(n) / frac
+            row[f"{summed}_{name}"] = total(rows, frac)
+        return row
+
+    return pair_rows(df_a, df_b, key_cols, ["theta", "sig", "summaries"], pair, out)
 
 
 def tuple_pair_set_ops(
@@ -217,112 +283,15 @@ def tuple_pair_set_ops(
     each set op: a key in both sides contributes policy(sum_a, sum_b) to
     the union / intersection summaries; a-not-b keeps A's summaries.
     Missing side = empty sketch. Exact when both sides are exact-mode."""
-    join_cols = key_cols or ["_k"]
-    a = df_a.select(
-        *key_cols,
-        F.col("theta").alias("theta_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("summaries").alias("sum_col_a"),
+    return _tuple_pair_set_ops(
+        df_a, df_b, key_cols, k, 1, policy, "sum",
+        lambda rows, frac: float(rows.sum()) / frac,
+        "theta long, "
+        "est_a double, est_b double, est_union double, "
+        "est_intersection double, est_a_not_b double, "
+        "sum_a double, sum_b double, sum_union double, "
+        "sum_intersection double, sum_a_not_b double",
     )
-    b = df_b.select(
-        *key_cols,
-        F.col("theta").alias("theta_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("summaries").alias("sum_col_b"),
-    )
-    if not key_cols:  # global (one-row) sketches: constant join key
-        a = a.withColumn("_k", F.lit(1))
-        b = b.withColumn("_k", F.lit(1))
-    joined = a.join(b, join_cols, "full_outer")
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one Python step per sketch PAIR (each O(k) numpy work), never
-        # per data row — no pandas row objects in the loop
-        def mk(theta_enc, sig, summ):
-            if sig is None or (isinstance(sig, float) and pd.isna(sig)):
-                return MAX_THETA, np.empty(0, np.uint64), np.empty(0, np.float64)
-            t = MAX_THETA if int(theta_enc) < 0 else int(theta_enc)
-            h = np.asarray(sig, np.int64).view(np.uint64)
-            return t, h, np.asarray(summ, np.float64)
-
-        if key_cols:
-            keys = [
-                "|".join(map(str, vals))
-                for vals in zip(*(pdf[c].to_numpy() for c in key_cols))
-            ]
-        else:
-            keys = [""] * len(pdf)
-        out = []
-        for key, theta_a, sig_a, sum_a, theta_b, sig_b, sum_b in zip(
-            keys,
-            pdf["theta_a"].to_numpy(), pdf["sig_a"].to_numpy(),
-            pdf["sum_col_a"].to_numpy(),
-            pdf["theta_b"].to_numpy(), pdf["sig_b"].to_numpy(),
-            pdf["sum_col_b"].to_numpy(),
-        ):
-            ta, ha, sa = mk(theta_a if pd.notna(theta_a) else -1, sig_a, sum_a)
-            tb, hb, sb = mk(theta_b if pd.notna(theta_b) else -1, sig_b, sum_b)
-            theta = min(ta, tb)
-            # screen both to < min theta (sigs are sorted ascending)
-            ca = int(np.searchsorted(ha, np.uint64(theta)))
-            cb = int(np.searchsorted(hb, np.uint64(theta)))
-            ha, sa_s = ha[:ca], sa[:ca]
-            hb, sb_s = hb[:cb], sb[:cb]
-
-            common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
-            only_a = np.setdiff1d(ha, common, assume_unique=True)
-            only_b = np.setdiff1d(hb, common, assume_unique=True)
-            mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
-            mask_b_only = np.ones(len(hb), bool); mask_b_only[ib] = False
-
-            u_h = np.concatenate([common, only_a, only_b])
-            u_s = np.concatenate([
-                _combine_summaries(sa_s[ia], sb_s[ib], policy),
-                sa_s[mask_a_only],
-                sb_s[mask_b_only],
-            ])
-            order = np.argsort(u_h, kind="stable")
-            u_h, u_s = u_h[order], u_s[order]
-            if len(u_h) > k:  # union re-trim, lowering theta (min-theta merge law)
-                theta = int(u_h[k])
-                u_h, u_s = u_h[:k], u_s[:k]
-                ca = int(np.searchsorted(ha, np.uint64(theta)))
-                cb = int(np.searchsorted(hb, np.uint64(theta)))
-                ha, sa_s = ha[:ca], sa[:ca]
-                hb, sb_s = hb[:cb], sb[:cb]
-                common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
-                mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
-
-            i_s = _combine_summaries(sa_s[ia], sb_s[ib], policy)
-            anb_h, anb_s = ha[mask_a_only], sa_s[mask_a_only]
-
-            frac = theta / float(MAX_THETA)
-            def est(n):
-                return float(n) / frac
-            def ssum(arr):
-                return float(arr.sum()) / frac
-
-            out.append({
-                "key": key,
-                "theta": -1 if theta >= MAX_THETA else theta,
-                "est_a": est(len(ha)), "est_b": est(len(hb)),
-                "est_union": est(len(u_h)),
-                "est_intersection": est(len(common)),
-                "est_a_not_b": est(len(anb_h)),
-                "sum_a": ssum(sa_s), "sum_b": ssum(sb_s),
-                "sum_union": ssum(u_s),
-                "sum_intersection": ssum(i_s),
-                "sum_a_not_b": ssum(anb_s),
-            })
-        return pd.DataFrame(out)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield compute(pdf)
-
-    return joined.mapInPandas(run, _TUPLE_SETOP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -463,118 +432,16 @@ def array_tuple_pair_set_ops(
     estimates plus per-column population-sum estimates (arrays of length
     num_values) for each set op."""
     d = int(num_values)
-    join_cols = key_cols or ["_k"]
-    a = df_a.select(
-        *key_cols,
-        F.col("theta").alias("theta_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("summaries").alias("sum_col_a"),
-    )
-    b = df_b.select(
-        *key_cols,
-        F.col("theta").alias("theta_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("summaries").alias("sum_col_b"),
-    )
-    if not key_cols:
-        a = a.withColumn("_k", F.lit(1))
-        b = b.withColumn("_k", F.lit(1))
-    joined = a.join(b, join_cols, "full_outer")
-
-    schema = (
-        "key string, theta long, "
+    return _tuple_pair_set_ops(
+        df_a, df_b, key_cols, k, d, policy, "vsum",
+        lambda rows, frac: (rows.sum(axis=0) / frac if len(rows) else np.zeros(d)).tolist(),
+        "theta long, "
         "est_a double, est_b double, est_union double, "
         "est_intersection double, est_a_not_b double, "
         "vsum_a array<double>, vsum_b array<double>, "
         "vsum_union array<double>, vsum_intersection array<double>, "
-        "vsum_a_not_b array<double>"
+        "vsum_a_not_b array<double>",
     )
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one Python step per sketch PAIR (each O(k·d) numpy work), never
-        # per data row — no pandas row objects in the loop
-        def mk(theta_enc, sig, summ):
-            if sig is None or (isinstance(sig, float) and pd.isna(sig)):
-                return MAX_THETA, np.empty(0, np.uint64), np.empty((0, d), np.float64)
-            t = MAX_THETA if int(theta_enc) < 0 else int(theta_enc)
-            h = np.asarray(sig, np.int64).view(np.uint64)
-            return t, h, np.asarray(summ, np.float64).reshape(-1, d)
-
-        if key_cols:
-            keys = [
-                "|".join(map(str, vals))
-                for vals in zip(*(pdf[c].to_numpy() for c in key_cols))
-            ]
-        else:
-            keys = [""] * len(pdf)
-        out = []
-        for key, theta_a, sig_a, sum_a, theta_b, sig_b, sum_b in zip(
-            keys,
-            pdf["theta_a"].to_numpy(), pdf["sig_a"].to_numpy(),
-            pdf["sum_col_a"].to_numpy(),
-            pdf["theta_b"].to_numpy(), pdf["sig_b"].to_numpy(),
-            pdf["sum_col_b"].to_numpy(),
-        ):
-            ta, ha, sa = mk(theta_a if pd.notna(theta_a) else -1, sig_a, sum_a)
-            tb, hb, sb = mk(theta_b if pd.notna(theta_b) else -1, sig_b, sum_b)
-            theta = min(ta, tb)
-            ca = int(np.searchsorted(ha, np.uint64(theta)))
-            cb = int(np.searchsorted(hb, np.uint64(theta)))
-            ha, sa_s = ha[:ca], sa[:ca]
-            hb, sb_s = hb[:cb], sb[:cb]
-
-            common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
-            mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
-            mask_b_only = np.ones(len(hb), bool); mask_b_only[ib] = False
-
-            u_h = np.concatenate([common, ha[mask_a_only], hb[mask_b_only]])
-            u_s = np.concatenate([
-                _combine_summaries(sa_s[ia], sb_s[ib], policy),
-                sa_s[mask_a_only],
-                sb_s[mask_b_only],
-            ])
-            order = np.argsort(u_h, kind="stable")
-            u_h, u_s = u_h[order], u_s[order]
-            if len(u_h) > k:
-                theta = int(u_h[k])
-                u_h, u_s = u_h[:k], u_s[:k]
-                ca = int(np.searchsorted(ha, np.uint64(theta)))
-                cb = int(np.searchsorted(hb, np.uint64(theta)))
-                ha, sa_s = ha[:ca], sa[:ca]
-                hb, sb_s = hb[:cb], sb[:cb]
-                common, ia, ib = np.intersect1d(ha, hb, assume_unique=True, return_indices=True)
-                mask_a_only = np.ones(len(ha), bool); mask_a_only[ia] = False
-
-            i_s = _combine_summaries(sa_s[ia], sb_s[ib], policy)
-            anb_h, anb_s = ha[mask_a_only], sa_s[mask_a_only]
-
-            frac = theta / float(MAX_THETA)
-            def est(n):
-                return float(n) / frac
-            def vsum(arr):
-                return (arr.sum(axis=0) / frac if len(arr) else np.zeros(d)).tolist()
-
-            out.append({
-                "key": key,
-                "theta": -1 if theta >= MAX_THETA else theta,
-                "est_a": est(len(ha)), "est_b": est(len(hb)),
-                "est_union": est(len(u_h)),
-                "est_intersection": est(len(common)),
-                "est_a_not_b": est(len(anb_h)),
-                "vsum_a": vsum(sa_s), "vsum_b": vsum(sb_s),
-                "vsum_union": vsum(u_s),
-                "vsum_intersection": vsum(i_s),
-                "vsum_a_not_b": vsum(anb_s),
-            })
-        return pd.DataFrame(out)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield compute(pdf)
-
-    return joined.mapInPandas(run, schema)
 
 
 # -- array-of-strings (AoS) tuple sketch --------------------------------------

@@ -306,16 +306,6 @@ def _salted_full_pairs(
     return pairs.dropDuplicates(["a", "b"])
 
 
-def hot_bands(sig_df: DataFrame, threshold: int = 1000) -> DataFrame:
-    """Diagnostic: bands whose group size exceeds ``threshold`` — the
-    heavy-hitter report (reference fi semantics #27) surfaced to metrics."""
-    return (
-        band_group_sizes(explode_bands(sig_df))
-        .where(F.col("count") > threshold)
-        .orderBy(F.desc("count"))
-    )
-
-
 def banding_curve(bands: int, rows: int, s):
     """LSH S-curve: probability a pair with Jaccard similarity ``s``
     shares at least one band, P(s) = 1 - (1 - s^rows)^bands (Leskovec/

@@ -53,6 +53,7 @@ round-2/3 lanes into the cascade a 1000-executor deployment would run.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,16 +98,14 @@ def _bloom_rep_filter(images: DataFrame, rep_ids: DataFrame,
                       id_col: str, fpp: float) -> DataFrame:
     """Map-side survivor filter: the rep-id bloom is folded distributed
     (functions/bloom.py), its bit array broadcast, and the probe runs as
-    a SCALAR pandas UDF inside .filter() — only the id column crosses
+    a scalar Arrow UDF inside .filter() — only the id column crosses
     the Arrow boundary; the corpus' bytes/caption payloads never leave
-    the JVM (the bloom.might_contain mapInPandas helper would round-trip
-    every column, which at image payload widths costs more than the
-    near-tier work it saves)."""
+    the JVM."""
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     from ..functions.bloom import (
-        _bit_positions,
+        _contains,
         bloom_filter_agg,
         suggest_num_bits,
         suggest_num_hashes_from,
@@ -123,15 +122,12 @@ def _bloom_rep_filter(images: DataFrame, rep_ids: DataFrame,
     m_, k_, seed = int(row["num_bits"]), int(row["num_hashes"]), int(row["seed"])
     id_dtype = dict(images.dtypes)[id_col]
 
-    def _probe(ids):
-        import numpy as np
+    def _probe(ids: pa.Array) -> pa.Array:
+        # the exact Python ids: a long id beside a null must not round
+        items = pd.Series(ids.to_pylist(), dtype=object)
+        return pa.array(_contains(items, id_dtype, bits_bc.value, m_, k_, seed))
 
-        arr = np.frombuffer(bits_bc.value, dtype=np.uint8)
-        pos = _bit_positions(ids, id_dtype, m_, k_, seed)
-        hit = (arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        return pd.Series(hit.all(axis=1))
-
-    probe = pandas_udf(_probe, "boolean")
+    probe = arrow_udf(_probe, "boolean")
     return images.filter(probe(F.col(id_col)))
 
 

@@ -1103,20 +1103,67 @@ def test_varopt_sample_size_is_exactly_k():
     assert len(it) == 32 and (w[:5] == 1e4).all()
 
 
+BIG = 2**53
+
+
 def test_bloom_might_contain_null_probe_is_false(spark):
+    """A null probe is definitively absent, and it must not change the
+    long probes of its batch: as float64, 2^53 + 1 would round and miss
+    the filter that holds it (a false negative) and come back rounded."""
     from datasketches_cpp_spark.functions.bloom import (
         bloom_filter_agg,
         might_contain,
     )
 
     filt = bloom_filter_agg(
-        spark.createDataFrame([(i,) for i in range(50)], "k long"),
+        spark.createDataFrame([(i,) for i in [*range(50), BIG + 1, BIG + 3]], "k long"),
         "k", num_bits=1024, num_hashes=4,
     ).drop("n_items")
-    probes = spark.createDataFrame([(1,), (None,), (999,)], "k long")
+    probes = spark.createDataFrame(
+        [(1,), (None,), (999,), (BIG + 1,), (BIG + 3,)], "k long"
+    ).repartition(1)
     got = {r["k"]: r["might_contain"]
            for r in might_contain(probes, filt, "k").collect()}
     assert got[1] is True and got[None] is False
+    assert got[BIG + 1] is True and got[BIG + 3] is True
+
+
+def test_count_min_never_below_true_count_beside_a_null_probe(spark):
+    """A count-min estimate is never below the true count, also for long
+    items above 2^53 probed in the same batch as a null (which answers 0,
+    as the aggregate never counts a null); the probe column comes back
+    exact."""
+    items = [BIG + 1] * 5 + [BIG + 3] * 3 + [7]
+    sk = count_min_agg(
+        spark.createDataFrame([(i,) for i in items], "k long"), [], "k",
+        num_hashes=3, num_buckets=64,
+    )
+    probes = spark.createDataFrame(
+        [(BIG + 1,), (None,), (BIG + 3,)], "k long"
+    ).repartition(1)
+    got = {r["k"]: r["estimate"] for r in estimate_frequencies(sk, probes, "k").collect()}
+    assert set(got) == {BIG + 1, BIG + 3, None}
+    assert got[BIG + 1] >= 5 and got[BIG + 3] >= 3 and got[None] == 0
+
+
+@pytest.mark.parametrize("family", ["kll", "req", "classic", "tdigest"])
+def test_nan_item_ranks_last(family):
+    """A NaN item ranks 1.0 in every float quantile family: it sorts above
+    every retained item (KLL over strings holds no NaN item)."""
+    from datasketches_cpp_spark.functions.classic_quantiles import (
+        ClassicQuantilesSketch,
+    )
+    from datasketches_cpp_spark.functions.req import ReqSketch
+    from datasketches_cpp_spark.functions.tdigest import TDigest
+
+    sk = {
+        "kll": lambda: KllSketch(k=16),
+        "req": lambda: ReqSketch(k=4),
+        "classic": lambda: ClassicQuantilesSketch(k=8),
+        "tdigest": lambda: TDigest(20),
+    }[family]()
+    sk.update_batch(np.arange(100, dtype=np.float64))
+    assert sk.get_rank(math.nan) == 1.0
 
 
 def test_density_agg_skips_null_vectors(spark):

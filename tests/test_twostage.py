@@ -17,15 +17,22 @@ import pytest
 from datasketches_cpp_spark.functions import (
     _twostage,
     classic_quantiles,
+    classicserde,
     cpc,
+    cpcserde,
+    density,
+    densityserde,
     freq,
     hll,
+    hllserde,
     kll_items,
     quantiles,
     req,
     sampling,
     tdigest,
     theta,
+    thetaserde,
+    tuplesketch,
 )
 
 
@@ -280,16 +287,79 @@ READERS = {
     "req": lambda df: req.with_req_quantiles(req.req_sketch_agg(df, ["g"], "v"), [0.5]),
     "tdigest": lambda df: tdigest.with_tdigest_quantiles(
         tdigest.tdigest_agg(df, ["g"], "v"), [0.5]),
+    # the serde round trips: writer, then reader, each a pass over the keys
+    "theta_serde": lambda df: thetaserde.theta_from_bytes(
+        thetaserde.with_theta_bytes(theta.theta_sketch_agg(df, ["g"], "v")).select(
+            "g", "sketch_bytes")),
+    "cpc_serde": lambda df: cpcserde.cpc_from_bytes(
+        cpcserde.with_cpc_bytes(cpc.cpc_sketch_agg(df, ["g"], "v")).select("g", "sketch_bytes")),
+    "classic_serde": lambda df: classicserde.classic_from_bytes(
+        classicserde.with_classic_bytes(
+            classic_quantiles.classic_quantiles_agg(df, ["g"], "v", k=8), 8
+        ).select("g", "sketch_bytes"), 8),
+    "density_serde": lambda df: densityserde.density_from_bytes(
+        densityserde.with_density_bytes(
+            density.density_sketch_agg(
+                df.select("g", F.array("v", "v").alias("vec")), ["g"], "vec", 2, k=8), 2, 8
+        ).select("g", "sketch_bytes")),
+    "hll_serde": lambda df: hllserde.hll_from_bytes(
+        hllserde.with_hll_bytes(
+            hll.hll_sketch_agg(df, ["g"], "v", lg_k=6, keep_registers=True), 6
+        ).select("g", "sketch_bytes"), 6),
 }
 
 
 @pytest.mark.parametrize("family", sorted(READERS))
 def test_readers_keep_long_keys_beside_a_null_key(spark, one_shuffle_partition, family):
-    """A reader passes the key columns through as they are: a null key in
-    the same Arrow batch must not turn long keys above 2^53 into
-    float64, which rounds them."""
+    """A reader, or a serde writer and reader, passes the key columns
+    through as they are: a null key in the same Arrow batch must not turn
+    long keys above 2^53 into float64, which rounds them."""
     df = spark.createDataFrame(
         [(BIG + 1, 1.0), (None, 2.0), (BIG + 3, 3.0)], "g long, v double"
     ).repartition(1)
     got = sorted((r["g"] is None, r["g"] or 0) for r in READERS[family](df).collect())
     assert got == [(False, BIG + 1), (False, BIG + 3), (True, 0)]
+
+
+def test_set_op_keys_are_exact_text(spark, one_shuffle_partition):
+    """A set-op writes each key from its exact value: a long key above
+    2^53 beside a null key (which joins its counterpart and reads
+    'None') is not rounded through float64."""
+    rows = [(g, i) for g in (BIG + 1, BIG + 3, None) for i in range(5)]
+    df = spark.createDataFrame(rows, "g long, item long").repartition(1)
+    sk = theta.theta_sketch_agg(df, ["g"], "item", lg_k=5)
+    got = sorted(r["key"] for r in theta.theta_pair_set_ops(sk, sk, ["g"], 32).collect())
+    assert got == sorted([str(BIG + 1), str(BIG + 3), "None"])
+
+
+SET_OPS = {
+    "theta": (
+        lambda df: theta.theta_sketch_agg(df, ["g"], "item"),
+        lambda a, b: theta.theta_pair_set_ops(a, b, ["g"], 4096),
+    ),
+    "tuple": (
+        lambda df: tuplesketch.tuple_sketch_agg(df, ["g"], "item", "w"),
+        lambda a, b: tuplesketch.tuple_pair_set_ops(a, b, ["g"], 4096),
+    ),
+    "array_tuple": (
+        lambda df: tuplesketch.array_tuple_sketch_agg(
+            df.withColumn("w", F.array("w", "w")), ["g"], "item", "w", 2
+        ),
+        lambda a, b: tuplesketch.array_tuple_pair_set_ops(a, b, ["g"], 4096, 2),
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(SET_OPS))
+def test_set_ops_join_a_null_key_to_a_null_key(spark, family):
+    """``groupBy`` makes the null keys one group, so a set-op of a table
+    with itself meets that group with itself, as every other."""
+    agg, op = SET_OPS[family]
+    rows = [(g, i, 1.0) for g in ("x", None) for i in range(50)]
+    sk = agg(spark.createDataFrame(rows, "g string, item long, w double"))
+    got = {r["key"]: r for r in op(sk, sk).collect()}
+    assert sorted(got) == ["None", "x"]
+    for r in got.values():
+        assert (r["est_a"], r["est_b"], r["est_intersection"]) == (50.0, 50.0, 50.0)
+    if family == "theta":
+        assert got["None"]["jaccard"] == 1.0
