@@ -3,10 +3,10 @@
 ``fold_partials`` is the partial stage, the map-side combine: one
 ``mapInArrow`` call per input partition folds each group's rows into a
 state and emits one partial row per (partition, group). Groups are found
-on the exact Arrow key values, compared as Spark groups them (0.0 equal to
--0.0, NaN equal to NaN, null equal to null only), and kept in first-seen
-order. The key columns of the partial rows are built from those exact
-values, so long keys above 2^53 and NaN keys come back as they went in.
+on the exact Arrow key values, compared as Spark groups them (see below),
+and kept in first-seen order. The key columns of the partial rows are
+built from those exact values, so long keys above 2^53 and NaN keys come
+back as they went in.
 
 ``merge_groups`` is the final stage. It shuffles the partials on the group
 columns and sorts each partition on them, the same ``hashpartitioning``
@@ -16,19 +16,20 @@ Python round trip is paid per Arrow batch, not per group. A group that
 spans a batch boundary is carried over to the next batch, so every group
 reaches ``final`` with the same rows in the same order as under
 ``applyInPandas``; order-sensitive merges (KLL, classic, REQ, t-digest)
-give the same bytes. The group columns of its output are also set from the
-exact Arrow key, since pandas would turn a NaN key into null on the way
-back.
+give the same bytes. ``final`` gets the group's rows as dicts, read from
+Arrow once per batch (``_values``: a list column as numpy slices over its
+offsets), and returns its output rows as dicts, converted to Arrow as
+``fold_partials`` converts ``emit``'s; no pandas frame is built per group.
+The group columns of the output are set from the exact Arrow key, so a
+NaN key or a long key above 2^53 comes back as it went in.
 
-The final stage hands ``final`` each group as the pandas frame PySpark's
-grouped-map worker would build for it alone. A batch with no null
-converts value by value, so it is converted once and sliced; a batch with
-a null is converted group by group, since one null turns a long column
-into float64 for every row converted with it, which rounds keys and items
-above 2^53. The partial stage converts each item column once per batch,
-an integer column with a null to exact Python ints, and the family turns
-it into per-row numpy arrays (hashes, say) that each group's update takes
-a slice of.
+Both stages compare keys as Spark groups them, also inside an array or
+struct key: NaN equal to NaN, -0.0 equal to 0.0 (and returned as 0.0),
+null equal to null only. Spark cannot sort a map, so the final stage
+refuses a map key. The partial stage converts each item column once
+per batch, an integer column with a null to exact Python ints, and the
+family turns it into per-row numpy arrays (hashes, say) that each group's
+update takes a slice of.
 
 ``sketch_agg`` runs both stages for a family whose state is one sketch
 object per group (KLL, KLL over strings, REQ, classic quantiles, t-digest,
@@ -95,8 +96,30 @@ def notna(df: DataFrame, col: str) -> Column:
 
 
 def _spark_key(a: pa.Array) -> pa.Array:
-    """A key column as Spark groups and returns it: -0.0 as 0.0."""
-    return pc.add(a, pa.scalar(0.0, a.type)) if pa.types.is_floating(a.type) else a
+    """A key column as Spark groups and returns it: -0.0 as 0.0, also
+    inside arrays and structs (Spark's ``NormalizeFloatingNumbers``)."""
+    t = a.type
+    if pa.types.is_floating(t):
+        return pc.add(a, pa.scalar(0.0, t))
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return type(a).from_arrays(a.offsets, _spark_key(a.values), type=t, mask=a.is_null())
+    if pa.types.is_struct(t):
+        fields = [_spark_key(f) for f in a.flatten()]
+        return pa.StructArray.from_arrays(fields, fields=list(t), mask=a.is_null())
+    return a
+
+
+def _canon(v: Any) -> Any:
+    """A key value (``to_pylist``) as a hashable value that is equal where
+    Spark groups equal: NaN equals NaN at any depth (-0.0 already equals
+    0.0 in Python); arrays and structs as tuples."""
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_canon, v))
+    if isinstance(v, dict):
+        return tuple(map(_canon, v.values()))
+    return v
 
 
 def _group_codes(keys: list[pa.Array], n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -104,6 +127,9 @@ def _group_codes(keys: list[pa.Array], n: int) -> tuple[np.ndarray, np.ndarray]:
     row of each group (``keys`` as ``_spark_key`` gives them)."""
     code = np.zeros(n, np.int64)
     for i, a in enumerate(keys):
+        if pa.types.is_nested(a.type):  # no Arrow kernel encodes these
+            ids: dict = {}
+            a = pa.array([ids.setdefault(_canon(v), len(ids)) for v in a.to_pylist()])
         enc = pc.dictionary_encode(a, null_encoding="encode")
         code = code * len(enc.dictionary) + enc.indices.to_numpy()
         if i:  # back to dense codes, so the next product cannot overflow
@@ -158,7 +184,7 @@ def fold_partials(
             gids, new = [], []
             tuples = zip(*(f.to_pylist() for f in firsts)) if firsts else [()]
             for j, key in enumerate(tuples):
-                key = tuple(_NAN if v != v else v for v in key)
+                key = _canon(key)
                 if key not in ids:
                     ids[key] = len(states)
                     states.append(init())
@@ -181,31 +207,45 @@ def fold_partials(
             out = emit(st)
             rows += out
             owner += [g] * len(out)
-        if not rows:
-            return
-        cols = []
-        for f in out_type:
-            if f.name in group_cols:
-                i = group_cols.index(f.name)
-                col = pa.concat_arrays([k[i] for k in new_keys]).take(owner)
-                cols.append(col.cast(f.type))
-            else:
-                vals = [r[f.name] for r in rows]
-                cols.append(pa.array(vals, f.type, from_pandas=True, safe=safecheck))
-        yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
+        if rows:
+            keys = [pa.concat_arrays(k) for k in zip(*new_keys)]
+            yield _to_batch(out_type, group_cols, keys, owner, rows, safecheck)
 
     return df.select(*group_cols, *item_cols).mapInArrow(fold, schema)
+
+
+def _to_batch(
+    out_type: pa.StructType,
+    group_cols: list[str],
+    keys: list[pa.Array],
+    owner: list[int],
+    rows: list[dict],
+    safecheck: bool,
+) -> pa.RecordBatch:
+    """Output rows in Arrow: each group column is ``keys``' entry of the
+    row's ``owner`` (the exact key, never through Python), every other
+    column is converted from the rows' values as a pandas column would be
+    (NaN as null)."""
+    cols = []
+    for f in out_type:
+        if f.name in group_cols:
+            cols.append(keys[group_cols.index(f.name)].take(owner).cast(f.type))
+        else:
+            vals = [r[f.name] for r in rows]
+            cols.append(pa.array(vals, f.type, from_pandas=True, safe=safecheck))
+    return pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
 
 
 def _key_changes(keys: list[pa.Array], n: int) -> np.ndarray:
     """True at each row i in 1..n-1 whose key differs from row i - 1,
     compared as Spark groups: on exact values, with 0.0 equal to -0.0,
-    NaN to NaN and null to null only."""
+    NaN to NaN and null to null only, at any depth."""
     same = np.ones(n - 1, dtype=bool)
     for a in keys:
         x, y = a[1:], a[:-1]
         if pa.types.is_nested(a.type):  # no Arrow kernel compares these
-            same &= np.array([p == q for p, q in zip(x.to_pylist(), y.to_pylist())], bool)
+            vals = list(map(_canon, a.to_pylist()))
+            same &= np.array([p == q for p, q in zip(vals[1:], vals)], bool)
             continue
         eq = pc.or_(pc.fill_null(pc.equal(x, y), False), pc.and_(pc.is_null(x), pc.is_null(y)))
         if pa.types.is_floating(a.type):
@@ -214,95 +254,76 @@ def _key_changes(keys: list[pa.Array], n: int) -> np.ndarray:
     return ~same
 
 
-def _has_nulls(a: pa.Array) -> bool:
-    """Whether ``a`` holds a null at any depth (maps and other nested
-    types: assumed to)."""
-    if a.null_count:
-        return True
-    if pa.types.is_list(a.type) or pa.types.is_large_list(a.type):
-        return _has_nulls(a.flatten())
-    if pa.types.is_struct(a.type):
-        return any(_has_nulls(f) for f in a.flatten())
-    return pa.types.is_nested(a.type)
+def _values(a: pa.Array) -> list:
+    """A column of partial rows as ``final`` reads it: a list column as
+    numpy slices over its Arrow offsets (None for a null list), as pandas
+    would hold each list; a floating column as floats with null as NaN, as
+    pandas would; any other column as Python values, so an integer column
+    with a null keeps exact ints."""
+    t = a.type
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        flat = a.values.to_numpy(zero_copy_only=False)
+        offsets = a.offsets.to_numpy().tolist()
+        out = [flat[p:q] for p, q in zip(offsets, offsets[1:])]
+        if a.null_count:
+            out = [v if ok else None for v, ok in zip(out, a.is_valid().to_pylist())]
+        return out
+    if pa.types.is_floating(t):
+        return pc.fill_null(a, pa.scalar(np.nan, t)).to_pylist()
+    return a.to_pylist()
 
 
 def merge_groups(
     partials: DataFrame,
     group_cols: list[str],
-    final: Callable[[pd.DataFrame], pd.DataFrame],
+    final: Callable[[list[dict]], list[dict]],
     schema: StructType | str,
 ) -> DataFrame:
     """Apply ``final`` to the rows of each group of ``partials``; with no
-    group columns, to all rows at once (and not at all on empty input)."""
-    timezone, safecheck, out_type = _worker_conf(partials, schema)
+    group columns, to all rows at once (and not at all on empty input).
+
+    ``final(rows)`` gets the group's rows in order, each a dict of every
+    column of ``partials`` (read as ``_values`` reads them), and returns
+    the group's output rows as dicts of the columns of ``schema`` that are
+    not group columns; those are set from the group's exact key."""
+    _, safecheck, out_type = _worker_conf(partials, schema)
+
+    def finished(done: list[tuple[pa.RecordBatch, list[dict]]]) -> Iterator[pa.RecordBatch]:
+        """The output rows of finished groups, each given with the group's
+        first row, as one batch."""
+        rows = [r for _, out in done for r in out]
+        if rows:
+            keys = [
+                _spark_key(pa.concat_arrays([k.column(c) for k, _ in done])) for c in group_cols
+            ]
+            owner = [i for i, (_, out) in enumerate(done) for _ in out]
+            yield _to_batch(out_type, group_cols, keys, owner, rows, safecheck)
 
     def merge_sorted_groups(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ser = _serializer(timezone, safecheck)
-
-        def to_pandas(pieces: list[pa.RecordBatch]) -> pd.DataFrame:
-            table = pa.Table.from_batches(pieces)
-            return pd.concat(
-                [ser.arrow_to_pandas(c, i) for i, c in enumerate(table.itercolumns())], axis=1
-            )
-
-        def groups(batch: pa.RecordBatch, bounds: list) -> list[pd.DataFrame]:
-            """The groups ``batch[a:b]`` for (a, b) in ``bounds``, in pandas."""
-            if not bounds or any(_has_nulls(c) for c in batch.columns):
-                return [to_pandas([batch.slice(a, b - a)]) for a, b in bounds]
-            whole = to_pandas([batch])
-            return [whole.iloc[a:b].reset_index(drop=True) for a, b in bounds]
-
-        def to_arrow(outs: list[tuple[pd.DataFrame, pa.RecordBatch]]) -> list[pa.RecordBatch]:
-            """``final``'s outputs, each with its group's first row, in
-            Arrow: converted together when their columns and dtypes agree
-            (concatenating them changes nothing), with the group columns
-            set to the exact key (pandas would turn a NaN key into null)."""
-            outs = [
-                (o, [_spark_key(k.column(c)).take(np.zeros(len(o), np.int64)) for c in group_cols])
-                for o, k in outs
-                if len(o)
-            ]
-            if len(outs) > 1 and all(o.dtypes.equals(outs[0][0].dtypes) for o, _ in outs):
-                outs = [(
-                    pd.concat([o for o, _ in outs], ignore_index=True),
-                    [pa.concat_arrays(c) for c in zip(*(ks for _, ks in outs))],
-                )]
-            batches = []
-            for o, ks in outs:
-                b = pa.RecordBatch.from_struct_array(ser._create_struct_array(o, out_type))
-                cols = [
-                    ks[group_cols.index(f.name)].cast(f.type) if f.name in group_cols else col
-                    for f, col in zip(b.schema, b.columns)
-                ]
-                batches.append(pa.RecordBatch.from_arrays(cols, schema=b.schema))
-            return batches
-
-        open_: list[pa.RecordBatch] = []  # rows of the open group so far
+        open_rows: list[dict] = []  # rows of the open group so far
+        first = tail = None  # the open group's first row, the last row read
         for batch in batches:
             n = batch.num_rows
             if not n:
                 continue
             keys = [batch.column(c) for c in group_cols]
-            if open_:  # compare the first row with the open group's last
-                tail = open_[-1].slice(open_[-1].num_rows - 1)
+            if open_rows:  # compare the first row with the open group's last
                 keys = [pa.concat_arrays([tail.column(c), k]) for c, k in zip(group_cols, keys)]
-                starts = np.flatnonzero(_key_changes(keys, n + 1))
+                starts = np.flatnonzero(_key_changes(keys, n + 1)).tolist()
             else:
-                starts = np.flatnonzero(np.concatenate([[True], _key_changes(keys, n)]))
-            if not len(starts):
-                open_.append(batch)
+                starts = np.flatnonzero(np.concatenate([[True], _key_changes(keys, n)])).tolist()
+            names = batch.schema.names
+            rows = [dict(zip(names, r)) for r in zip(*map(_values, batch.columns))]
+            tail = batch.slice(n - 1)
+            open_rows += rows[: starts[0] if starts else n]
+            if not starts:
                 continue
-            if starts[0]:
-                open_.append(batch.slice(0, starts[0]))
-            outs = [(final(to_pandas(open_)), open_[0])] if open_ else []
-            bounds = list(zip(starts[:-1], starts[1:]))
-            outs += [
-                (final(g), batch.slice(a, 1)) for g, (a, _) in zip(groups(batch, bounds), bounds)
-            ]
-            open_ = [batch.slice(starts[-1])]
-            yield from to_arrow(outs)
-        if open_:
-            yield from to_arrow([(final(to_pandas(open_)), open_[0])])
+            done = [(first, final(open_rows))] if open_rows else []
+            done += [(batch.slice(a, 1), final(rows[a:b])) for a, b in zip(starts, starts[1:])]
+            first, open_rows = batch.slice(starts[-1], 1), rows[starts[-1]:]
+            yield from finished(done)
+        if open_rows:
+            yield from finished([(first, final(open_rows))])
 
     if group_cols:
         partials = partials.repartition(*group_cols).sortWithinPartitions(*group_cols)
@@ -331,14 +352,11 @@ def sketch_agg(
         lambda sk, *items: sk.update_batch(*items), lambda sk: [sk.to_row()], schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(rows: list[dict]) -> list[dict]:
         sk = new()
-        # one Python step per partial sketch (plain dicts, no pandas rows)
-        for row in pdf.to_dict("records"):
+        for row in rows:
             sk.merge(from_row(row))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out.update({c: [v] for c, v in sk.to_row().items()})
-        return pd.DataFrame(out)
+        return [sk.to_row()]
 
     return merge_groups(partials, group_cols, final, schema)
 

@@ -98,22 +98,15 @@ def bloom_filter_agg(
         lambda: [np.zeros(nbytes, dtype=np.uint8), 0], update, emit, schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        assert (pdf["num_bits"] == num_bits).all() and (
-            pdf["num_hashes"] == num_hashes
-        ).all(), "bloom union requires identical (m, k, seed)"
+    def final(rows: list[dict]) -> list[dict]:
+        assert all(
+            r["num_bits"] == num_bits and r["num_hashes"] == num_hashes for r in rows
+        ), "bloom union requires identical (m, k, seed)"
         arr = np.zeros(nbytes, dtype=np.uint8)
-        for b in pdf["bits"]:
-            arr |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame(
-            {
-                "bits": [arr.tobytes()],
-                "num_bits": [num_bits],
-                "num_hashes": [num_hashes],
-                "seed": [seed],
-                "n_items": [int(pdf["n_items"].sum())],
-            }
-        )
+        for r in rows:
+            arr |= np.frombuffer(r["bits"], dtype=np.uint8)
+        return [{"bits": arr.tobytes(), "num_bits": num_bits, "num_hashes": num_hashes,
+                 "seed": seed, "n_items": sum(r["n_items"] for r in rows)}]
 
     return merge_groups(partials, [], final, schema)
 
@@ -169,25 +162,23 @@ def _combine_filters(filters_df: DataFrame, op: str) -> DataFrame:
     bound: sum for union (each true item is in some input), min for
     intersect (the result holds at most the smaller side)."""
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cfgs = pdf[["num_bits", "num_hashes", "seed"]].drop_duplicates()
+    def merge(rows: list[dict]) -> list[dict]:
+        cfgs = {(r["num_bits"], r["num_hashes"], r["seed"]) for r in rows}
         if len(cfgs) != 1:
             raise ValueError(
                 f"bloom {op} requires identical (num_bits, num_hashes, seed); got "
-                f"{cfgs.to_dict('records')}"
+                f"{[dict(zip(('num_bits', 'num_hashes', 'seed'), c)) for c in cfgs]}"
             )
-        mats = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["bits"]])
+        mats = np.stack([np.frombuffer(r["bits"], dtype=np.uint8) for r in rows])
         arr = (np.bitwise_or if op == "union" else np.bitwise_and).reduce(mats, axis=0)
-        n = int(pdf["n_items"].sum()) if op == "union" else int(pdf["n_items"].min())
-        return pd.DataFrame(
-            {
-                "bits": [arr.tobytes()],
-                "num_bits": [int(pdf["num_bits"].iloc[0])],
-                "num_hashes": [int(pdf["num_hashes"].iloc[0])],
-                "seed": [int(pdf["seed"].iloc[0])],
-                "n_items": [n],
-            }
-        )
+        counts = [r["n_items"] for r in rows]
+        return [{
+            "bits": arr.tobytes(),
+            "num_bits": rows[0]["num_bits"],
+            "num_hashes": rows[0]["num_hashes"],
+            "seed": rows[0]["seed"],
+            "n_items": sum(counts) if op == "union" else min(counts),
+        }]
 
     return merge_groups(filters_df, [], merge, _FILTER_SCHEMA)
 
@@ -215,14 +206,12 @@ def bloom_invert(filter_df: DataFrame) -> DataFrame:
     collisions keep all their bits set. ``n_items`` becomes -1 (unknown),
     as the complement's cardinality is not tracked."""
 
-    def flip(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        out["bits"] = [
-            np.bitwise_not(np.frombuffer(b, dtype=np.uint8)).tobytes()
-            for b in pdf["bits"]
+    def flip(rows: list[dict]) -> list[dict]:
+        return [
+            dict(r, bits=np.bitwise_not(np.frombuffer(r["bits"], dtype=np.uint8)).tobytes(),
+                 n_items=-1)
+            for r in rows
         ]
-        out["n_items"] = np.int64(-1)
-        return out
 
     return merge_groups(filter_df, [], flip, _FILTER_SCHEMA)
 

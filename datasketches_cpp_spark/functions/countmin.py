@@ -116,22 +116,13 @@ def count_min_agg(
         lambda: [np.zeros(num_hashes * num_buckets, dtype=np.int64), 0], update, emit, schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(rows: list[dict]) -> list[dict]:
         # shape/seed must match to merge (count_min_impl.hpp:242-247)
-        assert pdf["num_hashes"].nunique() == 1 and pdf["num_buckets"].nunique() == 1
+        assert len({(r["num_hashes"], r["num_buckets"]) for r in rows}) == 1
         mat = np.zeros(num_hashes * num_buckets, dtype=np.int64)
-        for m in pdf["cm_matrix"]:
-            mat += np.asarray(m, dtype=np.int64)
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r.update(
-            cm_matrix=[mat], cm_total=[int(pdf["cm_total"].sum())],
-            num_hashes=[num_hashes], num_buckets=[num_buckets], seed=[seed],
-        )
-        return pd.DataFrame(
-            r,
-            columns=group_cols
-            + ["cm_matrix", "cm_total", "num_hashes", "num_buckets", "seed"],
-        )
+        for r in rows:
+            mat += np.asarray(r["cm_matrix"], dtype=np.int64)
+        return emit([mat, sum(r["cm_total"] for r in rows)])
 
     return merge_groups(partials, group_cols, final, schema)
 

@@ -346,20 +346,17 @@ def cpc_sketch_agg(
 
 
 def _merge_sketches(partials: DataFrame, group_cols: list[str], schema: str) -> DataFrame:
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(rows: list[dict]) -> list[dict]:
         # mixed lg_k (reference cpc_union reduce-k semantics): fold larger
         # matrices down to the group's smallest k before the OR merge
-        lg_k = int(pdf["lg_k"].min())
+        lg_k = min(r["lg_k"] for r in rows)
         mat = np.zeros(1 << lg_k, dtype=np.uint64)
-        for arr, src_lg_k in zip(pdf["coupons"], pdf["lg_k"]):
-            m = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            if int(src_lg_k) != lg_k:
-                m = fold_matrix_k(m, int(src_lg_k) - lg_k)
+        for r in rows:
+            m = np.asarray(r["coupons"], dtype=np.int64).view(np.uint64)
+            if r["lg_k"] != lg_k:
+                m = fold_matrix_k(m, r["lg_k"] - lg_k)
             mat |= m
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["lg_k"] = [lg_k]
-        row["coupons"] = [mat.view(np.int64)]
-        return pd.DataFrame(row, columns=group_cols + ["lg_k", "coupons"])
+        return [{"lg_k": lg_k, "coupons": mat.view(np.int64)}]
 
     return merge_groups(partials, group_cols, final, schema)
 
@@ -441,21 +438,15 @@ def cpc_stream_agg(
     )
     order_seed = seed ^ 0x9E3779B97F4A7C15
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        hashes = _hash_items(pdf[item_col], item_dtype, seed)
-        order_h = _hash_items(pdf[item_col], item_dtype, order_seed)
+    def final(rows: list[dict]) -> list[dict]:
+        items = [r[item_col] for r in rows]
+        hashes = _hash_items(items, item_dtype, seed)
+        order_h = _hash_items(items, item_dtype, order_seed)
         st = CpcState(lg_k)
         st.update_hashes(hashes[np.argsort(order_h, kind="stable")])
         lb, ub = st.get_bounds(kappa)
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["estimate"] = [st.get_estimate()]
-        row["lower_bound"] = [lb]
-        row["upper_bound"] = [ub]
-        return pd.DataFrame(
-            row, columns=group_cols + ["estimate", "lower_bound", "upper_bound"]
-        )
+        return [{"estimate": st.get_estimate(), "lower_bound": lb, "upper_bound": ub}]
 
-    # null items leave in Spark: beside a long item they would make the
-    # group's pandas column float64 and round items above 2^53
+    # null items leave in Spark: the final hashes every item it gets
     sel = df.where(notna(df, item_col)).select(group_cols + [item_col])
     return merge_groups(sel, group_cols, final, out_schema)

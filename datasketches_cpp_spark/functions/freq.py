@@ -20,14 +20,13 @@ reference's theta exact-mode tests).
 
 Spark mapping: per-partition MG maps via ``_twostage.fold_partials`` (map-side combine:
 the shuffle carries ≤ groups × partitions × m rows), final merge in the
-shared final stage (``_twostage.merge_groups``). The vectorized per-batch fold is `value_counts` + one
-sorted cut — no per-item Python loop.
+shared final stage (``_twostage.merge_groups``). The per-batch fold is one
+``np.unique`` count per group + one sorted cut — no per-item Python loop.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -48,13 +47,24 @@ class MGState:
         self.offset = 0
         self.total = 0
 
-    def update_batch(self, items: pd.Series, weights: np.ndarray | None = None) -> None:
+    def update_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
+        """Fold a batch of items (and their weights) in, item by distinct
+        item in the order pandas' ``value_counts`` gives them unweighted
+        (``groupby().sum()`` weighted), so the state's bytes match it."""
+        keys, first, inverse = np.unique(items, return_index=True, return_inverse=True)
         if weights is None:
-            vc = items.value_counts()
-        else:
-            vc = pd.Series(weights).groupby(items.to_numpy()).sum()
-        for item, w in vc.items():
-            w = int(w)
+            counts = np.bincount(inverse)
+            # value_counts: keys in first-seen order, then sorted by count
+            # descending, pandas' way (a quicksort over the reversed counts)
+            seen = np.argsort(first)
+            keys, counts = keys[seen], counts[seen]
+            n = len(counts)
+            order = np.arange(n)[::-1][counts[::-1].argsort(kind="quicksort")][::-1]
+            keys, counts = keys[order], counts[order]
+        else:  # groupby().sum(): keys sorted
+            counts = np.zeros(len(keys), np.int64)
+            np.add.at(counts, inverse, weights)
+        for item, w in zip(keys.tolist(), counts.tolist()):
             self.total += w
             cur = self.counts.get(item)
             # new items enter at offset + w (the reference inserts at
@@ -133,7 +143,7 @@ def frequent_items_agg(
     cols = [item_col] + ([weight_col] if weight_col else [])
 
     def update(st: MGState, items: np.ndarray, *weights: np.ndarray) -> None:
-        st.update_batch(pd.Series(items), weights[0] if weights else None)
+        st.update_batch(items, weights[0] if weights else None)
 
     def emit(st: MGState) -> list[dict]:
         items, weights = st.rows()
@@ -141,27 +151,23 @@ def frequent_items_agg(
 
     partials = fold_partials(
         df.where(notna(df, item_col)), group_cols, cols,
-        lambda s, *w: (s.to_numpy(), *(x.to_numpy().astype(np.int64) for x in w)),
+        # datetimes as Timestamps, as a pandas index holds them
+        lambda s, *w: (
+            s.to_numpy(object if s.dtype.kind in "mM" else None),
+            *(x.to_numpy().astype(np.int64) for x in w),
+        ),
         lambda: MGState(max_map_size), update, emit, partial_schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(rows: list[dict]) -> list[dict]:
         st = MGState(max_map_size)
-        for row in pdf.to_dict("records"):
-            st.merge(list(row["items"]), list(row["weights"]), int(row["offset"]), int(row["total"]))
-        items, weights = st.rows()
-        r = {c: [pdf[c].iloc[0]] * len(items) for c in group_cols}
-        r["item"] = items
-        r["estimate"] = weights
-        r["lower_bound"] = [w - st.offset for w in weights]
-        r["upper_bound"] = weights
-        r["offset"] = [st.offset] * len(items)
-        r["total_weight"] = [st.total] * len(items)
-        return pd.DataFrame(
-            r,
-            columns=group_cols
-            + ["item", "estimate", "lower_bound", "upper_bound", "offset", "total_weight"],
-        )
+        for r in rows:
+            st.merge(list(r["items"]), list(r["weights"]), r["offset"], r["total"])
+        return [
+            dict(item=item, estimate=w, lower_bound=w - st.offset, upper_bound=w,
+                 offset=st.offset, total_weight=st.total)
+            for item, w in zip(*st.rows())
+        ]
 
     return merge_groups(partials, group_cols, final, out_schema)
 

@@ -490,7 +490,7 @@ def hll_stream_agg(
     for moderate per-group cardinality; at 100 TB use hll_sketch_agg
     (merged → composite estimate, exactly like the reference post-union).
     """
-    from .theta import _hash_series, _hashable_rows
+    from .theta import _hash_values, _hashable_rows
 
     item_dtype = dict(df.dtypes)[item_col]
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
@@ -504,22 +504,16 @@ def hll_stream_agg(
     )
     order_seed = seed ^ 0x9E3779B97F4A7C15
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        hashes, _mask = _hash_series(pdf[item_col], item_dtype, seed)
-        order_h, _ = _hash_series(pdf[item_col], item_dtype, order_seed)
+    def final(rows: list[dict]) -> list[dict]:
+        items = [r[item_col] for r in rows]
+        hashes = _hash_values(items, item_dtype, seed)
+        order_h = _hash_values(items, item_dtype, order_seed)
         st = HllState(lg_k)
         st.update_hashes(hashes[np.argsort(order_h, kind="stable")])
         lb, ub = st.get_bounds(num_std_devs)
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["estimate"] = [st.get_estimate()]
-        row["lower_bound"] = [lb]
-        row["upper_bound"] = [ub]
-        return pd.DataFrame(
-            row, columns=group_cols + ["estimate", "lower_bound", "upper_bound"]
-        )
+        return [{"estimate": st.get_estimate(), "lower_bound": lb, "upper_bound": ub}]
 
-    # unhashable items leave in Spark: a null beside a long item would make
-    # the group's pandas column float64 and round items above 2^53
+    # unhashable items leave in Spark: the final hashes every item it gets
     sel = _hashable_rows(df, item_col).select(group_cols + [item_col])
     return merge_groups(sel, group_cols, final, out_schema)
 
@@ -582,9 +576,6 @@ def finalize_hll_sketches(
     ``keep_registers`` also emits the merged K-byte register state (the
     input to hllserde.with_hll_bytes for cross-engine export)."""
     extra = [StructField("regs", BinaryType(), False)] if keep_registers else []
-    out_cols = ["estimate", "lower_bound", "upper_bound"] + (
-        ["regs"] if keep_registers else []
-    )
     out_schema = StructType(
         list(group_fields)
         + [
@@ -595,8 +586,8 @@ def finalize_hll_sketches(
         + extra
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs = [np.frombuffer(b, np.uint8) for b in pdf["regs"]]
+    def final(rows: list[dict]) -> list[dict]:
+        arrs = [np.frombuffer(r["regs"], np.uint8) for r in rows]
         k_min = min(a.shape[0] for a in arrs)
         # mixed lg_k (reference hll_union semantics): fold larger states
         # down to the group's smallest k before the register-max merge
@@ -611,24 +602,20 @@ def finalize_hll_sketches(
         # distributed two-stage agg == merged sketch: non-HIP (unioned)
         # relErr, table-driven at lg_k <= 12 like the reference
         lg_k_merged = int(k).bit_length() - 1
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["estimate"] = [est]
         # numNonZeros floor (reference HllArray getLowerBound): at least
         # as many distincts as provably-occupied registers — the relErr
         # quotient alone dips below that for tiny groups
         nnz = float(np.count_nonzero(regs))
-        row["lower_bound"] = [
-            max(
-                est / (1.0 + get_rel_err(False, True, lg_k_merged, num_std_devs)),
-                nnz,
-            )
-        ]
-        row["upper_bound"] = [
-            est / (1.0 + get_rel_err(True, True, lg_k_merged, num_std_devs))
-        ]
+        row = {
+            "estimate": est,
+            "lower_bound": max(
+                est / (1.0 + get_rel_err(False, True, lg_k_merged, num_std_devs)), nnz
+            ),
+            "upper_bound": est / (1.0 + get_rel_err(True, True, lg_k_merged, num_std_devs)),
+        }
         if keep_registers:
-            row["regs"] = [regs.tobytes()]
-        return pd.DataFrame(row, columns=group_cols + out_cols)
+            row["regs"] = regs.tobytes()
+        return [row]
 
     return merge_groups(partials, group_cols, final, out_schema)
 

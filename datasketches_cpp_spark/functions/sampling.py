@@ -195,30 +195,21 @@ def var_opt_agg(
         partial_schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = tuple(pdf[c].iloc[0] for c in group_cols)
-        items = pdf["item"].to_numpy()
-        w = pdf["adjusted_weight"].to_numpy(dtype=np.float64)
-        marked = pdf["marked"].to_numpy(dtype=bool)
-        content = int(np.bitwise_xor.reduce(
-            pd.util.hash_pandas_object(pdf["item"]).to_numpy()
-        )) if len(pdf) else 0
+    def final(rows: list[dict]) -> list[dict]:
+        # the items as the pandas column the content hash was first taken of
+        item = pd.Series([r["item"] for r in rows])
+        w = np.array([r["adjusted_weight"] for r in rows], np.float64)
+        marked = np.array([r["marked"] for r in rows], bool)
+        content = int(np.bitwise_xor.reduce(pd.util.hash_pandas_object(item).to_numpy()))
         rng = np.random.default_rng((seed ^ 0xABCD, content & 0xFFFFFFFF))
-        si, sw, sm = _varopt_sample(items, w, k, rng, marked)
-        per_partial = pdf.drop_duplicates(subset=["part_tag"])
-        tot = float(per_partial["total_weight"].sum())
-        n = int(per_partial["n"].sum())
-        out = {c: [key[i]] * len(si) for i, c in enumerate(group_cols)}
-        out["item"] = si
-        out["adjusted_weight"] = sw
-        out["total_weight"] = [tot] * len(si)
-        out["n"] = [n] * len(si)
-        out["weight_exact"] = ~sm
-        return pd.DataFrame(
-            out,
-            columns=group_cols
-            + ["item", "adjusted_weight", "total_weight", "n", "weight_exact"],
-        )
+        si, sw, sm = _varopt_sample(item.to_numpy(), w, k, rng, marked)
+        per_partial = {r["part_tag"]: r for r in rows}.values()
+        tot = float(np.sum([r["total_weight"] for r in per_partial]))
+        n = sum(r["n"] for r in per_partial)
+        return [
+            dict(item=i, adjusted_weight=aw, total_weight=tot, n=n, weight_exact=not m)
+            for i, aw, m in zip(si, sw, sm)
+        ]
 
     return merge_groups(partials, group_cols, final, schema)
 

@@ -36,24 +36,28 @@ from ..hashing import INT_DTYPES as _INT_TYPES  # one shared definition
 from ._twostage import fold_partials, merge_groups, notna, pair_rows
 
 
-def _hash_series(s: pd.Series, dtype: str, seed: int) -> np.ndarray:
-    """Hash one pandas column exactly like the reference hashes items:
-    ints widen to int64 / 8 LE bytes (theta_sketch_impl.hpp:146-183),
-    strings are UTF-8 bytes (:186-199), binary is raw bytes (:202-209).
-    Nulls and empty strings are no-ops (skipped)."""
-    mask = s.notna().to_numpy()
+def _hash_values(vals, dtype: str, seed: int) -> np.ndarray:
+    """Hash items exactly like the reference hashes them: ints widen to
+    int64 / 8 LE bytes (theta_sketch_impl.hpp:146-183), strings are UTF-8
+    bytes (:186-199), binary is raw bytes (:202-209). ``vals`` holds no
+    null, NaN or empty string or binary."""
     if dtype in _INT_TYPES:
-        vals = s.dropna().to_numpy(dtype=np.int64)
-        return hash63_int64(vals, seed), mask
+        return hash63_int64(np.asarray(vals, np.int64), seed)
     if dtype == "binary":
-        bufs = [bytes(b) for b in s.dropna() if len(b) > 0]
-        arr = hash63_bytes_many(bufs, seed)
-        mask = mask & s.map(lambda b: b is not None and len(b) > 0).to_numpy()
-        return arr, mask
+        return hash63_bytes_many([bytes(b) for b in vals], seed)
     # default: stringify (covers string, decimal rendered as text)
-    vals = [str(v) for v in s.dropna() if str(v) != ""]
-    mask = mask & (s.astype("string").fillna("").str.len() > 0).to_numpy()
-    return hash63_str_many(vals, seed), mask
+    return hash63_str_many([str(v) for v in vals], seed)
+
+
+def _hash_series(s: pd.Series, dtype: str, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """``_hash_values`` of one pandas column's items, and the mask of the
+    rows hashed: nulls and empty strings and binary are no-ops (skipped)."""
+    mask = s.notna().to_numpy()
+    if dtype == "binary":
+        mask &= s.map(lambda b: b is not None and len(b) > 0).to_numpy()
+    elif dtype not in _INT_TYPES:
+        mask &= (s.astype("string").fillna("").str.len() > 0).to_numpy()
+    return _hash_values(s[mask], dtype, seed), mask
 
 
 def _hashable_rows(df: DataFrame, item_col: str) -> DataFrame:
@@ -161,22 +165,18 @@ def theta_sketch_agg(
     return _final_merge(partials, group_cols, k, out_schema)
 
 
-def _merge_pdf(pdf: pd.DataFrame, group_cols: list[str], k: int) -> pd.DataFrame:
-    theta = min((_decode_theta(t) for t in pdf["theta"]), default=MAX_THETA)
-    sigs = [np.asarray(s, dtype=np.int64).astype(np.uint64) for s in pdf["sig"]]
-    merged = np.unique(np.concatenate(sigs)) if sigs else np.empty(0, np.uint64)
-    merged = merged[: np.searchsorted(merged, np.uint64(theta))]
-    if len(merged) > k:
-        theta = int(merged[k])
-        merged = merged[:k]
-    row = {c: [pdf[c].iloc[0]] for c in group_cols}
-    row["theta"] = [_encode_theta(theta)]
-    row["sig"] = [merged.astype(np.int64)]
-    return pd.DataFrame(row, columns=group_cols + ["theta", "sig"])
-
-
 def _final_merge(partials: DataFrame, group_cols: list[str], k: int, schema: StructType) -> DataFrame:
-    return merge_groups(partials, group_cols, lambda pdf: _merge_pdf(pdf, group_cols, k), schema)
+    def final(rows: list[dict]) -> list[dict]:
+        theta = min((_decode_theta(r["theta"]) for r in rows), default=MAX_THETA)
+        sigs = [np.asarray(r["sig"], dtype=np.int64).astype(np.uint64) for r in rows]
+        merged = np.unique(np.concatenate(sigs)) if sigs else np.empty(0, np.uint64)
+        merged = merged[: np.searchsorted(merged, np.uint64(theta))]
+        if len(merged) > k:
+            theta = int(merged[k])
+            merged = merged[:k]
+        return [{"theta": _encode_theta(theta), "sig": merged.astype(np.int64)}]
+
+    return merge_groups(partials, group_cols, final, schema)
 
 
 def with_estimate(sketch_df: DataFrame, out_col: str = "estimate") -> DataFrame:

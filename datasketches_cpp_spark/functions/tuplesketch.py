@@ -33,9 +33,11 @@ from ._twostage import fold_partials, merge_groups, notna, pair_rows
 _POLICIES = {"sum": "sum", "max": "max", "min": "min", "one": "first"}
 
 
-def _hash_items(items: pd.Series, dtype: str, seed: int) -> np.ndarray:
+def _hash_items(items, dtype: str, seed: int) -> np.ndarray:
+    """Hash a column of items (a pandas Series or a list): ints as int64,
+    anything else as its text."""
     if dtype in _INT_TYPES:
-        return hash63_int64(items.to_numpy(dtype=np.int64), seed)
+        return hash63_int64(np.asarray(items, np.int64), seed)
     return hash63_str_many([str(v) for v in items], seed)
 
 
@@ -62,6 +64,12 @@ def _cut(
         theta = int(hashes[k])
         hashes, summaries = hashes[:k], summaries[:k]
     return theta, hashes, summaries
+
+
+def _min_theta(rows: list[dict]) -> int:
+    """The merged theta of partial rows: the least encoded theta (-1 ⇔
+    MAX_THETA, which exceeds every real value)."""
+    return min((r["theta"] for r in rows if r["theta"] >= 0), default=MAX_THETA)
 
 
 def tuple_sketch_agg(
@@ -116,22 +124,12 @@ def tuple_sketch_agg(
         lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        # vectorized partial merge: theta = min over encoded thetas
-        # (-1 ⇔ MAX_THETA, which exceeds every real value), sig/summary
-        # arrays gathered by column — no per-row pandas objects
-        ts = pdf["theta"].to_numpy()
-        enc = ts[ts >= 0]
-        theta = int(enc.min()) if len(enc) else MAX_THETA
-        hs = [np.asarray(sig, np.int64).astype(np.uint64) for sig in pdf["sig"].to_numpy()]
-        ss = [np.asarray(sm, np.float64) for sm in pdf["summaries"].to_numpy()]
+    def final(rows: list[dict]) -> list[dict]:
+        theta = _min_theta(rows)
+        hs = [np.asarray(r["sig"], np.int64).astype(np.uint64) for r in rows]
+        ss = [np.asarray(r["summaries"], np.float64) for r in rows]
         h, s = _fold(np.concatenate(hs), np.concatenate(ss), policy)
-        theta, h, s = _cut(h, s, theta, k)
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r["theta"] = [-1 if theta >= MAX_THETA else theta]
-        r["sig"] = [h.astype(np.int64)]
-        r["summaries"] = [s]
-        return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
+        return emit([theta, h, s])
 
     return merge_groups(partials, group_cols, final, schema)
 
@@ -374,20 +372,12 @@ def array_tuple_sketch_agg(
         lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        # vectorized partial merge (see scalar-summary final above)
-        ts = pdf["theta"].to_numpy()
-        enc = ts[ts >= 0]
-        theta = int(enc.min()) if len(enc) else MAX_THETA
-        hs = [np.asarray(sig, np.int64).astype(np.uint64) for sig in pdf["sig"].to_numpy()]
-        ss = [np.asarray(sm, np.float64).reshape(-1, d) for sm in pdf["summaries"].to_numpy()]
+    def final(rows: list[dict]) -> list[dict]:
+        theta = _min_theta(rows)
+        hs = [np.asarray(r["sig"], np.int64).astype(np.uint64) for r in rows]
+        ss = [np.asarray(r["summaries"], np.float64).reshape(-1, d) for r in rows]
         h, s = _fold_nd(np.concatenate(hs), np.concatenate(ss), policy)
-        theta, h, s = _cut(h, s, theta, k)
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r["theta"] = [-1 if theta >= MAX_THETA else theta]
-        r["sig"] = [h.astype(np.int64)]
-        r["summaries"] = [s.reshape(-1)]
-        return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
+        return emit([theta, h, s])
 
     return merge_groups(partials, group_cols, final, schema)
 
@@ -547,21 +537,12 @@ def aos_sketch_agg(
         lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf["theta"].to_numpy()
-        enc = ts[ts >= 0]
-        theta = int(enc.min()) if len(enc) else MAX_THETA
-        hs = np.concatenate(
-            [np.asarray(s, np.int64).astype(np.uint64) for s in pdf["sig"]]
-        ) if len(pdf) else np.empty(0, np.uint64)
-        vs = [list(item) for s in pdf["summaries"] for item in s]
+    def final(rows: list[dict]) -> list[dict]:
+        theta = _min_theta(rows)
+        hs = np.concatenate([np.asarray(r["sig"], np.int64).astype(np.uint64) for r in rows])
+        vs = [list(item) for r in rows for item in r["summaries"]]
         h, v = _aos_fold(hs, vs)
-        theta, h, v = _aos_cut(h, v, theta, k)
-        r = {c: [pdf[c].iloc[0]] for c in group_cols}
-        r["theta"] = [-1 if theta >= MAX_THETA else theta]
-        r["sig"] = [h.astype(np.int64)]
-        r["summaries"] = [v]
-        return pd.DataFrame(r, columns=group_cols + ["theta", "sig", "summaries"])
+        return emit([theta, h, v])
 
     return merge_groups(partials, group_cols, final, schema)
 

@@ -1173,3 +1173,31 @@ def test_density_agg_skips_null_vectors(spark):
     df = spark.createDataFrame(rows, "v array<double>")
     out = density_sketch_agg(df, [], "v", k=16, dim=2).collect()
     assert len(out) == 1  # null row skipped, not a batch crash
+
+
+def test_mg_fold_counts_in_pandas_order():
+    """``MGState.update_batch`` counts a batch with numpy, key by key in
+    the order pandas gives: ``value_counts`` unweighted (keys first-seen,
+    then by count descending, ties as pandas' quicksort leaves them) and
+    ``groupby().sum()`` weighted (keys sorted). The partial state's bytes
+    depend on that order. Strings, ints and doubles with -0.0 beside 0.0
+    (each kept as first seen), over many small Zipf batches full of ties."""
+    def folded(items, weights=None):
+        st = MGState(1 << 20)  # never purges: counts hold the fold order
+        st.update_batch(items, weights)
+        return [(repr(k), v) for k, v in st.counts.items()]
+
+    rng = np.random.default_rng(7)
+    for _ in range(300):
+        n = int(rng.integers(1, 400))
+        ints = rng.zipf(1.3, n) % 60
+        weights = rng.integers(1, 6, n)
+        for items in (
+            ints,
+            ints.astype(str).astype(object),
+            np.where(rng.random(n) < 0.5, -1.0, 1.0) * (ints % 3) / 4.0,
+        ):
+            want = pd.Series(items).value_counts()
+            assert folded(items) == [(repr(k), int(v)) for k, v in want.items()]
+            want = pd.Series(weights).groupby(items).sum()
+            assert folded(items, weights) == [(repr(k), int(v)) for k, v in want.items()]

@@ -1,18 +1,20 @@
 """``merge_groups`` (the shared final stage of the two-stage sketch
 aggregates) against the grouped-map final it replaced,
-``groupBy(...).applyInPandas(final)``: on the same partials every family
-must give identical ``toPandas()`` output — including the order-sensitive
-merges (KLL, classic, t-digest, REQ), whose bytes depend on the order in
-which a group's partial rows reach ``final``. And the groups of both
-stages (``fold_partials`` and ``merge_groups``) against Spark's own
-``groupBy``."""
+``groupBy(...).applyInPandas(final)`` with the family's ``final`` behind
+a rows <-> pandas adapter: on the same partials every family must give
+identical ``toPandas()`` output — including the order-sensitive merges
+(KLL, classic, t-digest, REQ), whose bytes depend on the order in which a
+group's partial rows reach ``final``. And the groups of both stages
+(``fold_partials`` and ``merge_groups``) against Spark's own ``groupBy``."""
 
 import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 from datasketches_cpp_spark.functions import (
     _twostage,
@@ -37,10 +39,23 @@ from datasketches_cpp_spark.functions import (
 
 
 def _reference(partials, group_cols, final, schema):
-    """The per-group final every family used before ``merge_groups``."""
+    """The per-group final every family used before ``merge_groups``:
+    Spark's grouped map, ``groupBy().applyInPandas``, running ``final``
+    behind a thin rows <-> pandas adapter. The rows are the group's pandas
+    rows (``to_dict("records")``: each list as a numpy array, a null double
+    as NaN); the group columns are set from the group's first row, as the
+    pandas finals set them."""
+    names = (StructType.fromDDL(schema) if isinstance(schema, str) else schema).names
+
+    def grouped_map(pdf):
+        out = pd.DataFrame(final(pdf.to_dict("records")), columns=names)
+        for c in group_cols:
+            out[c] = [pdf[c].iloc[0]] * len(out)
+        return out
+
     if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(final, schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(final, schema)
+        return partials.groupBy(*group_cols).applyInPandas(grouped_map, schema)
+    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(grouped_map, schema)
 
 
 def _use_reference(m, module):
@@ -136,8 +151,8 @@ def test_family_matches_grouped_map(spark, monkeypatch, family, group_cols):
 
 @pytest.mark.parametrize("family", sorted(FAMILIES))
 def test_null_free_batches_match_grouped_map(spark, monkeypatch, family):
-    """Without a null in a batch its groups are sliced from one pandas
-    conversion; they must still match the per-group conversion."""
+    """Batches without a null key match the grouped map too (the pandas
+    finals sliced such a batch from one conversion)."""
     df = _frame(spark).where("g IS NOT NULL AND d IS NOT NULL")
     _same_as_reference(monkeypatch, family, df, ["g", "d"])
 
@@ -172,8 +187,8 @@ def one_shuffle_partition(spark):
     spark.conf.set(key, old)
 
 
-def _keys_and_rows(pdf):
-    return pd.DataFrame({"k": [pdf["k"].iloc[0]], "xs": [list(pdf["x"])]})
+def _keys_and_rows(rows):
+    return [{"xs": [r["x"] for r in rows]}]
 
 
 def test_null_and_nan_keys_stay_apart(spark, one_shuffle_partition):
@@ -234,6 +249,50 @@ def test_partial_groups_are_spark_groups(spark, one_shuffle_partition, case):
     for group_cols in (["k"], ["k", "j"]):
         got = quantiles.kll_sketch_agg(df, group_cols, "x").select(*group_cols, "kll_n")
         assert _collected(got) == _collected(df.groupBy(*group_cols).count())
+
+
+NESTED_KEYS = {
+    "array": (
+        "k array<double>",
+        [[NAN], [NAN], [-0.0], [0.0], None, [None], [1.0, -0.0], [1.0, 0.0], [NAN]],
+    ),
+    "struct": (
+        "k struct<p: double, q: array<double>>",
+        [(NAN, [-0.0]), (NAN, [0.0]), (-0.0, [NAN]), (0.0, [NAN]), None, (None, None),
+         (NAN, [-0.0])],
+    ),
+}
+
+
+def _spark_rows(df):
+    """Collected rows in exact form (-0.0 apart from 0.0), sorted."""
+    return sorted(repr(_canon(tuple(r))) for r in df.collect())
+
+
+@pytest.mark.parametrize("case", sorted(NESTED_KEYS))
+def test_nested_keys_are_spark_groups(spark, one_shuffle_partition, case):
+    """A key that is an array or a struct groups as Spark's ``groupBy``
+    groups it, NaN equal to NaN and -0.0 equal to 0.0 at any depth, and
+    comes back as Spark returns it (-0.0 as 0.0): through both stages
+    (KLL), through the final stage alone on raw rows (the HLL stream
+    aggregate), and grouped by two columns."""
+    ddl, keys = NESTED_KEYS[case]
+    df = spark.createDataFrame(
+        [(k, i % 2, float(i)) for i, k in enumerate(keys)], f"{ddl}, j int, x double"
+    ).repartition(1)
+    for group_cols in (["k"], ["k", "j"]):
+        want = df.groupBy(*group_cols).count()
+        got = quantiles.kll_sketch_agg(df, group_cols, "x").select(*group_cols, "kll_n")
+        assert _spark_rows(got) == _spark_rows(want)
+        got = hll.hll_stream_agg(df, group_cols, "x").select(*group_cols)
+        assert _spark_rows(got) == _spark_rows(want.select(*group_cols))
+
+
+def test_key_changes_compare_nested_keys_as_spark():
+    """Adjacent nested keys differ where Spark's groups differ: two [NaN]
+    keys are one group, and so are [-0.0] and [0.0]."""
+    keys = [pa.array([[NAN], [NAN], [-0.0], [0.0], [None], None])]
+    assert _twostage._key_changes(keys, 6).tolist() == [False, True, False, True, True]
 
 
 @pytest.mark.parametrize(
