@@ -13,6 +13,11 @@ several partial rows) and holds no null or NaN in its keys or items.
 
 Var-opt tags each partial row with a random id, but its final only uses
 the tag to count each partial's totals once, so its output is pinned whole.
+
+The finals that read items themselves (frequent items, var-opt and the HLL
+and CPC streams) are pinned again over items of the types the frame does
+not hold (date, decimal, boolean, binary, each null in every eleventh row),
+where each accepts them.
 """
 
 import hashlib
@@ -135,6 +140,49 @@ def _frame(spark, n):
     )
 
 
+# sha256 prefixes of (schema, sorted rows) per aggregate and item type,
+# grouped by "g"
+TYPE_AGGS = {
+    "frequent_items_agg": lambda df, c: freq.frequent_items_agg(
+        df, ["g"], c, max_map_size=8, weight_col="wl"),
+    "var_opt_agg": lambda df, c: sampling.var_opt_agg(df, ["g"], c, "w", k=8),
+    "hll_stream_agg": lambda df, c: hll.hll_stream_agg(df, ["g"], c, lg_k=6),
+    "cpc_stream_agg": lambda df, c: cpc.cpc_stream_agg(df, ["g"], c, lg_k=6),
+}
+TYPE_PINS = {
+    ("frequent_items_agg", "dec"): "1507a59e22b2e93a",
+    ("frequent_items_agg", "bo"): "9bd788d6c9f903b6",
+    ("frequent_items_agg", "bin"): "1937ab748fdb7969",
+    ("var_opt_agg", "dt"): "1ca219116ab18be3",
+    ("var_opt_agg", "dec"): "6be1808c5e5613e4",
+    ("var_opt_agg", "bo"): "2bcf723f34e677c1",
+    ("var_opt_agg", "bin"): "7cb82d76192cb4e1",
+    ("hll_stream_agg", "dec"): "a2fc68708feda13e",
+    ("hll_stream_agg", "bo"): "5ba1493dc9e2bd54",
+    ("hll_stream_agg", "bin"): "518c380ee200933a",
+    ("cpc_stream_agg", "dec"): "254e6b5a0bf00cd9",
+    ("cpc_stream_agg", "bo"): "2f2288b9e1057034",
+    ("cpc_stream_agg", "bin"): "96cff72bedd5e49f",
+}
+
+
+def _typed_frame(spark, n):
+    h = F.xxhash64(F.col("id"), F.lit(SEED))
+    items = {
+        "dt": F.date_add(F.lit("2024-01-01").cast("date"), F.pmod(h, F.lit(40)).cast("int")),
+        "dec": (F.pmod(h, F.lit(97)) / 4).cast("decimal(10,2)"),
+        "bo": F.pmod(h, F.lit(3)) == 0,
+        "bin": F.unhex(F.hex(F.pmod(h, F.lit(60)) * 1000003)),
+    }
+    present = F.col("id") % 11 != 0
+    return spark.range(0, n, numPartitions=6).select(
+        F.concat(F.lit("g"), F.pmod(h, F.lit(3)).cast("string")).alias("g"),
+        *(F.when(present, c).alias(name) for name, c in items.items()),
+        (F.pmod(F.col("id"), F.lit(4)) + 1).cast("double").alias("w"),
+        (F.pmod(F.col("id"), F.lit(3)) + 1).alias("wl"),
+    )
+
+
 def _canon(v):
     if isinstance(v, (list, tuple)):
         return tuple(_canon(x) for x in v)
@@ -170,3 +218,9 @@ def _pins(spark, name):
 @pytest.mark.parametrize("name", sorted(AGGS))
 def test_final_output_pinned(spark, name):
     assert _pins(spark, name) == PINS[name]
+
+
+def test_final_output_pinned_item_types(spark):
+    df = _typed_frame(spark, 600)
+    got = {(name, c): _hash(TYPE_AGGS[name](df, c)) for name, c in TYPE_PINS}
+    assert got == TYPE_PINS

@@ -11,6 +11,12 @@ state).
 The frame is deterministic, has six input partitions, and holds no null
 or NaN in its keys or items. The order-sensitive families are pinned again
 under ``maxRecordsPerBatch=2``, where every group spans many Arrow batches.
+
+A second frame holds items of the types the first does not (timestamp,
+date, decimal, boolean, binary, each null in every eleventh row), and each
+family is pinned over every one of them it accepts, in a session whose
+time zone is not UTC: a family that hashes an item by its text sees a
+timestamp as its local wall-clock time.
 """
 
 import hashlib
@@ -106,6 +112,80 @@ PINS_SMALL_BATCHES = {
 }
 
 
+# sha256 prefixes of the sorted partial rows over each item type a family
+# accepts, grouped by "g" (bloom: keyless). Frequent items is left out over
+# timestamps and dates: its final fails on both.
+TYPE_PINS = {
+    ("bloom", "ts"): "998c98ca3fc48c85",
+    ("bloom", "dec"): "9349e4db45a1c7eb",
+    ("bloom", "bo"): "813f7fa7dd51a697",
+    ("bloom", "bin"): "d5de66ab8b6d5e4f",
+    ("classic", "ts"): "8673462b4db508f3",
+    ("classic", "dec"): "c90046818cb3be55",
+    ("classic", "bo"): "40834cd85d40e43e",
+    ("countmin", "ts"): "77f78794b8875950",
+    ("countmin", "dec"): "968a111de2a96ecc",
+    ("countmin", "bo"): "42a1c0c617cadda5",
+    ("countmin", "bin"): "d4a006558844726d",
+    ("cpc", "ts"): "734c878f6f95521a",
+    ("cpc", "dec"): "3cb69ee2f77e03ed",
+    ("cpc", "bo"): "b73bc619ed4cd565",
+    ("cpc", "bin"): "1dda49792c1d6a7e",
+    ("freq", "dec"): "d4938170e73f21a5",
+    ("freq", "bo"): "b75c7cc2ef41285c",
+    ("freq", "bin"): "72ac2a7c64be7351",
+    ("hll", "ts"): "8d6a4fa350099ad5",
+    ("hll", "dec"): "2be673f59a8f9a26",
+    ("hll", "bo"): "b0efe65dec02a654",
+    ("hll", "bin"): "33fae75149667bdd",
+    ("kll", "ts"): "46fa288a186b1b05",
+    ("kll", "dec"): "116c19badb69f56a",
+    ("kll", "bo"): "b0c2e9e07dfad790",
+    ("req", "ts"): "0450012292830c13",
+    ("req", "dec"): "37c2728b267570f8",
+    ("req", "bo"): "a9ebcce612958e49",
+    ("sampling", "dt"): "e17bf3a9bbe903c4",
+    ("sampling", "dec"): "b9a87b50e9147267",
+    ("sampling", "bo"): "df60e09f310ee295",
+    ("sampling", "bin"): "82ad104d513bfa20",
+    ("tdigest", "ts"): "491c3da23f5348d6",
+    ("tdigest", "dec"): "710be501776c55b3",
+    ("tdigest", "bo"): "69b01fa8cc30afef",
+    ("theta", "ts"): "6b5ebab2aa156302",
+    ("theta", "dec"): "869acab53ee9226e",
+    ("theta", "bo"): "b60c60fed3eb5080",
+    ("theta", "bin"): "1290f274a094b133",
+    ("tuple", "ts"): "b5f785f56c98ba31",
+    ("tuple", "dec"): "b6e52fff2d66ffed",
+    ("tuple", "bo"): "b8cd237a0d9ca7e9",
+    ("tuple", "bin"): "570f91feafd4dc00",
+    ("array_tuple", "ts"): "967b981337f6bec6",
+    ("array_tuple", "dec"): "96bd0b0c6367e169",
+    ("array_tuple", "bo"): "569b97315d796375",
+    ("array_tuple", "bin"): "e8b277aad3cde842",
+}
+
+TYPED = {
+    "bloom": lambda df, c: bloom.bloom_filter_agg(df, c, 512, 3),
+    "classic": lambda df, c: classic_quantiles.classic_quantiles_agg(df, ["g"], c, k=8),
+    "countmin": lambda df, c: countmin.count_min_agg(
+        df, ["g"], c, num_hashes=3, num_buckets=64, weight_col="wl"
+    ),
+    "cpc": lambda df, c: cpc.cpc_sketch_agg(df, ["g"], c, lg_k=6),
+    "freq": lambda df, c: freq.frequent_items_agg(df, ["g"], c, max_map_size=8, weight_col="wl"),
+    "hll": lambda df, c: hll.hll_sketch_agg(df, ["g"], c, lg_k=6),
+    "kll": lambda df, c: quantiles.kll_sketch_agg(df, ["g"], c, k=16),
+    "req": lambda df, c: req.req_sketch_agg(df, ["g"], c, k=4),
+    "sampling": lambda df, c: sampling.var_opt_agg(df, ["g"], c, "w", k=8),
+    "tdigest": lambda df, c: tdigest.tdigest_agg(df, ["g"], c, delta=20),
+    "theta": lambda df, c: theta.theta_sketch_agg(df, ["g"], c, lg_k=5),
+    "tuple": lambda df, c: tuplesketch.tuple_sketch_agg(df, ["g"], c, "w", lg_k=4),
+    "array_tuple": lambda df, c: tuplesketch.array_tuple_sketch_agg(
+        df, ["g"], c, "vals", 2, lg_k=4
+    ),
+}
+
+
 def _frame(spark, n):
     h = F.xxhash64(F.col("id"), F.lit(SEED))
     return spark.range(0, n, numPartitions=6).select(
@@ -123,6 +203,28 @@ def _frame(spark, n):
     )
 
 
+def _typed_frame(spark, n):
+    h = F.xxhash64(F.col("id"), F.lit(SEED))
+    items = {
+        # whole seconds and fractions of one
+        "ts": F.timestamp_seconds(
+            F.lit(1704067200) + F.pmod(h, F.lit(50)) * 3600 + F.pmod(F.col("id"), F.lit(3)) / 8
+        ),
+        "dt": F.date_add(F.lit("2024-01-01").cast("date"), F.pmod(h, F.lit(40)).cast("int")),
+        "dec": (F.pmod(h, F.lit(97)) / 4).cast("decimal(10,2)"),
+        "bo": F.pmod(h, F.lit(3)) == 0,
+        "bin": F.unhex(F.hex(F.pmod(h, F.lit(60)) * 1000003)),
+    }
+    present = F.col("id") % 11 != 0
+    return spark.range(0, n, numPartitions=6).select(
+        F.concat(F.lit("g"), F.pmod(h, F.lit(3)).cast("string")).alias("g"),
+        *(F.when(present, c).alias(name) for name, c in items.items()),
+        (F.pmod(F.col("id"), F.lit(4)) + 1).cast("double").alias("w"),
+        (F.pmod(F.col("id"), F.lit(3)) + 1).alias("wl"),
+        F.array(F.lit(1.0), (F.col("id") % 5).cast("double")).alias("vals"),
+    )
+
+
 def _canon(v):
     if isinstance(v, (list, tuple)):
         return tuple(_canon(x) for x in v)
@@ -133,8 +235,8 @@ def _canon(v):
     return v
 
 
-def _partial_hash(monkeypatch, family, df, group_cols):
-    module, agg = FAMILIES[family]
+def _partial_hash(monkeypatch, family, df, group_cols, agg=None):
+    module, agg = FAMILIES[family][0], agg or FAMILIES[family][1]
     with monkeypatch.context() as m:
         # a family that runs through sketch_agg reaches merge_groups there
         target = module if hasattr(module, "merge_groups") else _twostage
@@ -166,3 +268,20 @@ def test_partial_state_pinned_small_batches(spark, monkeypatch, family):
     finally:
         spark.conf.set(key, old)
     assert got == PINS_SMALL_BATCHES[family]
+
+
+def test_partial_state_pinned_item_types(spark, monkeypatch):
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        df = _typed_frame(spark, 600)
+        got = {
+            (family, item): _partial_hash(
+                monkeypatch, family, df, None, lambda d, _: TYPED[family](d, item)
+            )
+            for family, item in TYPE_PINS
+        }
+    finally:
+        spark.conf.set(key, old)
+    assert got == TYPE_PINS

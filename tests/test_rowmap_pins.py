@@ -12,6 +12,10 @@ either: the pins hold answers that are correct as they stand.
 
 ``hll_from_bytes`` is pinned as the inverse of ``with_hll_bytes``: the
 registers come back identical, and a stream of another ``lg_k`` fails.
+
+The two item probes are pinned again over items of the types the frame
+does not hold (timestamp, decimal, boolean, binary, each null in every
+eleventh row), in a session whose time zone is not UTC.
 """
 
 import hashlib
@@ -169,6 +173,64 @@ def test_probe_sites_pinned(spark, frame):
     sk = _local(spark, countmin.count_min_agg(frame, [], "item", num_hashes=3, num_buckets=64))
     got["countmin_cross"] = _hash(countmin.estimate_frequencies(sk, probe, "item"))
     assert got == {s: PINS[s] for s in got}
+
+
+# sha256 prefixes of (schema, sorted rows) per probe and item type
+TYPE_PINS = {
+    "bloom_might_contain_bin": "e4703488a6346b4d",
+    "bloom_might_contain_bo": "a761d64b44abd675",
+    "bloom_might_contain_dec": "d5bef0ce87dc0833",
+    "bloom_might_contain_ts": "16f211af2ea14e3c",
+    "countmin_keyed_bin": "e0a6129e4be9129e",
+    "countmin_keyed_bo": "d9a2d73a4fee442b",
+    "countmin_keyed_dec": "c869dfadd9731108",
+    "countmin_keyed_ts": "ed7975402bf9b5fa",
+}
+
+
+def _typed_frame(spark, n=600):
+    h = F.xxhash64(F.col("id"), F.lit(SEED))
+    items = {
+        # whole seconds and fractions of one
+        "ts": F.timestamp_seconds(
+            F.lit(1704067200) + F.pmod(h, F.lit(50)) * 3600 + F.pmod(F.col("id"), F.lit(3)) / 8
+        ),
+        "dec": (F.pmod(h, F.lit(97)) / 4).cast("decimal(10,2)"),
+        "bo": F.pmod(h, F.lit(3)) == 0,
+        "bin": F.unhex(F.hex(F.pmod(h, F.lit(60)) * 1000003)),
+    }
+    present = F.col("id") % 11 != 0
+    return spark.range(0, n, numPartitions=3).select(
+        F.concat(F.lit("g"), F.pmod(h, F.lit(3)).cast("string")).alias("g"),
+        F.pmod(F.col("id"), F.lit(2)).alias("side"),
+        *(F.when(present, c).alias(name) for name, c in items.items()),
+    )
+
+
+def test_probe_sites_pinned_item_types(spark):
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        frame = _typed_frame(spark)
+        got = {}
+        for c in ("ts", "dec", "bo", "bin"):
+            filt = _local(spark, bloom.bloom_filter_agg(frame.where("side = 0"), c, 512, 3))
+            sk = _local(
+                spark, countmin.count_min_agg(frame, ["g"], c, num_hashes=3, num_buckets=64)
+            )
+            probes = {
+                "bloom_might_contain": bloom.might_contain(frame.select("g", c), filt, c),
+                "countmin_keyed": countmin.estimate_frequencies(
+                    sk, frame.select("g", c).distinct(), c, ["g"]
+                ),
+            }
+            for site, out in probes.items():
+                # a timestamp collects in the driver's time zone: hash its text
+                got[f"{site}_{c}"] = _hash(out.withColumn(c, F.col(c).cast("string")))
+    finally:
+        spark.conf.set(key, old)
+    assert got == TYPE_PINS
 
 
 SETOP_KEYS = {"string": ["g"], "long": ["k"], "double": ["d"], "global": []}
