@@ -17,19 +17,21 @@ spans a batch boundary is carried over to the next batch, so every group
 reaches ``final`` with the same rows in the same order as under
 ``applyInPandas``; order-sensitive merges (KLL, classic, REQ, t-digest)
 give the same bytes. ``final`` gets the group's rows as dicts, read from
-Arrow once per batch (``_values``: a list column as numpy slices over its
-offsets), and returns its output rows as dicts, converted to Arrow as
-``fold_partials`` converts ``emit``'s; no pandas frame is built per group.
-The group columns of the output are set from the exact Arrow key, so a
-NaN key or a long key above 2^53 comes back as it went in.
+Arrow once per batch, and returns its output rows as dicts; no pandas
+frame is built per group. The group columns of the output are set from
+the exact Arrow key, so a NaN key or a long key above 2^53 comes back as
+it went in.
 
 Both stages compare keys as Spark groups them, also inside an array or
 struct key: NaN equal to NaN, -0.0 equal to 0.0 (and returned as 0.0),
 null equal to null only. Spark cannot sort a map, so the final stage
-refuses a map key. The partial stage converts each item column once
-per batch, an integer column with a null to exact Python ints, and the
-family turns it into per-row numpy arrays (hashes, say) that each group's
-update takes a slice of.
+refuses a map key.
+
+Every Python pass reads its Arrow columns with ``column_values`` (numpy,
+one entry per row) and writes them with ``to_arrow``. The partial stage
+reads each item column once per batch; the family turns it into per-row
+numpy arrays (hashes, say) that each group's update takes a slice of. A
+final's and a reader's rows are the entries of the same arrays.
 
 ``sketch_agg`` runs both stages for a family whose state is one sketch
 object per group (KLL, KLL over strings, REQ, classic quantiles, t-digest,
@@ -38,9 +40,8 @@ density): ``update_batch`` folds, ``to_row`` emits, ``from_row`` and
 
 ``map_rows`` is the one per-row pass over a sketch table, behind every
 reader, serde writer and reader, probe and set-op: one ``mapInArrow`` call
-that hands a batch-level function the columns it reads, each converted by
-the ``_items`` rule (an integer column with a null arrives as exact Python
-ints), and adds one column per sequence the function returns. Every other
+that hands a batch-level function the columns it reads as numpy arrays
+and adds one column per sequence the function returns. Every other
 column passes through in Arrow, untouched, so a long key beside a null key
 is not rounded; the columns the function consumed (a blob, a broadcast
 filter) can be dropped. ``read_sketches`` is its use for such states: each
@@ -52,7 +53,6 @@ from __future__ import annotations
 from typing import Any, Callable, Iterable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
@@ -64,9 +64,11 @@ from pyspark.sql.types import (
 _NAN = object()  # NaN as a dict key: equal to itself, unlike float("nan")
 
 
-def _worker_conf(df: DataFrame, schema: StructType | str) -> tuple[str, bool, pa.StructType]:
-    """The session time zone, whether pandas → Arrow casts are checked,
-    and ``schema`` in Arrow: read on the driver for the Python workers."""
+def _worker_conf(df: DataFrame, schema: StructType | str) -> tuple[bool, pa.StructType]:
+    """Whether casts to Arrow are checked, and ``schema`` in Arrow with each
+    timestamp in the session's time zone, the zone a Python pass reads and
+    writes a timestamp's wall-clock time in: read on the driver for the
+    Python workers."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     conf = df.sparkSession.conf
@@ -75,15 +77,71 @@ def _worker_conf(df: DataFrame, schema: StructType | str) -> tuple[str, bool, pa
         prefers_large_types=conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true",
     )
     safecheck = conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true"
-    return conf.get("spark.sql.session.timeZone"), safecheck, out_type
+    tz = conf.get("spark.sql.session.timeZone")
+    return safecheck, pa.struct([f.with_type(_zoned_type(f.type, tz)) for f in out_type])
 
 
-def _serializer(timezone: str, safecheck: bool):
-    """The serializer applyInPandas' workers use, for the same pandas
-    dtypes in and the same Arrow casts out."""
-    from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+def column_values(a: pa.Array) -> np.ndarray:
+    """An Arrow column as every Python pass reads it, one entry per row: a
+    list column as numpy slices over its offsets (None for a null list),
+    each read by this rule; an integer column with a null as exact Python
+    ints (numpy would make it float64, which rounds values above 2^53); a
+    timestamp as a naive datetime in the column's time zone, which prints
+    as ``2024-01-01 00:00:00``; a date as a date; any other column as
+    ``to_numpy`` gives it (a null-free primitive column without a copy, a
+    float null as NaN, strings, binary and decimals as objects)."""
+    t = a.type
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        flat = column_values(a.values)
+        offsets = a.offsets.to_numpy().tolist()
+        out = np.empty(len(a), object)
+        for i, (p, q) in enumerate(zip(offsets, offsets[1:])):
+            out[i] = flat[p:q]
+        if a.null_count:
+            out[a.is_null().to_numpy(zero_copy_only=False)] = None
+        return out
+    if pa.types.is_timestamp(t) and t.tz:
+        a = pc.local_timestamp(a)
+    if pa.types.is_temporal(t) or (pa.types.is_integer(t) and a.null_count):
+        out = np.empty(len(a), object)
+        out[:] = a.to_pylist()
+        return out
+    return a.to_numpy(zero_copy_only=False)
 
-    return GroupPandasUDFSerializer(timezone, safecheck, True, False)
+
+def _rows(names: list[str], cols: Iterable[np.ndarray]) -> list[dict]:
+    """The rows of ``column_values`` columns as dicts, each entry a Python
+    value (``tolist``), so an integer is a Python int."""
+    return [dict(zip(names, r)) for r in zip(*(c.tolist() for c in cols))]
+
+
+def _zoned_type(t: pa.DataType, tz: str | None) -> pa.DataType:
+    """``t`` with each timestamp type in it, also a list's, in the time
+    zone ``tz`` (naive for None)."""
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_zoned_type(t.value_type, tz)))
+    return pa.timestamp(t.unit, tz) if pa.types.is_timestamp(t) else t
+
+
+def _zoned(a: pa.Array, t: pa.DataType) -> pa.Array:
+    """``a``, built naive, as ``t``: each naive timestamp read as a
+    wall-clock time in ``t``'s time zone (the later one where a clock
+    change repeats it)."""
+    if a.type == t:
+        return a
+    if pa.types.is_timestamp(t):
+        return pc.assume_timezone(a, t.tz, ambiguous="latest")
+    return pa.ListArray.from_arrays(
+        a.offsets, _zoned(a.values, t.value_type), type=t, mask=a.is_null()
+    )
+
+
+def to_arrow(values: Sequence, t: pa.DataType, safecheck: bool) -> pa.Array:
+    """A column of output values in Arrow, as every Python pass writes it:
+    NaN and None as null, and a naive timestamp as ``column_values`` reads
+    one, in the column's time zone."""
+    naive = _zoned_type(t, None)
+    return _zoned(pa.array(values, naive, from_pandas=True, safe=safecheck), t)
 
 
 def notna(df: DataFrame, col: str) -> Column:
@@ -137,15 +195,6 @@ def _group_codes(keys: list[pa.Array], n: int) -> tuple[np.ndarray, np.ndarray]:
     return code, np.unique(code, return_index=True)[1]
 
 
-def _items(col: pa.Array, ser) -> pd.Series:
-    """A batch's item column as PySpark's pandas conversion gives it, except
-    that an integer column with a null holds exact Python ints: pandas
-    would make it float64, which rounds values above 2^53."""
-    if col.null_count and pa.types.is_integer(col.type):
-        return pd.Series(col.to_pylist(), dtype=object)
-    return ser.arrow_to_pandas(col, 0)
-
-
 def fold_partials(
     df: DataFrame,
     group_cols: list[str],
@@ -159,18 +208,17 @@ def fold_partials(
     """Fold each input partition's rows of ``df`` into one state per group
     and emit the partial rows.
 
-    ``prepare(*items)`` turns an Arrow batch's item columns (pandas Series,
-    see ``_items``) into numpy arrays with one entry per row, once per
-    batch, so per-row work such as hashing is paid per batch, not per
+    ``prepare(*items)`` turns an Arrow batch's item columns (numpy arrays,
+    see ``column_values``) into numpy arrays with one entry per row, once
+    per batch, so per-row work such as hashing is paid per batch, not per
     group. ``init()`` makes a group's state and ``update(state, *arrays)``
     folds the group's entries of those arrays into it, in row order.
     ``emit(state)`` gives the group's partial rows as dicts of the columns
     of ``schema`` that are not group columns. With no group columns, all
     rows form one group; a partition without rows emits nothing."""
-    timezone, safecheck, out_type = _worker_conf(df, schema)
+    safecheck, out_type = _worker_conf(df, schema)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ser = _serializer(timezone, safecheck)
         ids: dict[tuple, int] = {}
         states: list = []
         new_keys: list[list[pa.Array]] = []  # per batch, the keys of its new groups
@@ -192,7 +240,7 @@ def fold_partials(
                 gids.append(ids[key])
             if new:
                 new_keys.append([f.take(new) for f in firsts])
-            arrays = prepare(*(_items(batch.column(c), ser) for c in item_cols))
+            arrays = prepare(*(column_values(batch.column(c)) for c in item_cols))
             if any(len(a) != n for a in arrays):
                 raise ValueError("prepare must return one entry per row of the batch")
             # small codes sort by radix: 8x faster than int64 here
@@ -224,15 +272,13 @@ def _to_batch(
 ) -> pa.RecordBatch:
     """Output rows in Arrow: each group column is ``keys``' entry of the
     row's ``owner`` (the exact key, never through Python), every other
-    column is converted from the rows' values as a pandas column would be
-    (NaN as null)."""
+    column is written from the rows' values by ``to_arrow``."""
     cols = []
     for f in out_type:
         if f.name in group_cols:
             cols.append(keys[group_cols.index(f.name)].take(owner).cast(f.type))
         else:
-            vals = [r[f.name] for r in rows]
-            cols.append(pa.array(vals, f.type, from_pandas=True, safe=safecheck))
+            cols.append(to_arrow([r[f.name] for r in rows], f.type, safecheck))
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(list(out_type)))
 
 
@@ -254,25 +300,6 @@ def _key_changes(keys: list[pa.Array], n: int) -> np.ndarray:
     return ~same
 
 
-def _values(a: pa.Array) -> list:
-    """A column of partial rows as ``final`` reads it: a list column as
-    numpy slices over its Arrow offsets (None for a null list), as pandas
-    would hold each list; a floating column as floats with null as NaN, as
-    pandas would; any other column as Python values, so an integer column
-    with a null keeps exact ints."""
-    t = a.type
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        flat = a.values.to_numpy(zero_copy_only=False)
-        offsets = a.offsets.to_numpy().tolist()
-        out = [flat[p:q] for p, q in zip(offsets, offsets[1:])]
-        if a.null_count:
-            out = [v if ok else None for v, ok in zip(out, a.is_valid().to_pylist())]
-        return out
-    if pa.types.is_floating(t):
-        return pc.fill_null(a, pa.scalar(np.nan, t)).to_pylist()
-    return a.to_pylist()
-
-
 def merge_groups(
     partials: DataFrame,
     group_cols: list[str],
@@ -283,10 +310,10 @@ def merge_groups(
     group columns, to all rows at once (and not at all on empty input).
 
     ``final(rows)`` gets the group's rows in order, each a dict of every
-    column of ``partials`` (read as ``_values`` reads them), and returns
+    column of ``partials`` (read by ``column_values``), and returns
     the group's output rows as dicts of the columns of ``schema`` that are
     not group columns; those are set from the group's exact key."""
-    _, safecheck, out_type = _worker_conf(partials, schema)
+    safecheck, out_type = _worker_conf(partials, schema)
 
     def finished(done: list[tuple[pa.RecordBatch, list[dict]]]) -> Iterator[pa.RecordBatch]:
         """The output rows of finished groups, each given with the group's
@@ -312,8 +339,7 @@ def merge_groups(
                 starts = np.flatnonzero(_key_changes(keys, n + 1)).tolist()
             else:
                 starts = np.flatnonzero(np.concatenate([[True], _key_changes(keys, n)])).tolist()
-            names = batch.schema.names
-            rows = [dict(zip(names, r)) for r in zip(*map(_values, batch.columns))]
+            rows = _rows(batch.schema.names, map(column_values, batch.columns))
             tail = batch.slice(n - 1)
             open_rows += rows[: starts[0] if starts else n]
             if not starts:
@@ -361,15 +387,6 @@ def sketch_agg(
     return merge_groups(partials, group_cols, final, schema)
 
 
-def _answers(values: Sequence, name: str) -> pd.Series:
-    """A batch-level function's output column in pandas: a numpy array
-    keeps its dtype; any other sequence is held as objects, so Python
-    ints stay exact (a list of ints beside a None would become float64)."""
-    if isinstance(values, np.ndarray):
-        return pd.Series(values, name=name)
-    return pd.Series(values, dtype=object, name=name)
-
-
 def map_rows(
     df: DataFrame,
     in_cols: list[str],
@@ -380,10 +397,9 @@ def map_rows(
     """``df`` without the columns ``drop`` and with the columns ``out``,
     each added, or replacing a column of its name in place as
     ``withColumn`` does. For each Arrow batch, ``fn`` gets the batch's
-    ``in_cols`` as pandas Series (see ``_items``) and returns one sequence
-    per field of ``out``, with one value per row; they are converted to
-    Arrow by PySpark's own pandas serializer, as a pandas map would
-    convert them. Every other column passes through in Arrow."""
+    ``in_cols`` as numpy arrays (see ``column_values``) and returns one
+    sequence per field of ``out``, with one value per row, written by
+    ``to_arrow``. Every other column passes through in Arrow."""
     drop = set(drop)
     kept = [f for f in df.schema.fields if f.name not in drop]
     made = {f.name: f for f in out}
@@ -391,18 +407,15 @@ def map_rows(
     schema = StructType(
         [made.get(f.name, f) for f in kept] + [f for f in out if f.name not in names]
     )
-    timezone, safecheck, out_type = _worker_conf(df, schema)
+    safecheck, out_type = _worker_conf(df, schema)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ser = _serializer(timezone, safecheck)
         for batch in batches:
             if not batch.num_rows:
                 continue
-            answers = fn(*(_items(batch.column(c), ser) for c in in_cols))
+            answers = fn(*(column_values(batch.column(c)) for c in in_cols))
             new = {
-                f.name: ser._create_array(
-                    _answers(a, f.name), out_type[f.name].type, f.dataType, arrow_cast=True
-                )
+                f.name: to_arrow(a, out_type[f.name].type, safecheck)
                 for f, a in zip(out, answers)
             }
             cols = [new[f.name] if f.name in new else batch.column(f.name) for f in out_type]
@@ -442,15 +455,15 @@ def pair_rows(
     fields = [StructField("key", StringType(), True)] + StructType.fromDDL(out).fields
     nk, nv = len(key_cols), len(value_cols)
 
-    def run(*cols: pd.Series) -> list[list]:
+    def run(*cols: np.ndarray) -> list[list]:
         # one Python step per sketch PAIR (each carrying O(k) numpy
         # work), never per data row
         if key_cols:
-            keys = ["|".join(map(str, vals)) for vals in zip(*(c.to_numpy() for c in cols[:nk]))]
+            keys = ["|".join(map(str, vals)) for vals in zip(*cols[:nk])]
         else:
             keys = [""] * len(cols[0])
-        a = zip(*(c.to_numpy() for c in cols[nk:nk + nv]))
-        b = zip(*(c.to_numpy() for c in cols[nk + nv:]))
+        a = zip(*cols[nk:nk + nv])
+        b = zip(*cols[nk + nv:])
         rows = [pair(x, y) for x, y in zip(a, b)]
         return [keys] + [[r[f.name] for r in rows] for f in fields[1:]]
 
@@ -467,9 +480,8 @@ def read_sketches(
     as ``withColumn`` does: in each row, ``answer(state)``, where
     ``state`` maps the row's ``state_cols`` to their values."""
 
-    def read(*states: pd.Series) -> list[list]:
-        rows = pd.concat([s.rename(c) for c, s in zip(state_cols, states)], axis=1)
-        return [[answer(row) for row in rows.to_dict("records")]]
+    def read(*states: np.ndarray) -> list[list]:
+        return [[answer(row) for row in _rows(state_cols, states)]]
 
     return map_rows(sketch_df, state_cols, read, [out])
 

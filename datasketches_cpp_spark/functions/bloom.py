@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BooleanType, StructField
+from pyspark.sql.types import BinaryType, BooleanType, LongType, StructField
 
 from ..hashing import DEFAULT_SEED, hash63_int64, hash63_str_many
 
@@ -46,12 +46,12 @@ def suggest_num_hashes_from(n: int, m: int) -> int:
     return max(1, int(round(m / max(n, 1) * math.log(2))))
 
 
-def _base_hashes(items: pd.Series, dtype: str, seed: int) -> tuple[np.ndarray, np.ndarray]:
+def _base_hashes(items: np.ndarray, dtype: str, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """(h0, h1) uint64 pairs for double hashing (h1 forced odd so the
     probe sequence walks the whole table)."""
     if dtype in _INT_TYPES:
-        h0 = hash63_int64(items.to_numpy(dtype=np.int64), seed)
-        h1 = hash63_int64(items.to_numpy(dtype=np.int64), seed ^ 0x5BD1E995)
+        h0 = hash63_int64(np.asarray(items, np.int64), seed)
+        h1 = hash63_int64(np.asarray(items, np.int64), seed ^ 0x5BD1E995)
     else:
         svals = [str(v) for v in items]
         h0 = hash63_str_many(svals, seed)
@@ -60,7 +60,7 @@ def _base_hashes(items: pd.Series, dtype: str, seed: int) -> tuple[np.ndarray, n
 
 
 def _bit_positions(
-    items: pd.Series, dtype: str, num_bits: int, num_hashes: int, seed: int
+    items: np.ndarray, dtype: str, num_bits: int, num_hashes: int, seed: int
 ) -> np.ndarray:
     h0, h1 = _base_hashes(items, dtype, seed)
     i = np.arange(num_hashes, dtype=np.uint64)[None, :]
@@ -112,13 +112,13 @@ def bloom_filter_agg(
 
 
 def _contains(
-    items: pd.Series, dtype: str, bits: bytes, num_bits: int, num_hashes: int, seed: int
+    items: np.ndarray, dtype: str, bits: bytes, num_bits: int, num_hashes: int, seed: int
 ) -> np.ndarray:
     """Whether each item's bits are all set in the filter ``bits``. A
     null item answers False: the filter was never updated with a null
     (updates drop notna rows), so membership is definitively False."""
     arr = np.frombuffer(bits, dtype=np.uint8)
-    valid = items.notna().to_numpy()
+    valid = pd.notna(items)
     ans = np.zeros(len(items), bool)
     if valid.any():
         pos = _bit_positions(items[valid], dtype, num_bits, num_hashes, seed)  # (n, k)
@@ -141,8 +141,7 @@ def might_contain(
 
     def probe(items, bits, num_bits, num_hashes, seed):
         return [_contains(
-            items, item_dtype, bits.iloc[0],
-            int(num_bits.iloc[0]), int(num_hashes.iloc[0]), int(seed.iloc[0]),
+            items, item_dtype, bits[0], int(num_bits[0]), int(num_hashes[0]), int(seed[0])
         )]
 
     return map_rows(
@@ -206,14 +205,14 @@ def bloom_invert(filter_df: DataFrame) -> DataFrame:
     collisions keep all their bits set. ``n_items`` becomes -1 (unknown),
     as the complement's cardinality is not tracked."""
 
-    def flip(rows: list[dict]) -> list[dict]:
-        return [
-            dict(r, bits=np.bitwise_not(np.frombuffer(r["bits"], dtype=np.uint8)).tobytes(),
-                 n_items=-1)
-            for r in rows
-        ]
+    def flip(bits: np.ndarray) -> list[list]:
+        flipped = [np.bitwise_not(np.frombuffer(b, dtype=np.uint8)).tobytes() for b in bits]
+        return [flipped, [-1] * len(bits)]
 
-    return merge_groups(filter_df, [], flip, _FILTER_SCHEMA)
+    return map_rows(
+        filter_df, ["bits"], flip,
+        [StructField("bits", BinaryType(), True), StructField("n_items", LongType(), True)],
+    )
 
 
 def bloom_prefilter_join(

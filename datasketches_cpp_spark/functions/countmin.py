@@ -51,7 +51,7 @@ def relative_error(num_buckets: int) -> float:
 
 
 def _row_hashes(
-    items: pd.Series, dtype: str, num_hashes: int, num_buckets: int, seed: int
+    items: np.ndarray, dtype: str, num_hashes: int, num_buckets: int, seed: int
 ) -> np.ndarray:
     """(n, d) bucket indices; row i uses seed+i like the reference's
     per-row seeded hash family."""
@@ -59,7 +59,7 @@ def _row_hashes(
     for i in range(num_hashes):
         row_seed = (seed + i * 0x9E3779B9) & 0xFFFFFFFFFFFFFFFF
         if dtype in _INT_TYPES:
-            h = hash63_int64(items.to_numpy(dtype=np.int64), row_seed)
+            h = hash63_int64(np.asarray(items, np.int64), row_seed)
         else:
             h = hash63_str_many([str(v) for v in items], row_seed)
         out[:, i] = (h % np.uint64(num_buckets)).astype(np.int64)
@@ -91,13 +91,9 @@ def count_min_agg(
     )
     cols = [item_col] + ([weight_col] if weight_col else [])
 
-    def cells_and_weights(items: pd.Series, *weights: pd.Series) -> tuple[np.ndarray, ...]:
+    def cells_and_weights(items: np.ndarray, *weights: np.ndarray) -> tuple[np.ndarray, ...]:
         bucket = _row_hashes(items, item_dtype, num_hashes, num_buckets, seed)  # (n, d)
-        w = (
-            weights[0].to_numpy().astype(np.int64)
-            if weights
-            else np.ones(len(items), dtype=np.int64)
-        )
+        w = weights[0].astype(np.int64) if weights else np.ones(len(items), dtype=np.int64)
         return bucket + np.arange(num_hashes) * num_buckets, w  # flat (n, d), (n,)
 
     def update(st: list, flat: np.ndarray, w: np.ndarray) -> None:
@@ -152,25 +148,23 @@ def estimate_frequencies(
     )
 
     def probe(items, matrices, totals, num_hashes, num_buckets, seeds):
-        d = int(num_hashes.iloc[0])
-        w = int(num_buckets.iloc[0])
-        seed = int(seeds.iloc[0])
         ests = np.zeros(len(items), dtype=np.int64)
         eps_tot = np.zeros(len(items), dtype=np.int64)
-        valid = items.notna().to_numpy()
-        # group probes by identical sketch CONTENT (bytes), not id():
-        # after Arrow conversion every row's buffer is a distinct
+        valid = pd.notna(items)
+        # group probes by sketch: its settings and its CONTENT (bytes), not
+        # id(): after Arrow conversion every row's buffer is a distinct
         # object, so id() made every group a single row and the
         # vectorized hash/gather degenerated to a per-row loop
-        for idx in matrices.groupby(matrices.map(bytes), sort=False).indices.values():
-            idx = idx[valid[idx]]
-            if not len(idx):
-                continue
-            mat = np.asarray(matrices.iloc[idx[0]], np.int64).reshape(d, w)
-            buckets = _row_hashes(items.iloc[idx], item_dtype, d, w, seed)
-            vals = mat[np.arange(d)[None, :], buckets]  # (n, d)
-            ests[idx] = vals.min(axis=1)
-            eps_tot[idx] = int(math.ceil(relative_error(w) * int(totals.iloc[idx[0]])))
+        groups: dict[tuple, list[int]] = {}
+        sketches = list(zip(num_hashes.tolist(), num_buckets.tolist(), seeds.tolist(),
+                            map(bytes, matrices)))
+        for i in np.flatnonzero(valid):
+            groups.setdefault(sketches[i], []).append(i)
+        for (d, w, seed, mat), idx in groups.items():
+            buckets = _row_hashes(items[idx], item_dtype, d, w, seed)
+            vals = np.frombuffer(mat, np.int64).reshape(d, w)[np.arange(d)[None, :], buckets]
+            ests[idx] = vals.min(axis=1)  # (n, d) → (n,)
+            eps_tot[idx] = int(math.ceil(relative_error(w) * int(totals[idx[0]])))
         return [ests, ests, np.maximum(ests - eps_tot, 0)]
 
     out = [

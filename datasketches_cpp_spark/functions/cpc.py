@@ -41,7 +41,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField
 
@@ -386,15 +385,13 @@ def with_estimate(
     handful of result rows is the right altitude — the data-sized work
     already happened in the two-stage agg."""
 
-    def est(lg_ks: pd.Series, coupons: pd.Series) -> list[np.ndarray]:
+    def est(lg_ks: np.ndarray, coupons: np.ndarray) -> list[np.ndarray]:
         n = len(lg_ks)
         e = np.empty(n, np.float64)
         lo = np.empty(n, np.float64)
         hi = np.empty(n, np.float64)
-        for i in range(n):
-            mat = np.asarray(coupons.iloc[i], dtype=np.int64).view(np.uint64)
-            c = _coupon_count(mat)
-            lg = int(lg_ks.iloc[i])
+        for i, (lg, mat) in enumerate(zip(lg_ks.tolist(), coupons)):
+            c = _coupon_count(np.asarray(mat, dtype=np.int64).view(np.uint64))
             e[i] = icon_estimate(c, lg)
             lo[i], hi[i] = icon_bounds(c, lg, num_std_devs)
         return [e, lo, hi]

@@ -29,7 +29,6 @@ merge discipline).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -186,7 +185,7 @@ def density_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     schema = StructType(list(group_fields) + _sketch_fields())
 
-    def rows(vecs: pd.Series) -> tuple[np.ndarray]:
+    def rows(vecs: np.ndarray) -> tuple[np.ndarray]:
         flat = np.array([np.asarray(v, np.float64) for v in vecs], np.float64)
         return (flat.reshape(len(vecs), dim),)
 

@@ -151,11 +151,7 @@ def frequent_items_agg(
 
     partials = fold_partials(
         df.where(notna(df, item_col)), group_cols, cols,
-        # datetimes as Timestamps, as a pandas index holds them
-        lambda s, *w: (
-            s.to_numpy(object if s.dtype.kind in "mM" else None),
-            *(x.to_numpy().astype(np.int64) for x in w),
-        ),
+        lambda s, *w: (s, *(x.astype(np.int64) for x in w)),
         lambda: MGState(max_map_size), update, emit, partial_schema,
     )
 

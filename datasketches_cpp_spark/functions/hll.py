@@ -36,7 +36,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -543,7 +542,7 @@ def hll_sketch_agg(
     est/(1±n·rse) bounds.
     Empty input partitions yield nothing (round-1 Arrow-crash discipline,
     tests/test_empty_partitions.py)."""
-    from .theta import _hash_series, _hashable_rows  # shared item-hash discipline
+    from .theta import _hash_values, _hashable_rows  # shared item-hash discipline
 
     k = 1 << lg_k
     mask_k = np.uint64(k - 1)
@@ -551,8 +550,8 @@ def hll_sketch_agg(
     group_fields = [f for f in df.schema.fields if f.name in group_cols]
     part_schema = _hll_schema(group_fields)
 
-    def slots_and_rhos(items: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        hashes, _ = _hash_series(items, item_dtype, seed)
+    def slots_and_rhos(items: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        hashes = _hash_values(items, item_dtype, seed)
         return (hashes.astype(np.uint64) & mask_k).astype(np.int64), _rho(hashes, lg_k)
 
     partials = fold_partials(

@@ -230,7 +230,7 @@ def kll_string_agg(
     )
 
     return sketch_agg(
-        df, group_cols, [item_col], lambda s: (s.to_numpy(),), lambda: KllItemSketch(k, seed),
+        df, group_cols, [item_col], lambda s: (s,), lambda: KllItemSketch(k, seed),
         lambda row: KllItemSketch.from_row(k, seed, row), schema,
     )
 

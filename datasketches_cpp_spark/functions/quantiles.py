@@ -35,10 +35,10 @@ KLL shares with KLL over strings, REQ and classic quantiles.
 from __future__ import annotations
 
 import math
+from datetime import datetime
 from typing import Iterable, NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -350,10 +350,14 @@ def ks_test(a, b, p_value: float) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _float_items(v: pd.Series) -> tuple[np.ndarray]:
+def _float_items(v: np.ndarray) -> tuple[np.ndarray]:
     """A batch's items as float64, null as NaN (which ``update_batch``
-    drops): the ``prepare`` of every float quantile family."""
-    return (v.to_numpy(dtype=np.float64, na_value=np.nan),)
+    drops), a timestamp as its local time in nanoseconds since the epoch:
+    the ``prepare`` of every float quantile family."""
+    if v.dtype == object and isinstance(next((x for x in v if x is not None), None), datetime):
+        ns = v.astype("datetime64[ns]")
+        v = np.where(np.isnat(ns), np.nan, ns.view(np.int64))
+    return (v.astype(np.float64),)
 
 
 def _sketch_fields() -> list[StructField]:

@@ -157,14 +157,10 @@ def var_opt_agg(
     )
     cols = [item_col] + ([weight_col] if weight_col else [])
 
-    def per_row(items: pd.Series, *weights: pd.Series) -> tuple[np.ndarray, ...]:
-        w = (
-            weights[0].to_numpy(dtype=np.float64)
-            if weights
-            else np.ones(len(items), dtype=np.float64)
-        )
+    def per_row(items: np.ndarray, *weights: np.ndarray) -> tuple[np.ndarray, ...]:
+        w = weights[0].astype(np.float64) if weights else np.ones(len(items), dtype=np.float64)
         # each row's hash, with its row number in the batch as the index
-        return items.to_numpy(), w, pd.util.hash_pandas_object(items).to_numpy()
+        return items, w, pd.util.hash_pandas_object(pd.Series(items)).to_numpy()
 
     # incremental fold: per-group state stays O(k) — a running ≤k var-opt
     # sample resampled against each Arrow batch (sample ∪ batch), never the

@@ -50,8 +50,10 @@ def _hash_values(vals, dtype: str, seed: int) -> np.ndarray:
 
 
 def _hash_series(s: pd.Series, dtype: str, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """``_hash_values`` of one pandas column's items, and the mask of the
-    rows hashed: nulls and empty strings and binary are no-ops (skipped)."""
+    """``_hash_values`` of one pandas column of raw items (a streaming
+    group's rows), and the mask of the rows hashed: nulls and empty strings
+    and binary are no-ops (skipped). The two-stage folds hash with
+    ``_hash_values`` alone: ``_hashable_rows`` drops those rows in Spark."""
     mask = s.notna().to_numpy()
     if dtype == "binary":
         mask &= s.map(lambda b: b is not None and len(b) > 0).to_numpy()
@@ -61,8 +63,8 @@ def _hash_series(s: pd.Series, dtype: str, seed: int) -> tuple[np.ndarray, np.nd
 
 
 def _hashable_rows(df: DataFrame, item_col: str) -> DataFrame:
-    """The rows whose item ``_hash_series`` hashes: not null, not NaN and,
-    for strings and binary, not empty."""
+    """The rows whose item is hashed: not null, not NaN and, for strings
+    and binary, not empty."""
     keep = notna(df, item_col)
     if dict(df.dtypes)[item_col] in ("string", "binary"):
         keep &= F.length(item_col) > 0
@@ -159,7 +161,7 @@ def theta_sketch_agg(
     # state: [theta, sorted sig, pending hash batches, their length]
     partials = fold_partials(
         _hashable_rows(df, item_col), group_cols, [item_col],
-        lambda s: (_hash_series(s, item_dtype, seed)[0],),
+        lambda s: (_hash_values(s, item_dtype, seed),),
         lambda: [theta0, np.empty(0, np.uint64), [], 0], update, emit, out_schema,
     )
     return _final_merge(partials, group_cols, k, out_schema)

@@ -34,7 +34,7 @@ _POLICIES = {"sum": "sum", "max": "max", "min": "min", "one": "first"}
 
 
 def _hash_items(items, dtype: str, seed: int) -> np.ndarray:
-    """Hash a column of items (a pandas Series or a list): ints as int64,
+    """Hash a column of items (an array or a list): ints as int64,
     anything else as its text."""
     if dtype in _INT_TYPES:
         return hash63_int64(np.asarray(items, np.int64), seed)
@@ -119,7 +119,7 @@ def tuple_sketch_agg(
     partials = fold_partials(
         df.where(notna(df, key_col)), group_cols, [key_col, value_col],
         lambda keys, values: (
-            _hash_items(keys, key_dtype, seed), values.to_numpy(dtype=np.float64)
+            _hash_items(keys, key_dtype, seed), values.astype(np.float64)
         ),
         lambda: [MAX_THETA, None, None], update, emit, schema,
     )
@@ -347,7 +347,7 @@ def array_tuple_sketch_agg(
     prefix = f"{group_fields}, " if group_fields else ""
     schema = f"{prefix}theta long, sig array<long>, summaries array<double>"
 
-    def per_row(keys: pd.Series, values: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    def per_row(keys: np.ndarray, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         vals = np.stack([np.asarray(v, np.float64) for v in values]).reshape(len(values), d)
         return _hash_items(keys, key_dtype, seed), vals
 
@@ -508,10 +508,8 @@ def aos_sketch_agg(
         f"{prefix}theta long, sig array<long>, summaries array<array<string>>"
     )
 
-    def _hashes(series: pd.Series) -> np.ndarray:
-        k64 = np.array(
-            [aos_hash_key(key) for key in series], np.uint64
-        ).view(np.int64)
+    def _hashes(keys: np.ndarray) -> np.ndarray:
+        k64 = np.array([aos_hash_key(key) for key in keys], np.uint64).view(np.int64)
         return hash63_int64(k64, seed)
 
     def update(st: list, hashes: np.ndarray, values: np.ndarray) -> None:
@@ -533,7 +531,7 @@ def aos_sketch_agg(
 
     partials = fold_partials(
         df.where(notna(df, key_col)), group_cols, [key_col, value_col],
-        lambda keys, values: (_hashes(keys), values.to_numpy()),
+        lambda keys, values: (_hashes(keys), values),
         lambda: [MAX_THETA, None, None], update, emit, schema,
     )
 

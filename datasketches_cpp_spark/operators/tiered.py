@@ -101,9 +101,9 @@ def _bloom_rep_filter(images: DataFrame, rep_ids: DataFrame,
     a scalar Arrow UDF inside .filter() — only the id column crosses
     the Arrow boundary; the corpus' bytes/caption payloads never leave
     the JVM."""
-    import pandas as pd
     from pyspark.sql.functions import arrow_udf
 
+    from ..functions._twostage import column_values
     from ..functions.bloom import (
         _contains,
         bloom_filter_agg,
@@ -123,8 +123,9 @@ def _bloom_rep_filter(images: DataFrame, rep_ids: DataFrame,
     id_dtype = dict(images.dtypes)[id_col]
 
     def _probe(ids: pa.Array) -> pa.Array:
-        # the exact Python ids: a long id beside a null must not round
-        items = pd.Series(ids.to_pylist(), dtype=object)
+        # read as every sketch pass reads a column: a long id beside a null
+        # stays an exact int
+        items = column_values(ids)
         return pa.array(_contains(items, id_dtype, bits_bc.value, m_, k_, seed))
 
     probe = arrow_udf(_probe, "boolean")

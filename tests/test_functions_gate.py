@@ -1,16 +1,19 @@
 """A structural gate on ``datasketches_cpp_spark/functions/``: no module
-goes back to a pandas UDF. Every per-row pass over a sketch table runs
-through ``_twostage.map_rows`` and every two-stage aggregate through
-``_twostage.fold_partials`` and ``_twostage.merge_groups``, whose finals
-take and return Arrow rows. PySpark's pandas serializer is reached only
-through ``_twostage._serializer``, which only ``fold_partials`` (to read
-item columns by the ``_items`` rule) and ``map_rows`` call."""
+goes back to a pandas UDF or to PySpark's pandas serializer. Every per-row
+pass over a sketch table runs through ``_twostage.map_rows`` and every
+two-stage aggregate through ``_twostage.fold_partials`` and
+``_twostage.merge_groups``, which read Arrow columns with
+``_twostage.column_values`` and write them with ``_twostage.to_arrow``;
+``_twostage`` itself does not import pandas."""
 
 import ast
 import pathlib
 
 FUNCTIONS = pathlib.Path(__file__).resolve().parent.parent / "datasketches_cpp_spark" / "functions"
-BANNED = {"applyInPandas", "mapInPandas", "pandas_udf", "GroupPandasUDFSerializer"}
+BANNED = {
+    "applyInPandas", "mapInPandas", "pandas_udf",
+    "GroupPandasUDFSerializer", "arrow_to_pandas", "_create_array",
+}
 
 
 def _names(node):
@@ -31,25 +34,18 @@ def _modules():
 
 
 def test_no_pandas_udf_in_functions():
-    uses = {}
-    for stem, tree in _modules().items():
-        for fn in [tree] + [n for n in tree.body if isinstance(n, ast.FunctionDef)]:
-            if fn is tree:  # module level, outside any top-level function
-                body = [n for n in tree.body if not isinstance(n, ast.FunctionDef)]
-                names = {x for n in body for x in _names(n)}
-                where = stem
-            else:
-                names = set(_names(fn))
-                where = f"{stem}.{fn.name}"
-            for name in names & BANNED:
-                uses.setdefault(name, []).append(where)
-    assert uses == {"GroupPandasUDFSerializer": ["_twostage._serializer"]}
+    uses = {
+        stem: sorted(set(_names(tree)) & BANNED) for stem, tree in _modules().items()
+    }
+    assert {stem: names for stem, names in uses.items() if names} == {}
 
 
-def test_pandas_serializer_only_reads_items_and_maps_rows():
-    callers = []
-    for stem, tree in _modules().items():
-        for fn in (n for n in tree.body if isinstance(n, ast.FunctionDef)):
-            if "_serializer" in _names(fn) and fn.name != "_serializer":
-                callers.append(f"{stem}.{fn.name}")
-    assert sorted(callers) == ["_twostage.fold_partials", "_twostage.map_rows"]
+def test_twostage_imports_no_pandas():
+    tree = _modules()["_twostage"]
+    imported = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            imported |= {a.name.split(".")[0] for a in n.names}
+        elif isinstance(n, ast.ImportFrom):
+            imported.add((n.module or "").split(".")[0])
+    assert "pandas" not in imported and "pyarrow" in imported

@@ -115,12 +115,16 @@ PINS_SMALL_BATCHES = {
 # sha256 prefixes of the sorted partial rows over each item type a family
 # accepts, grouped by "g" (bloom: keyless). Frequent items is left out over
 # timestamps and dates: its final fails on both.
+# The four float quantile families over timestamps are pinned as the first
+# pins were taken but without the rows whose timestamp is null: pandas read
+# a null timestamp as -2^63 ns, which these families then held as an item;
+# now they drop it as they drop every other null item.
 TYPE_PINS = {
     ("bloom", "ts"): "998c98ca3fc48c85",
     ("bloom", "dec"): "9349e4db45a1c7eb",
     ("bloom", "bo"): "813f7fa7dd51a697",
     ("bloom", "bin"): "d5de66ab8b6d5e4f",
-    ("classic", "ts"): "8673462b4db508f3",
+    ("classic", "ts"): "87d7a62ac3bb403f",  # a null timestamp dropped, see above
     ("classic", "dec"): "c90046818cb3be55",
     ("classic", "bo"): "40834cd85d40e43e",
     ("countmin", "ts"): "77f78794b8875950",
@@ -138,17 +142,17 @@ TYPE_PINS = {
     ("hll", "dec"): "2be673f59a8f9a26",
     ("hll", "bo"): "b0efe65dec02a654",
     ("hll", "bin"): "33fae75149667bdd",
-    ("kll", "ts"): "46fa288a186b1b05",
+    ("kll", "ts"): "81903fac51ae674f",  # a null timestamp dropped, see above
     ("kll", "dec"): "116c19badb69f56a",
     ("kll", "bo"): "b0c2e9e07dfad790",
-    ("req", "ts"): "0450012292830c13",
+    ("req", "ts"): "3a24e86514b665f6",  # a null timestamp dropped, see above
     ("req", "dec"): "37c2728b267570f8",
     ("req", "bo"): "a9ebcce612958e49",
     ("sampling", "dt"): "e17bf3a9bbe903c4",
     ("sampling", "dec"): "b9a87b50e9147267",
     ("sampling", "bo"): "df60e09f310ee295",
     ("sampling", "bin"): "82ad104d513bfa20",
-    ("tdigest", "ts"): "491c3da23f5348d6",
+    ("tdigest", "ts"): "23257abc2ca4c303",  # a null timestamp dropped, see above
     ("tdigest", "dec"): "710be501776c55b3",
     ("tdigest", "bo"): "69b01fa8cc30afef",
     ("theta", "ts"): "6b5ebab2aa156302",

@@ -1146,6 +1146,30 @@ def test_count_min_never_below_true_count_beside_a_null_probe(spark):
     assert got[BIG + 1] >= 5 and got[BIG + 3] >= 3 and got[None] == 0
 
 
+@pytest.mark.parametrize(
+    "settings", [((3, 64, 9001), (5, 128, 9001)), ((3, 64, 9001), (3, 64, 7))],
+    ids=["shapes", "seeds"],
+)
+def test_count_min_probe_reads_each_sketch_settings(spark, settings):
+    """Probes of two keyed sketches of different shapes or seeds, in one
+    Arrow batch, each answer from their own sketch's settings: an item
+    that occurs 20 times under each key estimates at least 20."""
+    items = [("hot",)] * 20 + [(f"c{i}",) for i in range(30)]
+    tables = [
+        count_min_agg(
+            spark.createDataFrame(items, "item string").withColumn("key", F.lit(key)),
+            ["key"], "item", num_hashes=d, num_buckets=w, seed=seed,
+        )
+        for key, (d, w, seed) in zip("xy", settings)
+    ]
+    probes = spark.createDataFrame([("x", "hot"), ("y", "hot")], "key string, item string")
+    got = estimate_frequencies(
+        tables[0].unionByName(tables[1]), probes.repartition(1), "item", ["key"]
+    ).collect()
+    assert sorted(r["key"] for r in got) == ["x", "y"]
+    assert all(r["estimate"] >= 20 and r["upper_bound"] >= 20 for r in got)
+
+
 @pytest.mark.parametrize("family", ["kll", "req", "classic", "tdigest"])
 def test_nan_item_ranks_last(family):
     """A NaN item ranks 1.0 in every float quantile family: it sorts above
@@ -1164,6 +1188,50 @@ def test_nan_item_ranks_last(family):
     }[family]()
     sk.update_batch(np.arange(100, dtype=np.float64))
     assert sk.get_rank(math.nan) == 1.0
+
+
+@pytest.mark.parametrize("family", ["kll", "classic"])
+def test_float_quantiles_drop_a_null_timestamp(spark, family):
+    """A timestamp item is read as its local time in nanoseconds; a null
+    one is dropped as every null item is, not read as -2^63 ns."""
+    from datasketches_cpp_spark.functions.classic_quantiles import classic_quantiles_agg
+
+    agg = {
+        "kll": lambda df: kll_sketch_agg(df, [], "ts", k=16),
+        "classic": lambda df: classic_quantiles_agg(df, [], "ts", k=8),
+    }[family]
+    df = spark.createDataFrame([(1,), (None,), (3,)], "s long").selectExpr(
+        "timestamp_seconds(s) AS ts"
+    )
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "UTC")
+    try:
+        row = agg(df).collect()[0]
+    finally:
+        spark.conf.set(key, old)
+    prefix = "kll" if family == "kll" else "cq"
+    assert (row[f"{prefix}_n"], row[f"{prefix}_min"], row[f"{prefix}_max"]) == (2, 1e9, 3e9)
+
+
+def test_frequent_items_return_timestamp_items(spark):
+    """Timestamp items come back as the instants that went in, in a session
+    whose time zone is not UTC: the passes read and write a timestamp as
+    its wall-clock time in the session's zone, also inside the partial
+    rows' item arrays."""
+    df = spark.createDataFrame(
+        [(1704067200,), (1704067200,), (1704070800,), (None,)], "s long"
+    ).selectExpr("'g' AS g", "timestamp_seconds(s) AS ts", "s")
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        got = frequent_items_agg(df, ["g"], "ts", max_map_size=8).selectExpr(
+            "unix_timestamp(item) AS s", "estimate"
+        )
+        assert sorted(map(tuple, got.collect())) == [(1704067200, 2), (1704070800, 1)]
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_density_agg_skips_null_vectors(spark):
