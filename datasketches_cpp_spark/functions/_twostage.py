@@ -116,11 +116,11 @@ def _rows(names: list[str], cols: Iterable[np.ndarray]) -> list[dict]:
 
 
 def _zoned_type(t: pa.DataType, tz: str | None) -> pa.DataType:
-    """``t`` with each timestamp type in it, also a list's, in the time
-    zone ``tz`` (naive for None)."""
+    """``t`` with each zoned timestamp type in it, also a list's, in the
+    time zone ``tz`` (naive for None); a naive one stays naive."""
     if pa.types.is_list(t):
         return pa.list_(t.value_field.with_type(_zoned_type(t.value_type, tz)))
-    return pa.timestamp(t.unit, tz) if pa.types.is_timestamp(t) else t
+    return pa.timestamp(t.unit, tz) if pa.types.is_timestamp(t) and t.tz else t
 
 
 def _zoned(a: pa.Array, t: pa.DataType) -> pa.Array:
@@ -140,8 +140,7 @@ def to_arrow(values: Sequence, t: pa.DataType, safecheck: bool) -> pa.Array:
     """A column of output values in Arrow, as every Python pass writes it:
     NaN and None as null, and a naive timestamp as ``column_values`` reads
     one, in the column's time zone."""
-    naive = _zoned_type(t, None)
-    return _zoned(pa.array(values, naive, from_pandas=True, safe=safecheck), t)
+    return _zoned(pa.array(values, _zoned_type(t, None), from_pandas=True, safe=safecheck), t)
 
 
 def notna(df: DataFrame, col: str) -> Column:

@@ -422,3 +422,23 @@ def test_set_ops_join_a_null_key_to_a_null_key(spark, family):
         assert (r["est_a"], r["est_b"], r["est_intersection"]) == (50.0, 50.0, 50.0)
     if family == "theta":
         assert got["None"]["jaccard"] == 1.0
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_timestamp_keys_come_back_as_they_went_in(spark, ts_type):
+    """A timestamp key, with or without a time zone, comes back unchanged
+    through both stages and a row map, in a session whose time zone is
+    not UTC."""
+    df = spark.createDataFrame(
+        [(1704067200, 1.0), (1704070800, 2.0)], "s long, v double"
+    ).selectExpr(f"CAST(timestamp_seconds(s) AS {ts_type}) AS g", "v")
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        want = sorted(map(tuple, df.selectExpr("CAST(g AS string)", "v").collect()))
+        out = quantiles.with_quantiles(quantiles.kll_sketch_agg(df, ["g"], "v", k=16), [0.5])
+        got = sorted(map(tuple, out.selectExpr("CAST(g AS string)", "quantiles[0]").collect()))
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
